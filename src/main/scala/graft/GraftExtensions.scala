@@ -39,22 +39,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // strategy per session for users without the extension)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
 
-    // plan-time projection-width admission hints for graft:// scans
-    // (an OBSERVER rule — rationale in graft.cache.AdmissionHints; inert
-    // unless graft.cache.min.projected.columns > 0). Injection point:
-    // the pre-columnar-transition hook, because it is the one physical
-    // hook Spark applies on EVERY execution path — post-planner strategy
-    // rules only run inside AdaptiveSparkPlanExec, and a scan-only query
-    // with no exchange is never AQE-wrapped (measured here: the hint
-    // registry stayed empty for exactly the stock narrow scans the rule
-    // exists for).
-    ext.injectColumnar(session => new org.apache.spark.sql.execution.ColumnarRule {
-      override def preColumnarTransitions
-          : org.apache.spark.sql.catalyst.rules.Rule[
-            org.apache.spark.sql.execution.SparkPlan] =
-        graft.plans.AdmissionHintRule(session)
-    })
-
     def reg(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", name, usage), builder))

@@ -65,11 +65,6 @@ object CacheConfig {
   val SkipPatternKey = "graft.cache.skip.pattern"
   val AllowPatternKey = "graft.cache.allow.pattern"
   val MinColumnsKey = "graft.cache.min.projected.columns"
-  /** Opt-in consumption of plan-time width hints at open() time
-    * (graft.cache.AdmissionHints; default false — the registry is
-    * path-keyed/latest-wins, so mixed narrow+wide workloads on one
-    * table should stay on the per-scan conf channel). */
-  val AdmissionHintsKey = "graft.cache.admission.hints"
   val EnabledKey = "graft.cache.enabled"
 
   def from(conf: Configuration): CacheConfig = CacheConfig(

@@ -12,7 +12,6 @@ import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream}
 sealed trait PlannedChain { def ranges: Vector[ReadRange] }
 final case class CachedChain(ranges: Vector[ReadRange]) extends PlannedChain
 final case class RemoteChain(ranges: Vector[ReadRange]) extends PlannedChain
-final case class DirectChain(ranges: Vector[ReadRange]) extends PlannedChain
 /** Peer-cache read from the split owner's disk (NonLocalReadRequestChain). */
 final case class NonLocalChain(owner: String, ranges: Vector[ReadRange]) extends PlannedChain
 
@@ -254,7 +253,7 @@ final class CachingInputStream(
       conf.maxReadRequestSize, status, sb)
     def runChain(chain: PlannedChain, ownStream: Boolean): Unit = chain match {
       case NonLocalChain(owner, rs) => executeNonLocal(owner, rs, buf, off, ownStream)
-      case CachedChain(rs) => executeCached(rs, at, buf, off)
+      case CachedChain(rs) => executeCached(rs, buf, off)
       case RemoteChain(rs)
         if conf.parallelWarmup && manager.warmup.isDefined =>
         // parallel-warmup routing (NonLocalRequestChain/RemoteFetch
@@ -263,8 +262,7 @@ final class CachingInputStream(
         manager.warmup.get.enqueue(path, rs.head.backendStart,
           rs.last.backendEnd, fileLen, mtime)
       case RemoteChain(rs) =>
-        executeRemote(rs, at, buf, off, status.generation, ownStream)
-      case DirectChain(rs) => readGroupRemote(rs, buf, off, ownStream)
+        executeRemote(rs, buf, off, status.generation, ownStream)
     }
     if (conf.readThreads > 0 && chains.size > 1) {
       // intra-read fan-out on the shared executor pool (reference: the
@@ -316,8 +314,8 @@ final class CachingInputStream(
     manager.metrics.bytesFromRemote.addAndGet(len.toLong)
   }
 
-  private def executeCached(rs: Vector[ReadRange], reqPos: Long,
-      buf: Array[Byte], bufOff: Int): Unit = {
+  private def executeCached(rs: Vector[ReadRange], buf: Array[Byte],
+      bufOff: Int): Unit = {
     val m = manager.metadataFor(path).orNull
     val file = if (m != null) m.dataFile else null
     // TOCTOU guard (r10 triple-stressor finding): between the planner's
@@ -409,8 +407,8 @@ final class CachingInputStream(
     }
   }
 
-  private def executeRemote(rs: Vector[ReadRange], reqPos: Long,
-      buf: Array[Byte], bufOff: Int, generation: Int,
+  private def executeRemote(rs: Vector[ReadRange], buf: Array[Byte],
+      bufOff: Int, generation: Int,
       ownStream: Boolean = false): Unit = {
     // one collated group = one contiguous backend span
     val backendStart = rs.head.backendStart

@@ -26,7 +26,6 @@ class GraftFileSystem extends FileSystem {
   private var manager: CacheManager = _
   private var workingDir: Path = _
   private var enabled: Boolean = true
-  private var hintsEnabled: Boolean = false
   /** True when `createInner` constructed the underlying client directly
     * (take-over shims) rather than borrowing a FileSystem.get-cached
     * instance: a directly-built S3AFileSystem owns connection/thread
@@ -54,12 +53,10 @@ class GraftFileSystem extends FileSystem {
     myUri = URI.create(s"$outerScheme://${Option(name.getAuthority).getOrElse("")}/")
     inner = createInner(name, conf)
     cacheConf = CacheConfig.from(conf)
-    hintsEnabled = conf.getBoolean(CacheConfig.AdmissionHintsKey, false)
     enabled = conf.getBoolean(CacheConfig.EnabledKey, true) &&
       projectionAdmitted(conf)
     manager = CacheManager.getOrInit(cacheConf)
-    if (conf.getBoolean("graft.cache.metrics.enabled", true))
-      CacheMetricsSource.register(manager)
+    CacheMetricsSource.register(manager)
     if (cacheConf.parallelWarmup && manager.warmup.isEmpty) manager.synchronized {
       if (manager.warmup.isEmpty) {
         val svc = new WarmupService(manager,
@@ -117,9 +114,8 @@ class GraftFileSystem extends FileSystem {
 
   // ---- admission control (CacheUtil.skipCache:203-222 analog) ----
   // Three gates, all reference-paralleled: (1) enabled flag — per-scan
-  // confs from GraftScanBuilder land here via fs.graft.impl.disable.cache;
-  // (2) path skip/allow regexes; (3) projection width (below,
-  // CacheUtil.java:385-388 minColumnsSelected).
+  // confs from the DSv2 scan builders land here (Admission.disable);
+  // (2) path skip/allow regexes; (3) projection width (below).
   private[cache] def admitted(path: Path): Boolean = {
     if (!enabled || cacheConf == null) return false
     val s = path.toUri.getPath
@@ -128,31 +124,19 @@ class GraftFileSystem extends FileSystem {
     (skip.isEmpty || !s.matches(skip)) && (allow.isEmpty || s.matches(allow))
   }
 
-  /** Projection-width admission (reference `minColumnsSelected`,
-    * rubix-spi CacheUtil.java:385-388, knobs CacheConfig.java:136-141):
-    * a scan that selects fewer than `graft.cache.min.projected.columns`
-    * top-level columns is not worth caching — it would pin whole blocks
-    * of a wide table for bytes it mostly skips. The pushed projection is
-    * read from Spark's parquet requested-schema key in the conf this FS
-    * instance was initialized with. On the DSv2 path GraftScanBuilder
-    * decides at build() time and ships `graft.cache.enabled=false` in the
-    * scan's broadcast conf (gate 1); this FS-side gate additionally
-    * covers the raw `graft://` path when per-scan FS instances are in
-    * play (`fs.graft.impl.disable.cache=true`), where each task's conf —
-    * carrying the scan's own requested schema — initializes a fresh
-    * instance. With the default JVM-cached FS the session-level conf has
-    * no requested schema, so this gate stays open (width unknown ≠
-    * refused), exactly like the reference when the engine passes no
-    * column hint. */
-  private def projectionAdmitted(conf: Configuration): Boolean = {
-    if (cacheConf.minProjectedColumns <= 0) return true
-    val json = conf.get("org.apache.spark.sql.parquet.row.requested_schema")
-    if (json == null) return true
-    val width = scala.util.Try(
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fields.length)
-    width.toOption.forall(_ >= cacheConf.minProjectedColumns)
-  }
+  /** The FS channel of projection-width admission ([[Admission]]): the
+    * pushed projection is read from Spark's parquet requested-schema key
+    * in the conf this FS instance was initialized with, which carries a
+    * scan's own projection only for per-scan instances
+    * (`fs.graft.impl.disable.cache=true`). No projection = width unknown
+    * = admitted. */
+  private def projectionAdmitted(conf: Configuration): Boolean =
+    Option(conf.get("org.apache.spark.sql.parquet.row.requested_schema"))
+      .flatMap(json => scala.util.Try(
+        org.apache.spark.sql.types.DataType.fromJson(json)
+          .asInstanceOf[org.apache.spark.sql.types.StructType].fields.length)
+        .toOption)
+      .forall(!Admission.tooNarrow(_, cacheConf.minProjectedColumns))
 
   // TTL'd (size, mtime) lookup cache — the reference's getFileInfo path
   // (BookKeeper.java:536-546, rubix.cache.stale.fileinfo.expiry.period):
@@ -171,18 +155,7 @@ class GraftFileSystem extends FileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val ip = toInner(f)
     val st = fileInfoCache.get(ip)
-    // Plan-time width hint (r16, AdmissionHints scaladoc): covers
-    // stock-format scans over graft:// under the JVM-cached FS, where
-    // projectionAdmitted above sees no requested schema. Unknown width
-    // admits. OPT-IN (graft.cache.admission.hints, default off): the
-    // registry is path-keyed and latest-wins, so a narrow stock scan's
-    // hint would also veto a CONCURRENT wide DSv2 scan's opens on the
-    // same table — a workload that interleaves both shapes on one table
-    // should leave this off and rely on the per-scan conf channel.
-    val admit = admitted(f) && st.isFile &&
-      (!hintsEnabled || AdmissionHints.admittedWidth(
-        AdmissionHints.keyOf(ip.toUri), cacheConf.minProjectedColumns))
-    if (!admit) return inner.open(ip, bufferSize)
+    if (!admitted(f) || !st.isFile) return inner.open(ip, bufferSize)
     val stream = new CachingInputStream(
       () => inner.open(ip, bufferSize),
       ip.toString, st.getLen, st.getModificationTime, manager, true)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -16,6 +17,7 @@ import org.apache.spark.sql.execution.datasources.v2.orc.{OrcScan, OrcScanBuilde
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.cache.Admission
 
 /** DataSource V2 caching source — `spark.read.format("graft")` — the
   * idiomatic Spark path of SURVEY §7 phase 7 (the FS-wrapper under
@@ -29,16 +31,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - rewriting table paths onto the `graft://` scheme so every read goes
   *    through the executor block cache (vectorized readers, filter +
   *    aggregate pushdown, nested-schema pruning all intact);
-  *  - applying projected-column cache-admission control on the parquet
-  *    path: the reference only caches scans that select at least N columns
-  *    (CacheUtil.minColumnsSelected, rubix-spi CacheUtil.java:385-388) —
-  *    the pruned schema width is known exactly at build() time, and the
-  *    decision ships to executors inside the scan's broadcast Hadoop conf
-  *    (`graft.cache.enabled=false`), cluster-correct with
-  *    `fs.graft.impl.disable.cache=true`. Since r15 the orc/csv/json
-  *    paths get the same per-scan admission through their own wrapped
-  *    ScanBuilders below (hadoopConf copy for ORC; injected scan OPTIONS
-  *    for CSV/JSON, whose reader conf is built from options).
+  *  - applying projected-column cache admission ([[graft.cache.Admission]])
+  *    per scan: the pruned schema width is known exactly at build() time,
+  *    and the decision ships to executors inside the scan itself — its
+  *    broadcast Hadoop conf for parquet/orc, its OPTIONS for csv/json,
+  *    whose reader conf is built from options.
   */
 class GraftDataSource extends FileDataSourceV2 {
   // Only consulted on the V1 fallback path, which "graft" never takes
@@ -47,11 +44,13 @@ class GraftDataSource extends FileDataSourceV2 {
     classOf[ParquetFileFormat]
   override def shortName(): String = "graft"
 
+  /** The user path on the `graft://` scheme. Hadoop `Path` parses the raw
+    * string and quotes what a URI cannot hold (`%`, spaces), exactly as
+    * `spark.read.parquet` would. */
   private def toGraft(p: String): String = {
-    val u = java.net.URI.create(p.replace(" ", "%20"))
-    val scheme = Option(u.getScheme).getOrElse("file")
-    if (scheme == "graft") p
-    else s"graft://${Option(u.getPath).getOrElse(p)}"
+    val u = new Path(p).toUri
+    if (u.getScheme == "graft") p
+    else new Path("graft", null, u.getPath).toString
   }
 
   private def makeTable(options: CaseInsensitiveStringMap,
@@ -117,16 +116,9 @@ final class GraftScanBuilder(delegate: ParquetTable, minCols: Int,
 
   override def build(): ParquetScan = {
     val scan = super.build()
-    val projectedCols = scan.readDataSchema.fields.length
-    if (minCols > 0 && projectedCols < minCols) {
-      // narrow projection: not worth caching (reference's
-      // minColumnsSelected admission rule) — disable the cache for this
-      // scan only, via its broadcast Hadoop conf
-      val conf2 = new org.apache.hadoop.conf.Configuration(scan.hadoopConf)
-      conf2.setBoolean(graft.cache.CacheConfig.EnabledKey, false)
-      conf2.setBoolean("fs.graft.impl.disable.cache", true)
-      scan.copy(hadoopConf = conf2)
-    } else scan
+    if (Admission.tooNarrow(scan.readDataSchema.fields.length, minCols))
+      scan.copy(hadoopConf = Admission.disable(scan.hadoopConf))
+    else scan
   }
 }
 
@@ -159,23 +151,10 @@ final class GraftOrcScanBuilder(delegate: OrcTable, minCols: Int,
 
   override def build(): OrcScan = {
     val scan = super.build()
-    if (minCols > 0 && scan.readDataSchema.fields.length < minCols) {
-      val conf2 = new org.apache.hadoop.conf.Configuration(scan.hadoopConf)
-      conf2.setBoolean(graft.cache.CacheConfig.EnabledKey, false)
-      conf2.setBoolean("fs.graft.impl.disable.cache", true)
-      scan.copy(hadoopConf = conf2)
-    } else scan
+    if (Admission.tooNarrow(scan.readDataSchema.fields.length, minCols))
+      scan.copy(hadoopConf = Admission.disable(scan.hadoopConf))
+    else scan
   }
-}
-
-private object AdmissionOptions {
-  /** options + the per-scan cache-disable flags (CSV/JSON reader conf is
-    * built FROM options, so this is their admission channel). */
-  def disable(options: CaseInsensitiveStringMap): CaseInsensitiveStringMap =
-    new CaseInsensitiveStringMap(
-      (options.asCaseSensitiveMap.asScala.toMap +
-        (graft.cache.CacheConfig.EnabledKey -> "false") +
-        ("fs.graft.impl.disable.cache" -> "true")).asJava)
 }
 
 final class GraftCsvScanBuilder(delegate: CSVTable, minCols: Int,
@@ -185,8 +164,8 @@ final class GraftCsvScanBuilder(delegate: CSVTable, minCols: Int,
 
   override def build(): CSVScan = {
     val scan = super.build()
-    if (minCols > 0 && scan.readDataSchema.fields.length < minCols)
-      scan.copy(options = AdmissionOptions.disable(scan.options))
+    if (Admission.tooNarrow(scan.readDataSchema.fields.length, minCols))
+      scan.copy(options = Admission.disable(scan.options))
     else scan
   }
 }
@@ -198,8 +177,8 @@ final class GraftJsonScanBuilder(delegate: JsonTable, minCols: Int,
 
   override def build(): JsonScan = {
     val scan = super.build()
-    if (minCols > 0 && scan.readDataSchema.fields.length < minCols)
-      scan.copy(options = AdmissionOptions.disable(scan.options))
+    if (Admission.tooNarrow(scan.readDataSchema.fields.length, minCols))
+      scan.copy(options = Admission.disable(scan.options))
     else scan
   }
 }

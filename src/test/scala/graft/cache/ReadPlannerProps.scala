@@ -67,7 +67,6 @@ object ReadPlannerProps extends Properties("ReadPlanner") {
           BlockMath.endBlock(r.actualStart, r.actualLen.toLong, blockSize))
           .forall(b => states((b - sb).toInt) == BlockState.NonLocal(owner))
       }
-      case DirectChain(_) => false // planner never emits Direct
     }
   }
 
