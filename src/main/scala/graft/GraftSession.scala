@@ -35,9 +35,8 @@ object GraftSession {
       // Parquet's Hadoop vectored-IO path: the reader hands the footer's
       // column-chunk ranges to PositionedReadable.readVectored in one
       // call instead of seek+read per chunk. CachingInputStream overrides
-      // it (ranges run the chain planner, filled async on the shared
-      // pool) — against an object store this collapses per-chunk round
-      // trips; here it exercises the same code path VectoredReadSpec pins.
+      // it (ranges run the chain planner and fill inline, in order);
+      // here it exercises the same code path VectoredReadSpec pins.
       .config("spark.hadoop.parquet.hadoop.vectored.io.enabled", "true")
     cacheDir.foreach(d => b.config("spark.hadoop.graft.cache.dir", d))
     b

@@ -24,14 +24,10 @@ final case class CacheConfig(
     diskFullnessPercentage: Int,
     /** Max bytes a single collated read request may span before chunking. */
     maxReadRequestSize: Int,
-    /** Re-check remote lastModified and invalidate on change. */
-    stalenessCheck: Boolean,
     /** Throw instead of falling back to direct reads (test mode). */
     strict: Boolean,
     /** Plan + account cache state but never store data (sizing dry-runs). */
     dummyMode: Boolean,
-    /** Threads for intra-read chain parallelism; 0 = inline execution. */
-    readThreads: Int,
     /** Enable the async parallel-warmup path (miss -> direct + queue). */
     parallelWarmup: Boolean,
     /** Warmup queue: delay before a request becomes eligible (ms). */
@@ -54,10 +50,8 @@ object CacheConfig {
   val MaxSizeKey = "graft.cache.max.size.mb"
   val DiskFullnessKey = "graft.cache.disk.fullness.percentage"
   val MaxReadRequestKey = "graft.cache.max.read.request.size"
-  val StalenessKey = "graft.cache.staleness.check"
   val StrictKey = "graft.cache.strict.mode"
   val DummyKey = "graft.cache.dummy.mode"
-  val ReadThreadsKey = "graft.cache.read.threads"
   val ParallelWarmupKey = "graft.cache.parallel.warmup"
   val WarmupDelayKey = "graft.cache.warmup.delay.ms"
   val WarmupDrainKey = "graft.cache.warmup.drain.ms"
@@ -75,10 +69,8 @@ object CacheConfig {
     maxSizeMB = conf.getLong(MaxSizeKey, 0L),
     diskFullnessPercentage = conf.getInt(DiskFullnessKey, 0),
     maxReadRequestSize = conf.getInt(MaxReadRequestKey, 8 << 20),
-    stalenessCheck = conf.getBoolean(StalenessKey, true),
     strict = conf.getBoolean(StrictKey, false),
     dummyMode = conf.getBoolean(DummyKey, false),
-    readThreads = conf.getInt(ReadThreadsKey, 0),
     parallelWarmup = conf.getBoolean(ParallelWarmupKey, false),
     warmupDelayMs = conf.getLong(WarmupDelayKey, 1000L),
     warmupDrainMs = conf.getLong(WarmupDrainKey, 200L),

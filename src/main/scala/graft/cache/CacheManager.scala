@@ -1,5 +1,8 @@
 package graft.cache
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.StandardOpenOption
 import java.util.concurrent.ConcurrentHashMap
 import com.google.common.cache.{CacheBuilder, RemovalListener, RemovalNotification, Weigher, Cache => GCache}
 
@@ -104,14 +107,10 @@ final class CacheManager(val conf: CacheConfig,
     val gen = currentGeneration(path)
     val existing = registry.getIfPresent(path)
     if (existing != null && existing.generation == gen &&
-      existing.fileLen == fileLen &&
-      (!conf.stalenessCheck || existing.lastModified == mtime) &&
-      !existing.isDeleted) {
+      existing.matches(fileLen, mtime) && !existing.isDeleted) {
       existing
     } else {
-      if (existing != null &&
-        (existing.fileLen != fileLen ||
-          (conf.stalenessCheck && existing.lastModified != mtime))) {
+      if (existing != null && !existing.matches(fileLen, mtime)) {
         // remote file changed underneath us -> invalidate + new generation
         invalidate(path)
       }
@@ -130,16 +129,13 @@ final class CacheManager(val conf: CacheConfig,
         // with different fileLen/mtime for one generation (they would
         // share a data file and mix bytes of two file versions)
         val racer = registry.getIfPresent(path)
-        if (racer != null && !racer.isDeleted &&
-          (racer.fileLen != fileLen ||
-            (conf.stalenessCheck && racer.lastModified != mtime))) {
+        if (racer != null && !racer.isDeleted && !racer.matches(fileLen, mtime)) {
           invalidate(path)
         }
         val gen2 = currentGeneration(path)
         val again = registry.getIfPresent(path)
         if (again != null && again.generation == gen2 && !again.isDeleted &&
-          again.fileLen == fileLen &&
-          (!conf.stalenessCheck || again.lastModified == mtime)) again
+          again.matches(fileLen, mtime)) again
         else {
           val m = new FileMetadata(path, fileLen, mtime, gen2, conf)
           registry.put(path, m)
@@ -177,12 +173,42 @@ final class CacheManager(val conf: CacheConfig,
       startBlock: Long, endBlock: Long): Boolean = {
     val m = registry.getIfPresent(path)
     if (m == null || m.isDeleted || m.generation != generation ||
-      m.fileLen != fileLen ||
-      (conf.stalenessCheck && m.lastModified != mtime)) return false
+      !m.matches(fileLen, mtime)) return false
     val newly = m.setBlocksCached(startBlock, endBlock)
     if (newly > 0) registry.put(path, m) // re-weigh
     true
   }
+
+  /** The one block-fill protocol, shared by read-through
+    * (RemoteReadRequestChain.copyIntoCache + updateCacheStatus) and async
+    * warmup (FileDownloadRequestChain): write the first `len` bytes of
+    * `data`, read from the store at block-aligned `start`, into the sparse
+    * file of `generation`, then mark those blocks cached. Does nothing once
+    * that generation is retired. An entry retired between the guard and
+    * the write (eviction/invalidation) is a lost warm, never an error; any
+    * other failure throws only in strict mode, since the caller's bytes
+    * already came from the store. */
+  def fill(path: String, fileLen: Long, mtime: Long, generation: Int,
+      start: Long, data: Array[Byte], len: Int): Unit =
+    try {
+      val m = registry.getIfPresent(path)
+      if (m != null && m.generation == generation && !m.isDeleted) {
+        val ch = FileChannel.open(m.ensureDataFile().toPath, StandardOpenOption.WRITE)
+        try {
+          // bound the wrap: a pooled scratch may be longer than len
+          val bb = ByteBuffer.wrap(data, 0, len)
+          while (bb.hasRemaining) ch.write(bb, start + bb.position())
+        } finally ch.close()
+        setAllCached(path, fileLen, mtime, generation,
+          BlockMath.startBlock(start, conf.blockSize),
+          BlockMath.endBlock(start, len.toLong, conf.blockSize))
+        metrics.warmupBytes.addAndGet(len.toLong)
+      }
+    } catch {
+      case _: Exception if metadataFor(path)
+          .forall(x => x.isDeleted || x.generation != generation) => // lost warm
+      case _: Exception if !conf.strict => // cache miss persists
+    }
 
   /** Drop metadata + delete cache files + bump generation
     * (BookKeeper.invalidateFileMetadata:749-756). Serialized with

@@ -1,6 +1,6 @@
 package graft.cache
 
-import java.io.{EOFException, IOException, RandomAccessFile}
+import java.io.{EOFException, IOException}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
@@ -65,7 +65,9 @@ object ReadPlanner {
     chains.result()
   }
 
-  /** Re-chunk a collated group so no single backend read exceeds max. */
+  /** Re-chunk a collated group so no single backend read exceeds max
+    * (ReadRequestChain.java:92-116) — the one chunker: read-through and
+    * async warmup both take their store reads from this planner. */
   private def splitGroup(g: Vector[ReadRange], maxSize: Int): Seq[Vector[ReadRange]] = {
     val out = Seq.newBuilder[Vector[ReadRange]]
     var cur = Vector.empty[ReadRange]
@@ -92,16 +94,15 @@ object ReadPlanner {
   *    source, returns the requested window, writes whole blocks into the
   *    sparse cache file and marks them cached
   *    (RemoteReadRequestChain.java:41-214 incl. affix accounting).
-  *  - Direct: pass-through, used for skip-cache paths, dummy mode and
-  *    fallbacks (DirectReadRequestChain.java).
+  *  - Direct: pass-through, used for dummy mode and fallbacks
+  *    (DirectReadRequestChain.java).
   */
 final class CachingInputStream(
     openRemote: () => FSDataInputStream,
     val path: String,
     fileLen: Long,
     mtime: Long,
-    manager: CacheManager,
-    cacheAdmitted: Boolean) extends FSInputStream
+    manager: CacheManager) extends FSInputStream
     with org.apache.hadoop.fs.StreamCapabilities {
 
   /** Advertise vectored-read support so capability probes (parquet's
@@ -178,10 +179,8 @@ final class CachingInputStream(
   /** Vectored read: every range runs through the SAME chain planner as a
     * sequential read (cached blocks from disk, misses read-through +
     * warmed), so a vectored-IO parquet reader gets cache semantics for
-    * free. Ranges are filled asynchronously on the shared chain pool
-    * (completing each future as its range lands — the overlap with
-    * caller-side decode is the point of the API); with the pool disabled
-    * (readThreads=0) they fill inline before returning. */
+    * free. Ranges fill inline, in order, before this returns; a failed
+    * range fails only its own future. */
   override def readVectored(
       ranges: java.util.List[_ <: org.apache.hadoop.fs.FileRange],
       allocate: java.util.function.IntFunction[java.nio.ByteBuffer]): Unit = {
@@ -195,13 +194,9 @@ final class CachingInputStream(
           s"vectored range [${r.getOffset}, +${r.getLength}) outside [0,$fileLen) for $path")
     }
     manager.metrics.vectoredRanges.addAndGet(rs.size.toLong)
-    val futs = rs.map { r =>
+    rs.foreach { r =>
       val f = new java.util.concurrent.CompletableFuture[java.nio.ByteBuffer]()
       r.setData(f)
-      f
-    }
-    def fill(r: org.apache.hadoop.fs.FileRange,
-        f: java.util.concurrent.CompletableFuture[java.nio.ByteBuffer]): Unit =
       try {
         val len = r.getLength
         val bb = allocate.apply(len)
@@ -215,12 +210,7 @@ final class CachingInputStream(
         }
         f.complete(bb)
       } catch { case e: Throwable => f.completeExceptionally(e) }
-    if (conf.readThreads > 0 && rs.size > 1) {
-      val pool = CachingInputStream.sharedPool(conf.readThreads)
-      rs.zip(futs).foreach { case (r, f) =>
-        pool.execute(() => fill(r, f))
-      }
-    } else rs.zip(futs).foreach { case (r, f) => fill(r, f) }
+    }
   }
 
   override def close(): Unit = {
@@ -231,86 +221,52 @@ final class CachingInputStream(
 
   // ---- core ----
   private def readInternal(at: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
-    if (!cacheAdmitted) { directRead(at, buf, off, len); return }
-    if (conf.dummyMode) {
-      // shadow mode: account cache state, store nothing
-      val sb = BlockMath.startBlock(at, conf.blockSize)
-      val eb = BlockMath.endBlock(at, len, conf.blockSize)
-      val st = manager.getCacheStatus(path, fileLen, mtime, sb, eb)
-      manager.setAllCached(path, fileLen, mtime, st.generation, sb, eb)
-      directRead(at, buf, off, len)
-      return
-    }
     val sb = BlockMath.startBlock(at, conf.blockSize)
     val eb = BlockMath.endBlock(at, len, conf.blockSize)
+    if (conf.dummyMode) {
+      // shadow mode: account cache state, store nothing
+      val st = manager.getCacheStatus(path, fileLen, mtime, sb, eb)
+      manager.setAllCached(path, fileLen, mtime, st.generation, sb, eb)
+      readFullyRemote(at, buf, off, len)
+      return
+    }
     val status =
       try manager.getCacheStatus(path, fileLen, mtime, sb, eb)
       catch {
         case e: Throwable if !conf.strict =>
-          directRead(at, buf, off, len); return
+          readFullyRemote(at, buf, off, len); return
       }
-    val chains = ReadPlanner.plan(at, len, fileLen, conf.blockSize,
-      conf.maxReadRequestSize, status, sb)
-    def runChain(chain: PlannedChain, ownStream: Boolean): Unit = chain match {
-      case NonLocalChain(owner, rs) => executeNonLocal(owner, rs, buf, off, ownStream)
+    ReadPlanner.plan(at, len, fileLen, conf.blockSize,
+      conf.maxReadRequestSize, status, sb).foreach {
+      case NonLocalChain(owner, rs) => executeNonLocal(owner, rs, buf, off)
       case CachedChain(rs) => executeCached(rs, buf, off)
       case RemoteChain(rs)
         if conf.parallelWarmup && manager.warmup.isDefined =>
         // parallel-warmup routing (NonLocalRequestChain/RemoteFetch
         // analog): serve the caller via direct reads NOW, warm async
-        readGroupRemote(rs, buf, off, ownStream)
+        readGroupRemote(rs, buf, off)
         manager.warmup.get.enqueue(path, rs.head.backendStart,
           rs.last.backendEnd, fileLen, mtime)
       case RemoteChain(rs) =>
-        executeRemote(rs, buf, off, status.generation, ownStream)
+        executeRemote(rs, buf, off, status.generation)
     }
-    if (conf.readThreads > 0 && chains.size > 1) {
-      // intra-read fan-out on the shared executor pool (reference: the
-      // 100-thread readService, CachingInputStream.java:67-76 — sized
-      // down per SURVEY risk 5). Chains touch disjoint buffer slices;
-      // each chain doing source IO opens its own stream (parallel GETs
-      // against an object store; positioned reads on one stream are not
-      // reliably thread-safe on every FS).
-      val pool = CachingInputStream.sharedPool(conf.readThreads)
-      val futures = chains.map(c => pool.submit(new java.util.concurrent.Callable[Unit] {
-        override def call(): Unit = runChain(c, ownStream = true)
-      }))
-      var failure: Throwable = null
-      futures.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (failure == null) failure = e.getCause
-        }
-      }
-      if (failure != null) throw failure
-    } else chains.foreach(runChain(_, ownStream = false))
   }
-
-  private def directRead(at: Long, buf: Array[Byte], off: Int, len: Int): Unit =
-    readFullyRemote(at, buf, off, len)
 
   /** Serve a COLLATED group's user windows with ONE source read: ranges
     * in a collated group are contiguous by construction
     * (ReadRange.collate merges on adjacency), so per-range reads would
-    * multiply object-store round-trips by the block count — exactly on
-    * the paths that open a dedicated stream per call. */
+    * multiply object-store round-trips by the block count. */
   private def readGroupRemote(rs: Vector[ReadRange], buf: Array[Byte],
-      bufOff: Int, ownStream: Boolean): Unit = {
+      bufOff: Int): Unit = {
     if (rs.isEmpty) return
     val start = rs.head.actualStart
     val span = (rs.last.actualEnd - start).toInt
-    readFullyRemote(start, buf, bufOff + rs.head.destOffset, span, ownStream)
+    readFullyRemote(start, buf, bufOff + rs.head.destOffset, span)
   }
 
-  private def readFullyRemote(at: Long, buf: Array[Byte], off: Int, len: Int,
-      ownStream: Boolean = false): Unit = {
+  private def readFullyRemote(at: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
     if (len <= 0) return
-    if (ownStream) {
-      // dedicated stream per concurrent chain: parallel ranged reads
-      val s = openRemote()
-      try s.readFully(at, buf, off, len) finally s.close()
-    } else remote.readFully(at, buf, off, len)
+    remote.readFully(at, buf, off, len)
     manager.metrics.bytesFromRemote.addAndGet(len.toLong)
   }
 
@@ -361,8 +317,7 @@ final class CachingInputStream(
         manager.metrics.corruptionFallbacks.incrementAndGet()
         manager.invalidate(path)
         if (conf.strict) throw e
-        rs.foreach(r => readFullyRemote(r.actualStart, buf,
-          bufOff + r.destOffset, r.actualLen))
+        readGroupRemote(rs, buf, bufOff)
     }
   }
 
@@ -381,7 +336,7 @@ final class CachingInputStream(
     * fire-and-forget on the already-slow fallback path; transport errors
     * (owner down) send nothing. */
   private def executeNonLocal(owner: String, rs: Vector[ReadRange],
-      buf: Array[Byte], bufOff: Int, ownStream: Boolean): Unit = {
+      buf: Array[Byte], bufOff: Int): Unit = {
     val start = rs.head.actualStart
     val span = (rs.last.actualEnd - start).toInt
     val dest = bufOff + rs.head.destOffset
@@ -403,56 +358,24 @@ final class CachingInputStream(
           case _ =>
         }
         if (conf.strict) throw e
-        readGroupRemote(rs, buf, bufOff, ownStream)
+        readGroupRemote(rs, buf, bufOff)
     }
   }
 
   private def executeRemote(rs: Vector[ReadRange], buf: Array[Byte],
-      bufOff: Int, generation: Int,
-      ownStream: Boolean = false): Unit = {
+      bufOff: Int, generation: Int): Unit = {
     // one collated group = one contiguous backend span
     val backendStart = rs.head.backendStart
-    val backendEnd = rs.last.backendEnd
-    val span = (backendEnd - backendStart).toInt
+    val span = (rs.last.backendEnd - backendStart).toInt
     val scratch = CachingInputStream.scratchBuffer(span)
-    readFullyRemote(backendStart, scratch, 0, span, ownStream)
+    readFullyRemote(backendStart, scratch, 0, span)
     // hand the caller their windows
     rs.foreach { r =>
       System.arraycopy(scratch, (r.actualStart - backendStart).toInt,
         buf, bufOff + r.destOffset, r.actualLen)
       manager.metrics.extraReadBytes.addAndGet(r.extraBytes)
     }
-    // write whole blocks into the sparse cache file + mark cached
-    try {
-      val m = manager.metadataFor(path).orNull
-      if (m != null && m.generation == generation && !m.isDeleted) {
-        val f = m.ensureDataFile()
-        val ch = FileChannel.open(f.toPath, StandardOpenOption.WRITE)
-        try {
-          // bound the wrap: the pooled scratch may be longer than span
-          val bb = ByteBuffer.wrap(scratch, 0, span)
-          var written = 0
-          while (bb.hasRemaining) {
-            val n = ch.write(bb, backendStart + written)
-            written += n
-          }
-        } finally ch.close()
-        val sb = BlockMath.startBlock(backendStart, conf.blockSize)
-        val eb = BlockMath.endBlock(backendStart, span.toLong, conf.blockSize)
-        manager.setAllCached(path, fileLen, mtime, generation, sb, eb)
-        manager.metrics.warmupBytes.addAndGet(span.toLong)
-      }
-    } catch {
-      // the entry was retired between the guard and the write (eviction/
-      // invalidation): a lost warm, never an error — the user's data was
-      // already delivered from the source, strict or not
-      case _: Exception if {
-          val cur = manager.metadataFor(path)
-          cur.isEmpty || cur.exists(x => x.isDeleted || x.generation != generation)
-        } => // benign: cache miss persists
-      case e: Exception if !conf.strict => // data already delivered; cache miss persists
-      case e: Exception => throw e
-    }
+    manager.fill(path, fileLen, mtime, generation, backendStart, scratch, span)
   }
 }
 
@@ -462,8 +385,8 @@ object CachingInputStream {
     * pools direct buffers for the same reason — per-read allocation churns
     * GC at high read concurrency, CachedReadRequestChain.java:109-134).
     * Spans are bounded by maxReadRequestSize; a SoftReference lets the GC
-    * reclaim idle buffers under pressure. Thread-confined: chains run
-    * either inline or on a dedicated pool thread, never sharing a span. */
+    * reclaim idle buffers under pressure. Thread-confined: a span is
+    * read and filled on one thread (the reader's, or a warmup worker's). */
   private val scratchRef = new ThreadLocal[java.lang.ref.SoftReference[Array[Byte]]]
 
   private[cache] def scratchBuffer(span: Int): Array[Byte] = {
@@ -475,22 +398,5 @@ object CachingInputStream {
       scratchRef.set(new java.lang.ref.SoftReference(fresh))
       fresh
     }
-  }
-
-  @volatile private var pool: java.util.concurrent.ExecutorService = _
-  /** Shared bounded executor for intra-read chain fan-out (one per JVM —
-    * NOT per stream: the reference's per-client 100-thread pool would
-    * multiply across Spark task slots, SURVEY risk 5). */
-  private[cache] def sharedPool(threads: Int): java.util.concurrent.ExecutorService = {
-    if (pool == null) synchronized {
-      if (pool == null) {
-        val n = math.min(math.max(1, threads),
-          Runtime.getRuntime.availableProcessors() * 2)
-        pool = java.util.concurrent.Executors.newFixedThreadPool(n, r => {
-          val t = new Thread(r, "graft-read-chain"); t.setDaemon(true); t
-        })
-      }
-    }
-    pool
   }
 }

@@ -22,6 +22,12 @@ final class FileMetadata(
   private val md = CacheFileLayout.mdFile(conf.cacheDir, remotePath, generation)
   private var deleted = false
 
+  /** True when this entry describes the remote file version
+    * (`fileLen`, `mtime`): the one test behind status lookups,
+    * `setAllCached`, peer serving and the mdfile restore. */
+  def matches(fileLen: Long, mtime: Long): Boolean =
+    this.fileLen == fileLen && lastModified == mtime
+
   /** Restore the persisted bitmap ONLY when its 16-byte header proves it
     * describes THIS file version. Without the header (r10 format), a
     * fresh JVM adopted any same-generation bitmap by length alone — so a
@@ -39,7 +45,7 @@ final class FileMetadata(
       val bb = java.nio.ByteBuffer.wrap(bytes, 0, FileMetadata.HeaderLen)
       val hLen = bb.getLong
       val hMtime = bb.getLong
-      if (hLen == fileLen && (!conf.stalenessCheck || hMtime == lastModified))
+      if (matches(hLen, hMtime))
         BlockBitmap.fromBytes(blockCount, java.util.Arrays.copyOfRange(
           bytes, FileMetadata.HeaderLen, bytes.length))
       else BlockBitmap.empty(blockCount)

@@ -15,8 +15,8 @@ import org.apache.hadoop.util.Progressable
   *
   * `graft://` wraps an underlying scheme (default `file`, configurable via
   * `graft.underlying.scheme` — `s3a`/`gs`/`abfs` in a real deployment).
-  * Mutations are pure delegation; staleness is caught lazily by
-  * lastModified compare, exactly like the reference
+  * Mutations through this FS invalidate eagerly; writes that bypass it
+  * are caught lazily by lastModified compare, like the reference
   * (CachingFileSystem.java:263-306).
   */
 class GraftFileSystem extends FileSystem {
@@ -154,11 +154,15 @@ class GraftFileSystem extends FileSystem {
   // ---- reads ----
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val ip = toInner(f)
-    val st = fileInfoCache.get(ip)
+    // Guava wraps the loader's exception; rethrow the inner FS's own
+    // (Spark matches FileNotFoundException for missing files)
+    val st = try fileInfoCache.get(ip) catch {
+      case e: java.util.concurrent.ExecutionException => throw e.getCause
+    }
     if (!admitted(f) || !st.isFile) return inner.open(ip, bufferSize)
     val stream = new CachingInputStream(
       () => inner.open(ip, bufferSize),
-      ip.toString, st.getLen, st.getModificationTime, manager, true)
+      ip.toString, st.getLen, st.getModificationTime, manager)
     new FSDataInputStream(new BufferedFSInputStream(stream,
       math.max(bufferSize, 4096)))
   }

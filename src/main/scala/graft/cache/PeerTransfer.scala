@@ -37,6 +37,10 @@ object PeerTransfer {
     * the owner refused to serve. Read requests start with pathLen > 0,
     * so a negative sentinel is unambiguous on the wire. */
   val OpWarm: Int = -2
+
+  /** One request header, as read and written on the wire. */
+  final case class Request(path: String, offset: Long, length: Int,
+      fileLen: Long, mtime: Long)
 }
 
 /** Owner refused the range (not cached / stale / error status) — the peer
@@ -89,31 +93,17 @@ final class PeerTransferServer(manager: CacheManager,
     var okSent = false
     try {
       ch.setOption[java.lang.Boolean](StandardSocketOptions.TCP_NODELAY, true)
-      val head = ByteBuffer.allocate(4)
-      readFully(ch, head)
-      val first = head.getInt(0)
-      if (first == PeerTransfer.OpWarm) { handleWarm(ch); return }
-      val pathLen = first
-      if (pathLen <= 0 || pathLen > (1 << 16)) { reply(ch, PeerTransfer.StatusError); return }
-      val rest = ByteBuffer.allocate(pathLen + 8 + 4 + 8 + 8)
-      readFully(ch, rest)
-      rest.flip()
-      val pathBytes = new Array[Byte](pathLen)
-      rest.get(pathBytes)
-      val path = new String(pathBytes, UTF_8)
-      val offset = rest.getLong
-      val length = rest.getInt
-      val fileLen = rest.getLong
-      val mtime = rest.getLong
+      val first = readInt(ch)
+      val warm = first == PeerTransfer.OpWarm
+      val r = readRequest(ch, if (warm) readInt(ch) else first).orNull
+      if (r == null) { reply(ch, PeerTransfer.StatusError); return }
+      if (warm) { handleWarm(ch, r); return }
 
-      val m = manager.metadataFor(path).orNull
+      val m = manager.metadataFor(r.path).orNull
       if (m == null || m.isDeleted) { reply(ch, PeerTransfer.StatusNotCached); return }
-      if (m.fileLen != fileLen ||
-        (manager.conf.stalenessCheck && m.lastModified != mtime)) {
-        reply(ch, PeerTransfer.StatusStale); return
-      }
-      val sb = BlockMath.startBlock(offset, manager.conf.blockSize)
-      val eb = BlockMath.endBlock(offset, length.toLong, manager.conf.blockSize)
+      if (!m.matches(r.fileLen, r.mtime)) { reply(ch, PeerTransfer.StatusStale); return }
+      val sb = BlockMath.startBlock(r.offset, manager.conf.blockSize)
+      val eb = BlockMath.endBlock(r.offset, r.length.toLong, manager.conf.blockSize)
       if (!m.allCached(sb, eb)) { reply(ch, PeerTransfer.StatusNotCached); return }
       val file = m.dataFile
       if (!file.exists()) { reply(ch, PeerTransfer.StatusNotCached); return }
@@ -123,13 +113,13 @@ final class PeerTransferServer(manager: CacheManager,
       val fc = FileChannel.open(file.toPath, StandardOpenOption.READ)
       try {
         var sent = 0L
-        while (sent < length) {
-          val n = fc.transferTo(offset + sent, length - sent, ch)
+        while (sent < r.length) {
+          val n = fc.transferTo(r.offset + sent, r.length - sent, ch)
           if (n <= 0) throw new IOException(s"transferTo stalled at $sent")
           sent += n
         }
       } finally fc.close()
-      manager.metrics.bytesToPeers.addAndGet(length.toLong)
+      manager.metrics.bytesToPeers.addAndGet(r.length.toLong)
     } catch {
       case _: Throwable if !okSent =>
         try reply(ch, PeerTransfer.StatusError) catch { case _: Throwable => }
@@ -139,35 +129,34 @@ final class PeerTransferServer(manager: CacheManager,
     }
   }
 
-  /** Warm-on-behalf-of-peer: same header layout as a read request after
-    * the sentinel. The range is ENQUEUED on this node's WarmupService (the
-    * delay-window merge dedups storms of warm requests for a hot split);
-    * StatusOk means accepted, not yet warm — the requester keeps serving
-    * itself via direct reads until a later locality-missed read hits. */
-  private def handleWarm(ch: SocketChannel): Unit = {
-    val lenBuf = ByteBuffer.allocate(4)
-    readFully(ch, lenBuf)
-    val pathLen = lenBuf.getInt(0)
-    if (pathLen <= 0 || pathLen > (1 << 16)) { reply(ch, PeerTransfer.StatusError); return }
+  /** The one request decoder: the header fields after `pathLen`; None
+    * for an out-of-range path length. */
+  private def readRequest(ch: SocketChannel, pathLen: Int): Option[PeerTransfer.Request] = {
+    if (pathLen <= 0 || pathLen > (1 << 16)) return None
     val rest = ByteBuffer.allocate(pathLen + 8 + 4 + 8 + 8)
     readFully(ch, rest)
     rest.flip()
     val pathBytes = new Array[Byte](pathLen)
     rest.get(pathBytes)
-    val path = new String(pathBytes, UTF_8)
-    val offset = rest.getLong
-    val length = rest.getInt
-    val fileLen = rest.getLong
-    val mtime = rest.getLong
+    Some(PeerTransfer.Request(new String(pathBytes, UTF_8), rest.getLong,
+      rest.getInt, rest.getLong, rest.getLong))
+  }
+
+  /** Warm-on-behalf-of-peer: the same header after the sentinel. The
+    * range is ENQUEUED on this node's WarmupService (the delay-window
+    * merge dedups storms of warm requests for a hot split); StatusOk
+    * means accepted, not yet warm — the requester keeps serving itself
+    * via direct reads until a later locality-missed read hits. */
+  private def handleWarm(ch: SocketChannel, r: PeerTransfer.Request): Unit = {
     // validate BEFORE enqueue: this is the only wire input that reaches a
     // shared scheduled task, and a degenerate range would throw inside
     // the drainer (killing all future drains for the JVM lifetime)
-    if (offset < 0 || length <= 0 || fileLen <= 0 || offset >= fileLen) {
+    if (r.offset < 0 || r.length <= 0 || r.fileLen <= 0 || r.offset >= r.fileLen) {
       reply(ch, PeerTransfer.StatusError); return
     }
     manager.warmup match {
       case Some(w) =>
-        w.enqueue(path, offset, math.min(offset + length, fileLen), fileLen, mtime)
+        w.enqueue(r.path, r.offset, math.min(r.offset + r.length, r.fileLen), r.fileLen, r.mtime)
         manager.metrics.peerWarmsAccepted.incrementAndGet()
         reply(ch, PeerTransfer.StatusOk)
       case None => reply(ch, PeerTransfer.StatusNotCached)
@@ -183,6 +172,12 @@ final class PeerTransferServer(manager: CacheManager,
   private def readFully(ch: SocketChannel, b: ByteBuffer): Unit = {
     while (b.hasRemaining)
       if (ch.read(b) < 0) throw new EOFException("peer closed mid-header")
+  }
+
+  private def readInt(ch: SocketChannel): Int = {
+    val b = ByteBuffer.allocate(4)
+    readFully(ch, b)
+    b.getInt(0)
   }
 
   def close(): Unit = {
@@ -201,30 +196,15 @@ final class PeerTransferServer(manager: CacheManager,
 object PeerTransferClient {
   def read(addr: InetSocketAddress, path: String, offset: Long, length: Int,
       fileLen: Long, mtime: Long, buf: Array[Byte], bufOff: Int,
-      connectTimeoutMs: Int = 2000, readTimeoutMs: Int = 10000): Unit = {
-    val sock = new java.net.Socket()
-    try {
-      sock.connect(addr, connectTimeoutMs)
-      sock.setSoTimeout(readTimeoutMs)
-      sock.setTcpNoDelay(true)
-      val pathBytes = path.getBytes(UTF_8)
-      val req = ByteBuffer.allocate(4 + pathBytes.length + 8 + 4 + 8 + 8)
-      req.putInt(pathBytes.length).put(pathBytes)
-        .putLong(offset).putInt(length).putLong(fileLen).putLong(mtime)
-      val out = sock.getOutputStream
-      out.write(req.array(), 0, req.position())
-      out.flush()
-
-      val in = sock.getInputStream
-      val head = new Array[Byte](4)
-      readFully(in, head, 0, 4, s"peer closed on header ($path@$offset)")
-      val status = ByteBuffer.wrap(head).getInt
+      connectTimeoutMs: Int = 2000, readTimeoutMs: Int = 10000): Unit =
+    exchange(addr, None, PeerTransfer.Request(path, offset, length, fileLen, mtime),
+        connectTimeoutMs, readTimeoutMs) { in =>
+      val status = readStatus(in, s"peer closed on header ($path@$offset)")
       if (status != PeerTransfer.StatusOk)
         throw new PeerRefusedException(
           s"peer refused range ($path@$offset+$length): status $status", status)
       readFully(in, buf, bufOff, length, s"peer closed mid-payload ($path@$offset)")
-    } finally sock.close()
-  }
+    }
 
   /** Ask the owner to warm ITS cache for [offset, offset+length) — the
     * reference's readData RPC (BookKeeper.java:514-617). Returns true iff
@@ -233,24 +213,39 @@ object PeerTransferClient {
     * stalling the caller's direct read for. */
   def warm(addr: InetSocketAddress, path: String, offset: Long, length: Int,
       fileLen: Long, mtime: Long,
-      connectTimeoutMs: Int = 1000, readTimeoutMs: Int = 2000): Boolean = {
+      connectTimeoutMs: Int = 1000, readTimeoutMs: Int = 2000): Boolean =
+    exchange(addr, Some(PeerTransfer.OpWarm),
+        PeerTransfer.Request(path, offset, length, fileLen, mtime),
+        connectTimeoutMs, readTimeoutMs) { in =>
+      readStatus(in, s"peer closed on warm ack ($path@$offset)") == PeerTransfer.StatusOk
+    }
+
+  /** The one request writer: connect, send `r` (after the `op` sentinel
+    * when given), and hand the response stream to `body`. */
+  private def exchange[A](addr: InetSocketAddress, op: Option[Int],
+      r: PeerTransfer.Request, connectTimeoutMs: Int, readTimeoutMs: Int)(
+      body: java.io.InputStream => A): A = {
     val sock = new java.net.Socket()
     try {
       sock.connect(addr, connectTimeoutMs)
       sock.setSoTimeout(readTimeoutMs)
       sock.setTcpNoDelay(true)
-      val pathBytes = path.getBytes(UTF_8)
-      val req = ByteBuffer.allocate(4 + 4 + pathBytes.length + 8 + 4 + 8 + 8)
-      req.putInt(PeerTransfer.OpWarm)
-        .putInt(pathBytes.length).put(pathBytes)
-        .putLong(offset).putInt(length).putLong(fileLen).putLong(mtime)
+      val pathBytes = r.path.getBytes(UTF_8)
+      val req = ByteBuffer.allocate(4 * op.size + 4 + pathBytes.length + 8 + 4 + 8 + 8)
+      op.foreach(req.putInt)
+      req.putInt(pathBytes.length).put(pathBytes)
+        .putLong(r.offset).putInt(r.length).putLong(r.fileLen).putLong(r.mtime)
       val out = sock.getOutputStream
       out.write(req.array(), 0, req.position())
       out.flush()
-      val head = new Array[Byte](4)
-      readFully(sock.getInputStream, head, 0, 4, s"peer closed on warm ack ($path@$offset)")
-      ByteBuffer.wrap(head).getInt == PeerTransfer.StatusOk
+      body(sock.getInputStream)
     } finally sock.close()
+  }
+
+  private def readStatus(in: java.io.InputStream, eofMsg: String): Int = {
+    val head = new Array[Byte](4)
+    readFully(in, head, 0, 4, eofMsg)
+    ByteBuffer.wrap(head).getInt
   }
 
   private def readFully(in: java.io.InputStream, buf: Array[Byte],

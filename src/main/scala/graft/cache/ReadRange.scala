@@ -41,26 +41,4 @@ object ReadRange {
     out += group
     out.result()
   }
-
-  /** Split a range whose backend span exceeds `maxSize` into block-aligned
-    * chunks (ReadRequestChain.java:92-116 semantics). `maxSize` must be a
-    * multiple of the block size for alignment to hold.
-    */
-  def chunk(r: ReadRange, maxSize: Int): Seq[ReadRange] = {
-    if (r.backendLen <= maxSize) return Seq(r)
-    val out = Seq.newBuilder[ReadRange]
-    var bs = r.backendStart
-    while (bs < r.backendEnd) {
-      val be = math.min(bs + maxSize, r.backendEnd)
-      val as = math.max(r.actualStart, bs)
-      val ae = math.min(r.actualEnd, be)
-      // chunks fully inside the affix can have empty actual ranges
-      val aStart = math.min(math.max(as, bs), ae max as)
-      val aEnd = math.max(aStart, ae)
-      out += ReadRange(bs, be, aStart, aEnd,
-        r.destOffset + (aStart - r.actualStart).toInt)
-      bs = be
-    }
-    out.result()
-  }
 }

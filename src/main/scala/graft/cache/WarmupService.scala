@@ -2,11 +2,9 @@ package graft.cache
 
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
-import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
-import java.nio.file.StandardOpenOption
 import scala.collection.mutable
 import com.google.common.collect.{Range => GRange, RangeSet, TreeRangeSet}
+import org.apache.hadoop.fs.PositionedReadable
 
 /** Async parallel-warmup service — the Spark-native restatement of the
   * reference's RemoteFetchProcessor + FileDownloader
@@ -14,12 +12,13 @@ import com.google.common.collect.{Range => GRange, RangeSet, TreeRangeSet}
   * FileDownloader.java:100-239): cache misses return data via the direct
   * path immediately and enqueue a fetch request; a scheduled drain merges
   * requests per file over a delay window (Guava RangeSet coalescing,
-  * newest-mtime conflict resolution), skips already-cached blocks, and
-  * downloads block-aligned ranges on a small executor-local pool.
+  * newest-mtime conflict resolution), skips already-cached blocks and
+  * blocks another node owns, and downloads block-aligned ranges on a
+  * small executor-local pool.
   */
 final class WarmupService(
     manager: CacheManager,
-    openRemote: String => java.io.InputStream with org.apache.hadoop.fs.PositionedReadable) {
+    openRemote: String => java.io.InputStream with PositionedReadable) {
 
   /** `tag`: the enqueuer's [[MetricsTag]], captured at enqueue time so
     * the pool worker can bill the download to the query that caused it
@@ -115,52 +114,43 @@ final class WarmupService(
     scheduled
   }
 
-  /** Download [start, end) block-aligned, skipping cached blocks; mark
-    * cached incrementally per contiguous run (FileDownloadRequestChain
-    * semantics incl. generation-consistency guard). */
+  /** Download [start, end) through the read path's planner and fill
+    * routine (FileDownloader + FileDownloadRequestChain semantics): the
+    * planner's RemoteChain groups are exactly the blocks that are neither
+    * cached nor owned by another node on the ring, chunked to
+    * maxReadRequestSize; each group is one store read handed to
+    * [[CacheManager.fill]]. Planned in windows of at most Int.MaxValue
+    * bytes, the planner's length type. */
   private def download(path: String, start: Long, end: Long, fileLen: Long,
       mtime: Long): Unit = {
+    val bs = conf.blockSize
+    var in: java.io.InputStream with PositionedReadable = null
     try {
-      val bs = conf.blockSize
-      val sb = BlockMath.startBlock(start, bs)
-      val eb = BlockMath.endBlock(start, end - start, bs)
-      val status = manager.getCacheStatus(path, fileLen, mtime, sb, eb)
-      // the delay window often lets foreground reads cache everything:
-      // don't pay a remote open (object-store HEAD) for a no-op download
-      if (!status.blocks.exists(_ != BlockState.Cached)) return
-      val m = manager.metadataFor(path).getOrElse(return)
-      if (m.generation != status.generation) return
-      val in = openRemote(path)
-      try {
-        val f = m.ensureDataFile()
-        val ch = FileChannel.open(f.toPath, StandardOpenOption.WRITE)
-        try {
-          var b = sb
-          while (b < eb) {
-            // find next run of uncached blocks
-            while (b < eb && status.blocks((b - sb).toInt) == BlockState.Cached) b += 1
-            var e2 = b
-            while (e2 < eb && status.blocks((e2 - sb).toInt) != BlockState.Cached &&
-              (e2 - b) * bs < conf.maxReadRequestSize) e2 += 1
-            if (b < e2) {
-              val from = BlockMath.blockStart(b, bs)
-              val to = math.min(BlockMath.blockStart(e2, bs), fileLen)
-              val span = (to - from).toInt
-              // thread-confined pooled scratch (dedicated worker threads)
-              val buf = CachingInputStream.scratchBuffer(span)
-              in.readFully(from, buf, 0, span)
-              val bb = ByteBuffer.wrap(buf, 0, span)
-              var written = 0
-              while (bb.hasRemaining) written += ch.write(bb, from + written)
-              manager.setAllCached(path, fileLen, mtime, status.generation, b, e2)
-              manager.metrics.warmupBytes.addAndGet(span.toLong)
-            }
-            b = e2 + (if (b == e2) 1 else 0)
-          }
-        } finally ch.close()
-      } finally in.close()
+      var pos = start
+      while (pos < end) {
+        val len = math.min(end - pos, Int.MaxValue.toLong).toInt
+        val sb = BlockMath.startBlock(pos, bs)
+        val status = manager.getCacheStatus(path, fileLen, mtime, sb,
+          BlockMath.endBlock(pos, len, bs))
+        ReadPlanner.plan(pos, len, fileLen, bs, conf.maxReadRequestSize,
+          status, sb).foreach {
+          case RemoteChain(rs) =>
+            // open lazily: the delay window often lets foreground reads
+            // cache everything, and a remote open is an object-store HEAD
+            if (in == null) in = openRemote(path)
+            val from = rs.head.backendStart
+            val span = (rs.last.backendEnd - from).toInt
+            // thread-confined pooled scratch (dedicated worker threads)
+            val buf = CachingInputStream.scratchBuffer(span)
+            in.readFully(from, buf, 0, span)
+            manager.fill(path, fileLen, mtime, status.generation, from, buf, span)
+          case _ =>
+        }
+        // the window's last block was planned whole: resume after it
+        pos = BlockMath.alignUp(pos + len, bs)
+      }
     } catch {
       case _: Exception => // warmup is best-effort; misses stay misses
-    }
+    } finally if (in != null) in.close()
   }
 }

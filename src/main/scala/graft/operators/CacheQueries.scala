@@ -511,7 +511,7 @@ object CacheQueries {
       val st = localFs.getFileStatus(ip)
       val cis = new graft.cache.CachingInputStream(
         () => localFs.open(ip), key, st.getLen, st.getModificationTime,
-        peer, true)
+        peer)
       try {
         val buf = new Array[Byte](1 << 20)
         var pos = 0L
@@ -614,7 +614,7 @@ object CacheQueries {
           val out = new java.io.ByteArrayOutputStream(srcBytes.length)
           val cis = new graft.cache.CachingInputStream(
             () => localFs.open(ip), key, st.getLen, st.getModificationTime,
-            mgr, true)
+            mgr)
           try {
             val buf = new Array[Byte](64 * 1024)
             var pos = 0L
@@ -704,7 +704,7 @@ object CacheQueries {
           val out = new java.io.ByteArrayOutputStream(srcBytes.length)
           val cis = new graft.cache.CachingInputStream(
             () => localFs.open(ip), key, st.getLen, st.getModificationTime,
-            mgr, true)
+            mgr)
           try {
             val buf = new Array[Byte](64 * 1024)
             var pos = 0L

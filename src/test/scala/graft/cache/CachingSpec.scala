@@ -59,7 +59,7 @@ trait CacheFixture extends BeforeAndAfterEach { self: AnyFunSuite =>
     val m = if (mgr == null) manager else mgr
     val st = localFs.getFileStatus(new Path(file))
     new CachingInputStream(() => localFs.open(new Path(file)),
-      "file:" + file, st.getLen, st.getModificationTime, m, true)
+      "file:" + file, st.getLen, st.getModificationTime, m)
   }
 
   def readAll(s: CachingInputStream, pos: Long, len: Int): Array[Byte] = {

@@ -106,6 +106,16 @@ class GraftFileSystemSpec extends AnyFunSuite with BeforeAndAfterAll {
       "delete must invalidate the cache entry")
   }
 
+  test("open on a missing graft:// path throws FileNotFoundException") {
+    // Spark keys spark.sql.files.ignoreMissingFiles and its missing-file
+    // error on this exact type
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      java.net.URI.create("graft:///"), spark.sessionState.newHadoopConf())
+    intercept[java.io.FileNotFoundException] {
+      fs.open(new org.apache.hadoop.fs.Path(s"graft://$cacheDir/no-such-file.bin"))
+    }
+  }
+
   test("projection-width admission refuses narrow scans at the FS layer") {
     import org.apache.spark.sql.types._
     // A per-scan FS instance (the fs.graft.impl.disable.cache deployment)

@@ -60,7 +60,13 @@ class ReadRangeSpec extends AnyFunSuite {
 
   test("chunk splits oversized ranges block-aligned") {
     val r = ReadRange(0, 1000, 40, 960, 0)
-    val chunks = ReadRange.chunk(r, 300)
+    // ReadPlanner.plan is the one chunker: each remote group is one chunk
+    val status = CacheStatus(1, Vector.fill(10)(BlockState.Local))
+    val chunks = ReadPlanner.plan(r.actualStart, r.actualLen, 1000, 100, 300,
+      status, 0).collect { case RemoteChain(g) =>
+      ReadRange(g.head.backendStart, g.last.backendEnd,
+        g.head.actualStart, g.last.actualEnd, g.head.destOffset)
+    }
     assert(chunks.map(_.backendLen).sum == 1000)
     assert(chunks.forall(_.backendLen <= 300))
     // actual windows partition the original actual range

@@ -195,8 +195,8 @@ class WarmupServiceSpec extends AnyFunSuite with CacheFixture {
   }
 }
 
-/** Intra-read chain fan-out (readThreads > 0): mixed cached/remote plans
-  * executed concurrently must stay byte-exact and fully warm the cache. */
+/** Many-chain reads: mixed cached/remote plans, their chains run in
+  * order, must stay byte-exact and fully warm the cache. */
 class ParallelChainSpec extends org.scalatest.funsuite.AnyFunSuite with CacheFixture {
   private val content = TestFiles.alphabetContent(1, 200) // 5200 bytes, 52 blocks
 
@@ -205,7 +205,6 @@ class ParallelChainSpec extends org.scalatest.funsuite.AnyFunSuite with CacheFix
     c.setInt(CacheConfig.BlockSizeKey, 100)
     c.set(CacheConfig.CacheDirKey, cacheDir)
     c.setBoolean(CacheConfig.StrictKey, true)
-    c.setInt(CacheConfig.ReadThreadsKey, 4)
     c.setInt(CacheConfig.MaxReadRequestKey, 300) // force many chains
     val mgr = new CacheManager(CacheConfig.from(c))
     val f = TestFiles.write(tmp, "p/par.bin", content)

@@ -32,7 +32,7 @@ object PeerOwnerChild {
     val p = new Path(file)
     val st = fs.getFileStatus(p)
     val cis = new CachingInputStream(() => fs.open(p), "file:" + file,
-      st.getLen, st.getModificationTime, mgr, true)
+      st.getLen, st.getModificationTime, mgr)
     try {
       val buf = new Array[Byte](64 * 1024)
       var pos = 0L

@@ -96,7 +96,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
       val st = localFs.getFileStatus(new Path(f))
       // reader believes a different mtime -> owner's staleness check refuses
       val s = new CachingInputStream(() => localFs.open(new Path(f)),
-        "file:" + f, st.getLen, st.getModificationTime + 1000, reader, true)
+        "file:" + f, st.getLen, st.getModificationTime + 1000, reader)
       val got = readAll(s, 150, 500)
       s.close()
       assert(got.sameElements(content.slice(150, 650)))
