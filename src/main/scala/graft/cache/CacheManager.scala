@@ -228,6 +228,15 @@ final class CacheManager(val conf: CacheConfig,
       Integer.valueOf(if (g == null) 2 else g.intValue + 1))
   }
 
+  /** [[invalidate]] every cached path under directory prefix `dir`
+    * (ends in `/`): a directory deleted or renamed away takes its
+    * children's cached blocks with it. */
+  def invalidateUnder(dir: String): Unit = {
+    val under = new java.util.ArrayList[String]()
+    registry.asMap.keySet.forEach(k => if (k.startsWith(dir)) under.add(k))
+    under.forEach(k => invalidate(k))
+  }
+
   def metadataFor(path: String): Option[FileMetadata] =
     Option(registry.getIfPresent(path))
 

@@ -15,8 +15,16 @@ import org.apache.hadoop.util.Progressable
   *
   * `graft://` wraps an underlying scheme (default `file`, configurable via
   * `graft.underlying.scheme` — `s3a`/`gs`/`abfs` in a real deployment).
-  * Mutations through this FS invalidate eagerly; writes that bypass it
-  * are caught lazily by lastModified compare, like the reference
+  *
+  * File statuses come from one TTL'd file-info cache (`fileInfoCache`):
+  * `getFileStatus`, `listStatus` and `open` all answer a file from it, so
+  * a cache-hit scan (planning `exists`, the file-index listing, each
+  * task's footer open) sends no HEAD or LIST to the store. Only a file's
+  * (length, mtime) is ever cached; directory statuses, directory
+  * listings and missing paths always go to the store, so directory
+  * membership is never stale. Mutations through this FS invalidate
+  * eagerly; writes that bypass it are caught lazily by lastModified
+  * compare once the TTL lapses, like the reference
   * (CachingFileSystem.java:263-306).
   */
 class GraftFileSystem extends FileSystem {
@@ -138,27 +146,53 @@ class GraftFileSystem extends FileSystem {
         .toOption)
       .forall(!Admission.tooNarrow(_, cacheConf.minProjectedColumns))
 
-  // TTL'd (size, mtime) lookup cache — the reference's getFileInfo path
-  // (BookKeeper.java:536-546, rubix.cache.stale.fileinfo.expiry.period):
-  // avoids a remote HEAD per stream open; staleness detection weakens to
-  // the TTL window, the same documented trade the reference makes.
-  private lazy val fileInfoCache: com.google.common.cache.LoadingCache[Path, FileStatus] =
+  // TTL'd file-status cache keyed by inner path — the reference's
+  // getFileInfo path (BookKeeper.java:536-546,
+  // rubix.cache.stale.fileinfo.expiry.period). Serves getFileStatus,
+  // listStatus of a file and open; never holds directories, directory
+  // listings or missing paths. Staleness detection for writes that
+  // bypass this FS weakens to the TTL window, the same documented trade
+  // the reference makes.
+  private lazy val fileInfoCache: com.google.common.cache.Cache[Path, FileStatus] =
     com.google.common.cache.CacheBuilder.newBuilder()
       .maximumSize(100000)
       .expireAfterWrite(java.time.Duration.ofMillis(
         getConf.getLong("graft.cache.fileinfo.ttl.ms", 60000L)))
-      .build(new com.google.common.cache.CacheLoader[Path, FileStatus] {
-        override def load(p: Path): FileStatus = inner.getFileStatus(p)
-      })
+      .build[Path, FileStatus]()
+
+  /** Bumped by every invalidation on this FS. A status fetched from the
+    * store is kept only if no invalidation overlapped its fetch: a HEAD
+    * or LIST that started before a write closed may carry the pre-write
+    * (length, mtime), and caching it would outlive the invalidation for
+    * the whole TTL. */
+  private val invalidations = new java.util.concurrent.atomic.AtomicLong
+
+  /** Cache the files among `fetched` (inner path -> status), one store
+    * answer that started at `epoch`. The put-then-recheck order closes the
+    * race with [[invalidateLocal]], which bumps the counter before it
+    * drops entries: either it drops what was put here, or the recheck
+    * below sees the bump. */
+  private def keep(epoch: Long, fetched: Seq[(Path, FileStatus)]): Unit = {
+    val files = fetched.filter(_._2.isFile)
+    files.foreach { case (ip, st) => fileInfoCache.put(ip, st) }
+    if (invalidations.get != epoch)
+      files.foreach(e => fileInfoCache.invalidate(e._1))
+  }
+
+  /** Inner status of `ip`: the cached file entry, else one store HEAD. */
+  private def status(ip: Path): FileStatus = {
+    val hit = fileInfoCache.getIfPresent(ip)
+    if (hit != null) return hit
+    val epoch = invalidations.get
+    val st = inner.getFileStatus(ip)
+    keep(epoch, Seq(ip -> st))
+    st
+  }
 
   // ---- reads ----
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val ip = toInner(f)
-    // Guava wraps the loader's exception; rethrow the inner FS's own
-    // (Spark matches FileNotFoundException for missing files)
-    val st = try fileInfoCache.get(ip) catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    }
+    val st = status(ip)
     if (!admitted(f) || !st.isFile) return inner.open(ip, bufferSize)
     val stream = new CachingInputStream(
       () => inner.open(ip, bufferSize),
@@ -169,10 +203,19 @@ class GraftFileSystem extends FileSystem {
 
   // ---- metadata (translated) ----
   override def getFileStatus(f: Path): FileStatus =
-    translate(inner.getFileStatus(toInner(f)))
+    translate(status(toInner(f)))
 
-  override def listStatus(f: Path): Array[FileStatus] =
-    inner.listStatus(toInner(f)).map(translate)
+  /** A cached file lists as itself (what `listStatus` of a file returns);
+    * anything else is one store LIST, whose files refresh their entries. */
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val ip = toInner(f)
+    val hit = fileInfoCache.getIfPresent(ip)
+    if (hit != null) return Array(translate(hit))
+    val epoch = invalidations.get
+    val listed = inner.listStatus(ip)
+    keep(epoch, listed.toSeq.map(st => toInner(st.getPath) -> st))
+    listed.map(translate)
+  }
 
   override def getFileBlockLocations(file: FileStatus, start: Long,
       len: Long): Array[BlockLocation] =
@@ -186,16 +229,26 @@ class GraftFileSystem extends FileSystem {
     * reference, whose create/append/rename/delete carry commented-out
     * invalidation TODOs (CachingFileSystem.java:263-306) and rely purely
     * on the lazy lastModified compare. Lazy-only is unsafe here because
-    * the TTL'd fileInfoCache can serve a pre-overwrite (size, mtime) for
-    * up to the TTL window, making a read-after-overwrite through the SAME
-    * filesystem return stale cached bytes. Mutations that bypass this FS
-    * (another writer on the object store) remain lazy, exactly the
-    * reference's documented trade. Directory deletes/renames only drop
-    * the exact path entry; children are caught by the mtime compare once
-    * their fileInfo TTL lapses. */
-  private def invalidateLocal(paths: Path*): Unit = paths.foreach { ip =>
-    fileInfoCache.invalidate(ip)
-    if (manager != null) manager.invalidate(ip.toString)
+    * `fileInfoCache` serves a pre-overwrite (size, mtime) for up to the
+    * TTL window, making a read-after-overwrite through the SAME filesystem
+    * return stale cached bytes. Mutations that bypass this FS (another
+    * writer on the object store) remain lazy, exactly the reference's
+    * documented trade. With `tree`, every file-info and block-cache entry
+    * under the path goes too (directory delete/rename): a child's TTL'd
+    * status would otherwise keep serving it after its directory is gone. */
+  private def invalidateLocal(tree: Boolean, paths: Path*): Unit = {
+    invalidations.incrementAndGet()
+    paths.foreach { ip =>
+      val wasFile = fileInfoCache.asMap.remove(ip) != null
+      if (manager != null) manager.invalidate(ip.toString)
+      // a path cached as a file has nothing under it: skip the key scans
+      // (a job commit renames its output files one by one)
+      if (tree && !wasFile) {
+        val dir = if (ip.toString.endsWith("/")) ip.toString else s"$ip/"
+        fileInfoCache.asMap.keySet.removeIf(_.toString.startsWith(dir))
+        if (manager != null) manager.invalidateUnder(dir)
+      }
+    }
   }
 
   /** Invalidate both at open AND at close of a write stream: a reader
@@ -206,7 +259,7 @@ class GraftFileSystem extends FileSystem {
       out: FSDataOutputStream): FSDataOutputStream =
     new FSDataOutputStream(out, null, out.getPos) {
       override def close(): Unit = {
-        try super.close() finally invalidateLocal(ip)
+        try super.close() finally invalidateLocal(tree = false, ip)
       }
     }
 
@@ -214,7 +267,7 @@ class GraftFileSystem extends FileSystem {
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     val ip = toInner(f)
-    invalidateLocal(ip)
+    invalidateLocal(tree = false, ip)
     invalidatingOnClose(ip, inner.create(ip, permission, overwrite, bufferSize,
       replication, blockSize, progress))
   }
@@ -222,21 +275,21 @@ class GraftFileSystem extends FileSystem {
   override def append(f: Path, bufferSize: Int,
       progress: Progressable): FSDataOutputStream = {
     val ip = toInner(f)
-    invalidateLocal(ip)
+    invalidateLocal(tree = false, ip)
     invalidatingOnClose(ip, inner.append(ip, bufferSize, progress))
   }
 
   override def rename(src: Path, dst: Path): Boolean = {
     val (is, id) = (toInner(src), toInner(dst))
     val ok = inner.rename(is, id)
-    if (ok) invalidateLocal(is, id)
+    if (ok) invalidateLocal(tree = true, is, id)
     ok
   }
 
   override def delete(f: Path, recursive: Boolean): Boolean = {
     val ip = toInner(f)
     val ok = inner.delete(ip, recursive)
-    if (ok) invalidateLocal(ip)
+    if (ok) invalidateLocal(tree = recursive, ip)
     ok
   }
 
