@@ -446,21 +446,6 @@ object Bench {
     val warmRatios = scala.collection.mutable.ListBuffer[Double]()
     var warmDrift = 1.0
     var warmDriftAt = ""
-    // DRILL HOOK (r19): SPARK_GRAFT_WARM_SPIKE=<factor>[:<fromRep>]
-    // inflates the RECORDED warm rep times by <factor> starting at
-    // global warm-rep ordinal <fromRep> (default 0), so the warm-phase
-    // detector can be exercised end to end (trip + artifact fields +
-    // rc=0) without engine changes. Never set by the driver; recorded
-    // medians are poisoned on purpose, exactly like FAIL_QUERY's
-    // synthetic failure.
-    val warmSpikeDrill: Option[(Double, Int)] =
-      sys.env.get("SPARK_GRAFT_WARM_SPIKE").map { v =>
-        v.split(':') match {
-          case Array(f) => (f.toDouble, 0)
-          case Array(f, k) => (f.toDouble, k.toInt)
-        }
-      }
-    var warmRepOrdinal = 0
 
     def currentWarm: Seq[(String, Double, Double, Double)] = names.map { n =>
       val reps = warmReps(n)
@@ -866,13 +851,7 @@ object Bench {
             skipped += s"warm_pass_${seed}_tail:${order.size - i}"
           }
           if (!aborted) {
-            val t0 = materialize(n)
-            val t = warmSpikeDrill match {
-              case Some((f, from)) if t0 >= 0 && warmRepOrdinal >= from =>
-                t0 * f
-              case _ => t0
-            }
-            warmRepOrdinal += 1
+            val t = materialize(n)
             warmReps(n) = warmReps(n) :+ t
             if (t >= 0)
               quiet.meds.get(n).filter(_ > 0).foreach(q => warmRatios += t / q)

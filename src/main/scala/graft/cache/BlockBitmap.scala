@@ -28,6 +28,8 @@ final class BlockBitmap private (val blockCount: Long, bits: BitSet) {
 
   def cardinality: Int = bits.cardinality()
 
+  def clear(): Unit = bits.clear()
+
   /** True iff every block in [startBlock, endBlock) is set. */
   def allSet(startBlock: Long, endBlock: Long): Boolean = {
     var b = startBlock

@@ -28,14 +28,6 @@ final case class CacheConfig(
     strict: Boolean,
     /** Plan + account cache state but never store data (sizing dry-runs). */
     dummyMode: Boolean,
-    /** Enable the async parallel-warmup path (miss -> direct + queue). */
-    parallelWarmup: Boolean,
-    /** Warmup queue: delay before a request becomes eligible (ms). */
-    warmupDelayMs: Long,
-    /** Warmup queue: drain cadence (ms). */
-    warmupDrainMs: Long,
-    /** Warmup downloader thread count. */
-    warmupThreads: Int,
     /** Regex blacklist: matching paths are never cached. */
     skipCachePattern: String,
     /** Table/path whitelist regex; empty = everything allowed. */
@@ -52,10 +44,6 @@ object CacheConfig {
   val MaxReadRequestKey = "graft.cache.max.read.request.size"
   val StrictKey = "graft.cache.strict.mode"
   val DummyKey = "graft.cache.dummy.mode"
-  val ParallelWarmupKey = "graft.cache.parallel.warmup"
-  val WarmupDelayKey = "graft.cache.warmup.delay.ms"
-  val WarmupDrainKey = "graft.cache.warmup.drain.ms"
-  val WarmupThreadsKey = "graft.cache.warmup.threads"
   val SkipPatternKey = "graft.cache.skip.pattern"
   val AllowPatternKey = "graft.cache.allow.pattern"
   val MinColumnsKey = "graft.cache.min.projected.columns"
@@ -71,10 +59,6 @@ object CacheConfig {
     maxReadRequestSize = conf.getInt(MaxReadRequestKey, 8 << 20),
     strict = conf.getBoolean(StrictKey, false),
     dummyMode = conf.getBoolean(DummyKey, false),
-    parallelWarmup = conf.getBoolean(ParallelWarmupKey, false),
-    warmupDelayMs = conf.getLong(WarmupDelayKey, 1000L),
-    warmupDrainMs = conf.getLong(WarmupDrainKey, 200L),
-    warmupThreads = conf.getInt(WarmupThreadsKey, 4),
     skipCachePattern = conf.get(SkipPatternKey, ""),
     allowPattern = conf.get(AllowPatternKey, ""),
     minProjectedColumns = conf.getInt(MinColumnsKey, 0))

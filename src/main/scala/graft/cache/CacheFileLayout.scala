@@ -7,15 +7,19 @@ import java.nio.file.{Files, Paths}
   * CacheUtil.java:162-182,258-310).
   *
   * A remote file `scheme://auth/a/b/name` is cached as
-  * `<cacheDir>/<auth-or-local>/a/b/name_g<N>` with a sibling
+  * `<cacheDir>/<auth-or-local>/a/b/name_g<N>.data` with a sibling
   * `name_mdfile_g<N>` holding the block bitmap. `N` is the generation
   * number: it bumps on every invalidation so concurrent readers of an old
   * generation never observe a half-deleted entry (reference:
-  * FileMetadata.java:125-182).
+  * FileMetadata.java:125-182). Data names end in `.data` and mdfile names
+  * in a digit, so no data file can share a name with an mdfile — without
+  * the suffix, the data file of a remote `x_mdfile` was the mdfile of a
+  * remote `x`.
   */
 object CacheFileLayout {
-  private val GenSuffix = "_g"
-  private val MdInfix = "_mdfile"
+  /** File names of the two kinds: (base name, generation). */
+  private[cache] val DataName = """(.+)_g(\d{1,9})\.data""".r
+  private[cache] val MdName = """(.+)_mdfile_g(\d{1,9})""".r
 
   /** Multi-disk spread: `cacheDir` may be a comma-separated list of
     * directories; a file's disk is chosen by murmur3 of its remote path
@@ -33,7 +37,7 @@ object CacheFileLayout {
     * characters that are invalid unescaped URI syntax (`%`, `+`, spaces),
     * so never round-trip a remote path through java.net.URI. Handles
     * `scheme://authority/path`, `scheme:/path`, and bare `/path`. */
-  private[cache] def splitAuthorityPath(remotePath: String): (String, String) = {
+  private def splitAuthorityPath(remotePath: String): (String, String) = {
     val netIdx = remotePath.indexOf("://")
     if (netIdx >= 0) {
       val rest = remotePath.substring(netIdx + 3)
@@ -59,29 +63,27 @@ object CacheFileLayout {
   private def baseName(remotePath: String): String =
     new File(splitAuthorityPath(remotePath)._2).getName
 
+  private[cache] def dataName(base: String, generation: Int): String =
+    s"${base}_g$generation.data"
+
+  private def dir(cacheDir: String, remotePath: String): File =
+    new File(diskFor(cacheDir, remotePath), relDir(remotePath))
+
   def dataFile(cacheDir: String, remotePath: String, generation: Int): File =
-    new File(new File(diskFor(cacheDir, remotePath), relDir(remotePath)),
-      baseName(remotePath) + GenSuffix + generation)
+    new File(dir(cacheDir, remotePath), dataName(baseName(remotePath), generation))
 
   def mdFile(cacheDir: String, remotePath: String, generation: Int): File =
-    new File(new File(diskFor(cacheDir, remotePath), relDir(remotePath)),
-      baseName(remotePath) + MdInfix + GenSuffix + generation)
+    new File(dir(cacheDir, remotePath), s"${baseName(remotePath)}_mdfile_g$generation")
 
   /** Highest generation for which a data file exists on disk, or 0.
     * Mirrors FileMetadata.findGenerationNumber: after a restart the cache
     * re-adopts the newest complete entry rather than redownloading.
     */
   def findLatestGeneration(cacheDir: String, remotePath: String): Int = {
-    val dir = new File(diskFor(cacheDir, remotePath), relDir(remotePath))
     val base = baseName(remotePath)
-    val files = Option(dir.list()).getOrElse(Array.empty[String])
-    val dataGens = files.collect {
-      case n if n.startsWith(base + GenSuffix) &&
-        n.drop(base.length + GenSuffix.length).forall(_.isDigit) &&
-        n.drop(base.length + GenSuffix.length).nonEmpty =>
-        n.drop(base.length + GenSuffix.length).toInt
-    }
-    if (dataGens.isEmpty) 0 else dataGens.max
+    val gens = Option(dir(cacheDir, remotePath).list()).getOrElse(Array.empty[String])
+      .collect { case DataName(`base`, g) => g.toInt }
+    if (gens.isEmpty) 0 else gens.max
   }
 
   /** Delete data+md files for every generation <= `upTo` (invalidation). */

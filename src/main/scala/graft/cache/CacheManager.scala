@@ -40,9 +40,6 @@ final class CacheManager(val conf: CacheConfig,
     if (usableDiskBytes >= 0) usableDiskBytes
     else CacheManager.diskUsableBytes(conf.cacheDir))
 
-  /** Optional async parallel-warmup service (set by the owning FS). */
-  @volatile var warmup: Option[WarmupService] = None
-
   /** Optional split-ownership resolver (locality ring). When set, uncached
     * blocks of splits owned by another node classify as NonLocal(owner) so
     * reads can try that peer's disk cache before the remote store. */
@@ -179,15 +176,15 @@ final class CacheManager(val conf: CacheConfig,
     true
   }
 
-  /** The one block-fill protocol, shared by read-through
-    * (RemoteReadRequestChain.copyIntoCache + updateCacheStatus) and async
-    * warmup (FileDownloadRequestChain): write the first `len` bytes of
-    * `data`, read from the store at block-aligned `start`, into the sparse
-    * file of `generation`, then mark those blocks cached. Does nothing once
-    * that generation is retired. An entry retired between the guard and
-    * the write (eviction/invalidation) is a lost warm, never an error; any
+  /** The block-fill protocol of read-through
+    * (RemoteReadRequestChain.copyIntoCache + updateCacheStatus), the one
+    * way a miss reaches the cache: write the first `len` bytes of `data`,
+    * read from the store at block-aligned `start`, into the sparse file of
+    * `generation`, then mark those blocks cached. Does nothing once that
+    * generation is retired. An entry retired between the guard and the
+    * write (eviction/invalidation) is a lost warm, never an error; any
     * other failure throws only in strict mode, since the caller's bytes
-    * already came from the store. */
+    * already came from the store, and is otherwise logged. */
   def fill(path: String, fileLen: Long, mtime: Long, generation: Int,
       start: Long, data: Array[Byte], len: Int): Unit =
     try {
@@ -207,7 +204,8 @@ final class CacheManager(val conf: CacheConfig,
     } catch {
       case _: Exception if metadataFor(path)
           .forall(x => x.isDeleted || x.generation != generation) => // lost warm
-      case _: Exception if !conf.strict => // cache miss persists
+      case e: Exception if !conf.strict => // cache miss persists
+        FallbackLog.warn("fill", path, generation, e)
     }
 
   /** Drop metadata + delete cache files + bump generation

@@ -44,21 +44,17 @@ final class CacheMetrics {
   val extraReadBytes = new Counter("extra_read_bytes")
   val evictions = new Counter("evictions")
   val invalidations = new Counter("invalidations")
-  val warmupRequests = new Counter("warmup_requests")
   val warmupBytes = new Counter("warmup_bytes")
   val corruptionFallbacks = new Counter("corruption_fallbacks")
   val bytesFromPeers = new Counter("bytes_from_peers")
   val bytesToPeers = new Counter("bytes_to_peers")
   val peerFallbacks = new Counter("peer_fallbacks")
-  val peerWarmsSent = new Counter("peer_warms_sent")
-  val peerWarmsAccepted = new Counter("peer_warms_accepted")
   val vectoredRanges = new Counter("vectored_ranges")
 
   private def all: Seq[Counter] = Seq(cachedRequests, remoteRequests,
     nonlocalRequests, bytesFromCache, bytesFromRemote, extraReadBytes,
-    evictions, invalidations, warmupRequests, warmupBytes,
-    corruptionFallbacks, bytesFromPeers, bytesToPeers, peerFallbacks,
-    peerWarmsSent, peerWarmsAccepted, vectoredRanges)
+    evictions, invalidations, warmupBytes, corruptionFallbacks,
+    bytesFromPeers, bytesToPeers, peerFallbacks, vectoredRanges)
 
   /** Server-side hit rate: cached / (cached + remote) block requests
     * (reference BookKeeper.java:213-229). */

@@ -43,7 +43,9 @@ final class CacheMetricsSource(val manager: CacheManager) {
   gauge("count.cache_request")(m.cachedRequests.get)
   gauge("count.nonlocal_request")(m.nonlocalRequests.get)
   gauge("count.remote_request")(m.remoteRequests.get)
-  gauge("count.total_async_request")(m.warmupRequests.get)
+  // the reference's async-warmup names: there is no async request here
+  // (a miss fills read-through), and those fills are the downloaded MB
+  gauge("count.total_async_request")(0L)
   gauge("count.async_downloaded_mb")(m.warmupBytes.get >> 20)
 
   // client-side stats (docs/metrics.rst "Client side Metrics")

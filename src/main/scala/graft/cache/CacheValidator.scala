@@ -69,8 +69,12 @@ object CacheValidator {
     // cacheDir may be a comma-separated multi-disk list
     conf.cacheDir.split(',').map(_.trim).filter(_.nonEmpty)
       .foreach(d => walk(new File(d)))
-    val (md, data) = all.partition(_.getName.contains("_mdfile_g"))
-    def genKey(f: File) = f.getPath.replaceFirst("_mdfile_g(\\d+)$", "_g$1")
+    val md = all.filter(f => CacheFileLayout.MdName.matches(f.getName))
+    val data = all.filter(f => CacheFileLayout.DataName.matches(f.getName))
+    def genKey(f: File) = f.getName match {
+      case CacheFileLayout.MdName(base, g) =>
+        new File(f.getParentFile, CacheFileLayout.dataName(base, g.toInt)).getPath
+    }
     val dataSet = data.map(_.getPath).toSet
     val mdSet = md.map(genKey).toSet
     val orphanData = data.filterNot(f => mdSet.contains(f.getPath))

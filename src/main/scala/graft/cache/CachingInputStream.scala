@@ -4,6 +4,7 @@ import java.io.{EOFException, IOException}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
+import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream}
 
 /** Read plan node: a group of collated ranges served by one strategy
@@ -66,8 +67,8 @@ object ReadPlanner {
   }
 
   /** Re-chunk a collated group so no single backend read exceeds max
-    * (ReadRequestChain.java:92-116) — the one chunker: read-through and
-    * async warmup both take their store reads from this planner. */
+    * (ReadRequestChain.java:92-116): every store read of a miss is one
+    * chunk. */
   private def splitGroup(g: Vector[ReadRange], maxSize: Int): Seq[Vector[ReadRange]] = {
     val out = Seq.newBuilder[Vector[ReadRange]]
     var cur = Vector.empty[ReadRange]
@@ -233,22 +234,17 @@ final class CachingInputStream(
     val status =
       try manager.getCacheStatus(path, fileLen, mtime, sb, eb)
       catch {
-        case e: Throwable if !conf.strict =>
+        case NonFatal(e) if !conf.strict =>
+          FallbackLog.warn("status", path,
+            manager.metadataFor(path).fold(-1)(_.generation), e)
           readFullyRemote(at, buf, off, len); return
       }
     ReadPlanner.plan(at, len, fileLen, conf.blockSize,
       conf.maxReadRequestSize, status, sb).foreach {
-      case NonLocalChain(owner, rs) => executeNonLocal(owner, rs, buf, off)
+      case NonLocalChain(owner, rs) =>
+        executeNonLocal(owner, rs, buf, off, status.generation)
       case CachedChain(rs) => executeCached(rs, buf, off)
-      case RemoteChain(rs)
-        if conf.parallelWarmup && manager.warmup.isDefined =>
-        // parallel-warmup routing (NonLocalRequestChain/RemoteFetch
-        // analog): serve the caller via direct reads NOW, warm async
-        readGroupRemote(rs, buf, off)
-        manager.warmup.get.enqueue(path, rs.head.backendStart,
-          rs.last.backendEnd, fileLen, mtime)
-      case RemoteChain(rs) =>
-        executeRemote(rs, buf, off, status.generation)
+      case RemoteChain(rs) => executeRemote(rs, buf, off, status.generation)
     }
   }
 
@@ -317,6 +313,8 @@ final class CachingInputStream(
         manager.metrics.corruptionFallbacks.incrementAndGet()
         manager.invalidate(path)
         if (conf.strict) throw e
+        FallbackLog.warn("cache-read", path,
+          if (m != null) m.generation else -1, e)
         readGroupRemote(rs, buf, bufOff)
     }
   }
@@ -326,38 +324,24 @@ final class CachingInputStream(
     * buffer. Never warms the local cache — the owner's disk is the cache
     * for this split. Any failure (no registered peer, refused status,
     * socket error) falls back to a direct remote read; strict mode throws
-    * (NonLocalReadRequestChain.java:147-157 fallback lattice).
-    *
-    * When the owner REFUSES (alive but range not cached / stale), also
-    * ask it to warm its own cache for this range — the reference's
-    * readData semantics (BookKeeper.java:514-617): without it a
-    * locality-missed read never warms the owner, so repeated misses on a
-    * split scheduled off its owner stay on the slow path forever. Warm is
-    * fire-and-forget on the already-slow fallback path; transport errors
-    * (owner down) send nothing. */
+    * (NonLocalReadRequestChain.java:147-157 fallback lattice). A refusal
+    * asks nothing of the owner: the owner's cache fills from its own
+    * read-through misses. */
   private def executeNonLocal(owner: String, rs: Vector[ReadRange],
-      buf: Array[Byte], bufOff: Int): Unit = {
+      buf: Array[Byte], bufOff: Int, generation: Int): Unit = {
     val start = rs.head.actualStart
     val span = (rs.last.actualEnd - start).toInt
     val dest = bufOff + rs.head.destOffset
-    val addrOpt = PeerRegistry.lookup(owner)
     try {
-      val addr = addrOpt.getOrElse(
+      val addr = PeerRegistry.lookup(owner).getOrElse(
         throw new IOException(s"no peer endpoint registered for $owner"))
       PeerTransferClient.read(addr, path, start, span, fileLen, mtime, buf, dest)
       manager.metrics.bytesFromPeers.addAndGet(span.toLong)
     } catch {
       case e: Exception =>
         manager.metrics.peerFallbacks.incrementAndGet()
-        e match {
-          case r: PeerRefusedException if r.status != PeerTransfer.StatusError =>
-            try {
-              manager.metrics.peerWarmsSent.incrementAndGet()
-              PeerTransferClient.warm(addrOpt.get, path, start, span, fileLen, mtime)
-            } catch { case _: Exception => /* hint only */ }
-          case _ =>
-        }
         if (conf.strict) throw e
+        FallbackLog.warn("peer", path, generation, e)
         readGroupRemote(rs, buf, bufOff)
     }
   }
@@ -381,15 +365,15 @@ final class CachingInputStream(
 
 object CachingInputStream {
 
-  /** Per-thread reusable scratch for remote warmup spans (the reference
+  /** Per-thread reusable scratch for read-through spans (the reference
     * pools direct buffers for the same reason — per-read allocation churns
     * GC at high read concurrency, CachedReadRequestChain.java:109-134).
     * Spans are bounded by maxReadRequestSize; a SoftReference lets the GC
     * reclaim idle buffers under pressure. Thread-confined: a span is
-    * read and filled on one thread (the reader's, or a warmup worker's). */
+    * read and filled on the reader's thread. */
   private val scratchRef = new ThreadLocal[java.lang.ref.SoftReference[Array[Byte]]]
 
-  private[cache] def scratchBuffer(span: Int): Array[Byte] = {
+  private def scratchBuffer(span: Int): Array[Byte] = {
     val ref = scratchRef.get()
     val cur = if (ref == null) null else ref.get()
     if (cur != null && cur.length >= span) cur

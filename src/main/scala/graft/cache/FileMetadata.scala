@@ -95,12 +95,18 @@ final class FileMetadata(
   /** Ensure the sparse data file exists with full logical length. A
     * retired instance must never re-create files its deletion already
     * unlinked (the r14 stress-gate corruption vector: a fresh sparse
-    * file under a bitmap that still claims blocks cached). */
+    * file under a bitmap that still claims blocks cached). For the same
+    * reason, bits only ever describe the data file they were written
+    * into: a bitmap restored without its full-length data file (a crash
+    * between the two unlinks, or a data file left under an older name)
+    * is cleared, and the cleared mdfile persisted, before the file is
+    * (re)created — its holes would otherwise read as cached zeros. */
   def ensureDataFile(): File = synchronized {
     if (deleted)
       throw new java.io.IOException(s"cache entry deleted for $remotePath")
     val f = dataFile
     if (!f.exists() || f.length() != fileLen) {
+      if (bitmap.cardinality > 0) { bitmap.clear(); persist() }
       CacheFileLayout.ensureParent(f)
       val raf = new RandomAccessFile(f, "rw")
       try raf.setLength(fileLen) finally raf.close()

@@ -65,22 +65,7 @@ class GraftFileSystem extends FileSystem {
       projectionAdmitted(conf)
     manager = CacheManager.getOrInit(cacheConf)
     CacheMetricsSource.register(manager)
-    if (cacheConf.parallelWarmup && manager.warmup.isEmpty) manager.synchronized {
-      if (manager.warmup.isEmpty) {
-        val svc = new WarmupService(manager,
-          p => inner.open(new Path(stripScheme(p))))
-        svc.start()
-        manager.warmup = Some(svc)
-      }
-    }
     workingDir = new Path("/")
-  }
-
-  private def stripScheme(p: String): String = {
-    // tolerant split (never URI.create: object-store keys legally hold
-    // unescaped %, +, spaces — see CacheFileLayout.splitAuthorityPath)
-    val path = CacheFileLayout.splitAuthorityPath(p)._2
-    if (path.nonEmpty) path else p
   }
 
   override def getUri: URI = myUri

@@ -22,17 +22,15 @@ import org.apache.spark.sql.SparkSession
   * Resolution order for the current tag:
   *  1. inside a Spark task: `TaskContext.getLocalProperty` (the property
   *     captured at job submission);
-  *  2. an explicitly inherited thread tag (async pools that want to bill
-  *     work to their enqueuer wrap runnables in [[withInherited]]; the
-  *     tagging thread itself carries the same thread tag for driver-side
-  *     reads — footer/schema inference on the query's own thread).
+  *  2. the tagging thread's own thread tag, set by [[withTag]], for
+  *     driver-side reads — footer/schema inference on the query's own
+  *     thread.
   *
   * Deliberately NOT consulted: the thread's Spark local properties.
   * Those are an InheritableThreadLocal, so a pool thread lazily created
   * inside a withTag window would inherit the tag permanently and bill
   * unrelated untagged traffic to a finished query's UUID forever. The
-  * thread tag here is a plain ThreadLocal — child threads see nothing
-  * unless wrapped in [[withInherited]].
+  * thread tag here is a plain ThreadLocal — child threads see nothing.
   *
   * The `anyTags` fast path keeps the untagged hot read path at one
   * volatile load per counter bump.
@@ -66,15 +64,5 @@ object MetricsTag {
       sc.setLocalProperty(Key, prev)
       if (prevThread != null) threadTag.set(prevThread) else threadTag.remove()
     }
-  }
-
-  /** For async pool workers: runs `body` billing metric bumps to `tag`
-    * (typically captured with [[current]] at enqueue time). */
-  def withInherited[T](tag: Option[String])(body: => T): T = tag match {
-    case None => body
-    case Some(t) =>
-      anyTags = true
-      threadTag.set(t)
-      try body finally threadTag.remove()
   }
 }

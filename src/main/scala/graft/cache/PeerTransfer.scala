@@ -31,28 +31,16 @@ object PeerTransfer {
   val StatusStale = 2
   val StatusError = 3
 
-  /** First-int sentinel selecting the warm-on-behalf-of-peer op (the
-    * reference's BookKeeper.readData, BookKeeper.java:514-617): the
-    * requester asks the OWNER to warm the owner's own cache for a range
-    * the owner refused to serve. Read requests start with pathLen > 0,
-    * so a negative sentinel is unambiguous on the wire. */
-  val OpWarm: Int = -2
-
-  /** One request header, as read and written on the wire. */
+  /** One request header, as read off the wire. */
   final case class Request(path: String, offset: Long, length: Int,
       fileLen: Long, mtime: Long)
 }
 
-/** Owner refused the range (not cached / stale / error status) — the peer
-  * is alive and reachable, as opposed to transport failures. Callers use
-  * this to decide a warm request is worth sending. */
-final class PeerRefusedException(msg: String, val status: Int)
-  extends IOException(msg)
-
 /** Executor-local socket server streaming cached byte ranges to peers.
   * Serves only ranges whose blocks are fully cached here — it never
-  * triggers remote reads on behalf of a peer (the requester warms its own
-  * owner-side cache via the normal warmup path). */
+  * triggers remote reads on behalf of a peer: a refused requester reads
+  * the store itself, and this node's cache fills only from its own
+  * read-through misses. */
 final class PeerTransferServer(manager: CacheManager,
     bindHost: String = "127.0.0.1", handlerThreads: Int = 4) {
 
@@ -93,11 +81,8 @@ final class PeerTransferServer(manager: CacheManager,
     var okSent = false
     try {
       ch.setOption[java.lang.Boolean](StandardSocketOptions.TCP_NODELAY, true)
-      val first = readInt(ch)
-      val warm = first == PeerTransfer.OpWarm
-      val r = readRequest(ch, if (warm) readInt(ch) else first).orNull
+      val r = readRequest(ch).orNull
       if (r == null) { reply(ch, PeerTransfer.StatusError); return }
-      if (warm) { handleWarm(ch, r); return }
 
       val m = manager.metadataFor(r.path).orNull
       if (m == null || m.isDeleted) { reply(ch, PeerTransfer.StatusNotCached); return }
@@ -129,9 +114,9 @@ final class PeerTransferServer(manager: CacheManager,
     }
   }
 
-  /** The one request decoder: the header fields after `pathLen`; None
-    * for an out-of-range path length. */
-  private def readRequest(ch: SocketChannel, pathLen: Int): Option[PeerTransfer.Request] = {
+  /** The request decoder; None for an out-of-range path length. */
+  private def readRequest(ch: SocketChannel): Option[PeerTransfer.Request] = {
+    val pathLen = readInt(ch)
     if (pathLen <= 0 || pathLen > (1 << 16)) return None
     val rest = ByteBuffer.allocate(pathLen + 8 + 4 + 8 + 8)
     readFully(ch, rest)
@@ -140,27 +125,6 @@ final class PeerTransferServer(manager: CacheManager,
     rest.get(pathBytes)
     Some(PeerTransfer.Request(new String(pathBytes, UTF_8), rest.getLong,
       rest.getInt, rest.getLong, rest.getLong))
-  }
-
-  /** Warm-on-behalf-of-peer: the same header after the sentinel. The
-    * range is ENQUEUED on this node's WarmupService (the delay-window
-    * merge dedups storms of warm requests for a hot split); StatusOk
-    * means accepted, not yet warm — the requester keeps serving itself
-    * via direct reads until a later locality-missed read hits. */
-  private def handleWarm(ch: SocketChannel, r: PeerTransfer.Request): Unit = {
-    // validate BEFORE enqueue: this is the only wire input that reaches a
-    // shared scheduled task, and a degenerate range would throw inside
-    // the drainer (killing all future drains for the JVM lifetime)
-    if (r.offset < 0 || r.length <= 0 || r.fileLen <= 0 || r.offset >= r.fileLen) {
-      reply(ch, PeerTransfer.StatusError); return
-    }
-    manager.warmup match {
-      case Some(w) =>
-        w.enqueue(r.path, r.offset, math.min(r.offset + r.length, r.fileLen), r.fileLen, r.mtime)
-        manager.metrics.peerWarmsAccepted.incrementAndGet()
-        reply(ch, PeerTransfer.StatusOk)
-      case None => reply(ch, PeerTransfer.StatusNotCached)
-    }
   }
 
   private def reply(ch: SocketChannel, status: Int): Unit = {
@@ -196,56 +160,28 @@ final class PeerTransferServer(manager: CacheManager,
 object PeerTransferClient {
   def read(addr: InetSocketAddress, path: String, offset: Long, length: Int,
       fileLen: Long, mtime: Long, buf: Array[Byte], bufOff: Int,
-      connectTimeoutMs: Int = 2000, readTimeoutMs: Int = 10000): Unit =
-    exchange(addr, None, PeerTransfer.Request(path, offset, length, fileLen, mtime),
-        connectTimeoutMs, readTimeoutMs) { in =>
-      val status = readStatus(in, s"peer closed on header ($path@$offset)")
-      if (status != PeerTransfer.StatusOk)
-        throw new PeerRefusedException(
-          s"peer refused range ($path@$offset+$length): status $status", status)
-      readFully(in, buf, bufOff, length, s"peer closed mid-payload ($path@$offset)")
-    }
-
-  /** Ask the owner to warm ITS cache for [offset, offset+length) — the
-    * reference's readData RPC (BookKeeper.java:514-617). Returns true iff
-    * the owner accepted the request (it warms asynchronously). Short
-    * timeouts: this is an optimization hint on the miss path, never worth
-    * stalling the caller's direct read for. */
-  def warm(addr: InetSocketAddress, path: String, offset: Long, length: Int,
-      fileLen: Long, mtime: Long,
-      connectTimeoutMs: Int = 1000, readTimeoutMs: Int = 2000): Boolean =
-    exchange(addr, Some(PeerTransfer.OpWarm),
-        PeerTransfer.Request(path, offset, length, fileLen, mtime),
-        connectTimeoutMs, readTimeoutMs) { in =>
-      readStatus(in, s"peer closed on warm ack ($path@$offset)") == PeerTransfer.StatusOk
-    }
-
-  /** The one request writer: connect, send `r` (after the `op` sentinel
-    * when given), and hand the response stream to `body`. */
-  private def exchange[A](addr: InetSocketAddress, op: Option[Int],
-      r: PeerTransfer.Request, connectTimeoutMs: Int, readTimeoutMs: Int)(
-      body: java.io.InputStream => A): A = {
+      connectTimeoutMs: Int = 2000, readTimeoutMs: Int = 10000): Unit = {
     val sock = new java.net.Socket()
     try {
       sock.connect(addr, connectTimeoutMs)
       sock.setSoTimeout(readTimeoutMs)
       sock.setTcpNoDelay(true)
-      val pathBytes = r.path.getBytes(UTF_8)
-      val req = ByteBuffer.allocate(4 * op.size + 4 + pathBytes.length + 8 + 4 + 8 + 8)
-      op.foreach(req.putInt)
+      val pathBytes = path.getBytes(UTF_8)
+      val req = ByteBuffer.allocate(4 + pathBytes.length + 8 + 4 + 8 + 8)
       req.putInt(pathBytes.length).put(pathBytes)
-        .putLong(r.offset).putInt(r.length).putLong(r.fileLen).putLong(r.mtime)
+        .putLong(offset).putInt(length).putLong(fileLen).putLong(mtime)
       val out = sock.getOutputStream
       out.write(req.array(), 0, req.position())
       out.flush()
-      body(sock.getInputStream)
+      val in = sock.getInputStream
+      val head = new Array[Byte](4)
+      readFully(in, head, 0, 4, s"peer closed on header ($path@$offset)")
+      val status = ByteBuffer.wrap(head).getInt
+      if (status != PeerTransfer.StatusOk)
+        throw new IOException(
+          s"peer refused range ($path@$offset+$length): status $status")
+      readFully(in, buf, bufOff, length, s"peer closed mid-payload ($path@$offset)")
     } finally sock.close()
-  }
-
-  private def readStatus(in: java.io.InputStream, eofMsg: String): Int = {
-    val head = new Array[Byte](4)
-    readFully(in, head, 0, 4, eofMsg)
-    ByteBuffer.wrap(head).getInt
   }
 
   private def readFully(in: java.io.InputStream, buf: Array[Byte],

@@ -400,10 +400,7 @@ object CacheQueries {
       // warm session-FS counters must not move FOR THIS EXECUTION'S
       // traffic (per-execution MetricsTag — concurrent neighbors may
       // move the globals freely; round 9 needed the serial lane for
-      // this read, tagged counters retired it). warmup_requests bumps
-      // at enqueue time on the scan task's own thread, so a narrow scan
-      // that wrongly triggered warmup is billed to this tag even though
-      // the download itself would run on an (untagged) pool worker.
+      // this read, tagged counters retired it).
       val tagN = "c11n-" + java.util.UUID.randomUUID()
       graft.cache.MetricsTag.withTag(s, tagN) {
         s.read.format("graft").option(floorOpt._1, floorOpt._2).load(path)
@@ -411,8 +408,7 @@ object CacheQueries {
           .write.format("noop").mode("overwrite").save()
       }
       val tmN = m.taggedSnapshot(tagN)
-      val narrowBypassed =
-        tmN("warmup_requests") == 0L && tmN("bytes_from_remote") == 0L
+      val narrowBypassed = tmN("bytes_from_remote") == 0L
       m.dropTag(tagN)
       // wide: the aggregate projects 6 columns, clears the floor; its
       // scan must be served THROUGH the (warm) cache

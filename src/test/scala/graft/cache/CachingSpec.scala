@@ -157,6 +157,40 @@ class CachingInputStreamSpec extends AnyFunSuite with CacheFixture {
     assert(relaxed.metrics.invalidations.get >= 1)
   }
 
+  test("remote x_mdfile and x cache side by side; an mdfile without its data file is not adopted") {
+    val other = content.reverse
+    val a = TestFiles.write(tmp, "d/x_mdfile", content)
+    val b = TestFiles.write(tmp, "d/x", other)
+    val sa = openCaching(a)
+    assert(readAll(sa, 0, content.length).sameElements(content))
+    sa.close()
+    // caching x persists x's mdfile, which must not land on x_mdfile's data
+    val sb = openCaching(b)
+    assert(readAll(sb, 0, 300).sameElements(other.slice(0, 300)))
+    sb.close()
+    val sa2 = openCaching(a)
+    assert(readAll(sa2, 0, 10).sameElements(content.slice(0, 10)),
+      "x_mdfile's cached bytes were overwritten by x's mdfile")
+    sa2.close()
+    val sb2 = openCaching(b)
+    assert(readAll(sb2, 0, 300).sameElements(other.slice(0, 300)))
+    sb2.close()
+
+    // x's data file goes missing under its current name (left under an
+    // older name, or lost between the two unlinks of a crash) while its
+    // mdfile still marks blocks 0-2 cached. After a restart, the miss on
+    // block 5 re-creates the data file sparse; restored bits would then
+    // serve blocks 0-2 as zeros.
+    val data = CacheFileLayout.dataFile(cacheDir, "file:" + b, 1)
+    assert(data.renameTo(new java.io.File(data.getParent, "x_g1")))
+    val restarted = new CacheManager(conf)
+    val s = openCaching(b, restarted)
+    assert(readAll(s, 500, 100).sameElements(other.slice(500, 600)))
+    assert(readAll(s, 0, 300).sameElements(other.slice(0, 300)),
+      "a bitmap restored over a missing data file served a hole")
+    s.close()
+  }
+
   test("dummy mode: stats move, no data stored") {
     val dummyMgr = new CacheManager(mkConf(dummy = true))
     val f = TestFiles.write(tmp, "data/dummy.bin", content)

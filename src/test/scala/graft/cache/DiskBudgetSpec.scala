@@ -59,8 +59,7 @@ class DiskBudgetSpec extends AnyFunSuite with CacheFixture {
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
         else Seq(f)
       if (d.exists())
-        walk(d).filter(f => f.getName.matches(".*_g\\d+") &&
-          !f.getName.contains("_mdfile"))
+        walk(d).filter(f => CacheFileLayout.DataName.matches(f.getName))
       else Nil
     }
     assert(dataFiles.nonEmpty, "surviving entries keep data files on disk")

@@ -109,7 +109,7 @@ class CacheFileLayoutSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-layout").toString
     val remote = "file:///some/deep/path/part-0001.parquet"
     val d2 = CacheFileLayout.dataFile(dir, remote, 2)
-    assert(d2.getPath.endsWith("part-0001.parquet_g2"))
+    assert(d2.getPath.endsWith("part-0001.parquet_g2.data"))
     assert(CacheFileLayout.mdFile(dir, remote, 2).getPath
       .endsWith("part-0001.parquet_mdfile_g2"))
     assert(CacheFileLayout.findLatestGeneration(dir, remote) == 0)

@@ -65,71 +65,11 @@ class CacheAffinitySpec extends AnyFunSuite {
   }
 }
 
-class WarmupServiceSpec extends AnyFunSuite with CacheFixture {
-  private val content = TestFiles.alphabetContent(1, 100)
-
-  private def newService(m: CacheManager): WarmupService = {
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      new org.apache.hadoop.conf.Configuration())
-    new WarmupService(m, p => fs.open(new Path(p)))
-  }
-
-  test("delayed merge: nothing drains inside the delay window") {
-    val f = TestFiles.write(tmp, "w/a.bin", content)
-    val svc = newService(manager)
-    svc.enqueue("file:" + f, 0, 500, content.length.toLong, 1L)
-    assert(svc.drainOnce(System.currentTimeMillis()) == 0,
-      "inside delay window -> not eligible")
-    assert(svc.pendingCount == 1)
-  }
-
-  test("adjacent+overlapping requests coalesce to one download; blocks cached") {
-    val f = TestFiles.write(tmp, "w/b.bin", content)
-    val p = "file:" + f
-    val svc = newService(manager)
-    svc.enqueue(p, 0, 300, content.length.toLong, 1L)
-    svc.enqueue(p, 200, 600, content.length.toLong, 1L)
-    svc.enqueue(p, 300, 700, content.length.toLong, 1L)
-    val scheduled = svc.drainOnce(System.currentTimeMillis() + 10000)
-    assert(scheduled == 1, s"RangeSet must merge to one range, got $scheduled")
-    // wait for the worker
-    val deadline = System.currentTimeMillis() + 5000
-    while (System.currentTimeMillis() < deadline &&
-      !manager.metadataFor(p).exists(_.allCached(0, 7))) Thread.sleep(50)
-    assert(manager.metadataFor(p).exists(_.allCached(0, 7)),
-      "blocks 0-6 must be cached after warmup")
-    // warmed bytes are readable through the cached path
-    val s = openCaching(f)
-    val got = readAll(s, 0, 700)
-    s.close()
-    assert(got.sameElements(content.slice(0, 700)))
-  }
-
-  test("warmup downloads bill the enqueuer's MetricsTag (pool inheritance)") {
-    val f = TestFiles.write(tmp, "w/t.bin", content)
-    val p = "file:" + f
-    val svc = newService(manager)
-    // the enqueue happens on a query thread carrying a tag; the download
-    // runs later on an untagged pool worker — withInherited must carry
-    // the attribution across
-    MetricsTag.withInherited(Some("warm-attrib-test")) {
-      svc.enqueue(p, 0, 500, content.length.toLong, 1L)
-    }
-    assert(svc.drainOnce(System.currentTimeMillis() + 10000) == 1)
-    val deadline = System.currentTimeMillis() + 5000
-    while (System.currentTimeMillis() < deadline &&
-      manager.metrics.taggedSnapshot("warm-attrib-test")("warmup_bytes") == 0L)
-      Thread.sleep(50)
-    val tagged = manager.metrics.taggedSnapshot("warm-attrib-test")
-    assert(tagged("warmup_bytes") > 0L,
-      s"download must bill the enqueuer's tag, got $tagged")
-    manager.metrics.dropTag("warm-attrib-test")
-  }
-
+class MetricsTagSpec extends AnyFunSuite {
   test("threads spawned inside a withTag window do NOT inherit the tag") {
     // A lazily-created pool thread must not permanently bill a finished
     // query's tag (the InheritableThreadLocal leak the local-property
-    // fallback had): only withInherited carries attribution across.
+    // fallback had): the thread tag is a plain ThreadLocal.
     // reuse an already-active session if one exists; otherwise create a
     // private one AND stop it — leaving a stray session active makes
     // later suites' getOrCreate silently inherit the wrong master conf
@@ -151,47 +91,6 @@ class WarmupServiceSpec extends AnyFunSuite with CacheFixture {
         s"child thread inherited the tag: ${seen.get()}")
       assert(MetricsTag.current.isEmpty, "tag must clear after the window")
     } finally if (existing.isEmpty) spark.stop()
-  }
-
-  test("conflicting mtimes: newest wins, stale request dropped") {
-    val f = TestFiles.write(tmp, "w/c.bin", content)
-    val p = "file:" + f
-    val svc = newService(manager)
-    svc.enqueue(p, 0, 300, content.length.toLong, 1000L)
-    svc.enqueue(p, 500, 800, content.length.toLong, 2000L) // newer mtime
-    val scheduled = svc.drainOnce(System.currentTimeMillis() + 10000)
-    assert(scheduled == 1, "only the newest-mtime request survives the merge")
-    val deadline = System.currentTimeMillis() + 5000
-    while (System.currentTimeMillis() < deadline &&
-      !manager.metadataFor(p).exists(_.allCached(5, 8))) Thread.sleep(50)
-    assert(manager.metadataFor(p).exists(_.allCached(5, 8)))
-    assert(manager.metadataFor(p).exists(m => !m.isBlockCached(0)),
-      "stale-mtime range must not be warmed")
-  }
-
-  test("parallel-warmup read path: miss served direct, cache filled async") {
-    val warmConf = {
-      val c = new org.apache.hadoop.conf.Configuration()
-      c.setInt(CacheConfig.BlockSizeKey, 100)
-      c.set(CacheConfig.CacheDirKey, cacheDir)
-      c.setBoolean(CacheConfig.ParallelWarmupKey, true)
-      c.setLong(CacheConfig.WarmupDelayKey, 0L)
-      CacheConfig.from(c)
-    }
-    val m2 = new CacheManager(warmConf)
-    m2.warmup = Some(newService(m2))
-    val f = TestFiles.write(tmp, "w/d.bin", content)
-    val s = openCaching(f, m2)
-    val got = readAll(s, 100, 400)
-    s.close()
-    assert(got.sameElements(content.slice(100, 500)), "miss must serve direct")
-    m2.warmup.get.drainOnce(System.currentTimeMillis() + 10000)
-    val deadline = System.currentTimeMillis() + 5000
-    val p = "file:" + f
-    while (System.currentTimeMillis() < deadline &&
-      !m2.metadataFor(p).exists(_.allCached(1, 5))) Thread.sleep(50)
-    assert(m2.metadataFor(p).exists(_.allCached(1, 5)),
-      "async warmup must cache the missed blocks")
   }
 }
 

@@ -37,8 +37,7 @@ class MultiDiskSpec extends AnyFunSuite with CacheFixture {
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       val root = new java.io.File(d)
       if (root.exists())
-        walk(root).filter(f => f.getName.matches(".*_g\\d+") &&
-          !f.getName.contains("_mdfile"))
+        walk(root).filter(f => CacheFileLayout.DataName.matches(f.getName))
       else Nil
     }
     val perDisk = dirs.map(d => dataFiles(d).size)

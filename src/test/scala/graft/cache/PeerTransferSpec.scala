@@ -133,49 +133,6 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
     }
   }
 
-  test("refusal sends a warm request; owner's cache becomes warm and serves the retry") {
-    withPeers() { (owner, reader, _, f) =>
-      val svc = new WarmupService(owner, p => localFs.open(new Path(p)))
-      owner.warmup = Some(svc)
-      try {
-        // owner has nothing cached: read falls back direct AND asks the
-        // owner to warm itself (reference readData semantics)
-        val s = openCaching(f, reader)
-        val got = readAll(s, 150, 500)
-        s.close()
-        assert(got.sameElements(content.slice(150, 650)))
-        assert(reader.metrics.peerWarmsSent.get == 1)
-        assert(owner.metrics.peerWarmsAccepted.get == 1)
-        assert(svc.pendingCount == 1, "warm range must be queued on the owner")
-
-        // owner drains its warmup queue -> blocks 1..6 ([150,650)) cached
-        assert(svc.drainOnce(System.currentTimeMillis() + 60000) == 1)
-        val deadline = System.currentTimeMillis() + 5000
-        val p = "file:" + f
-        while (System.currentTimeMillis() < deadline &&
-          !owner.metadataFor(p).exists(_.allCached(1, 7))) Thread.sleep(50)
-        assert(owner.metadataFor(p).exists(_.allCached(1, 7)),
-          "owner must have warmed the refused range")
-
-        // the retry is served from the owner's now-warm cache
-        val s2 = openCaching(f, reader)
-        val got2 = readAll(s2, 150, 500)
-        s2.close()
-        assert(got2.sameElements(content.slice(150, 650)))
-        assert(reader.metrics.bytesFromPeers.get == 500,
-          "retry must ride the peer path after the owner warmed")
-      } finally { svc.stop(); owner.warmup = None }
-    }
-  }
-
-  test("owner without a warmup service declines warm requests") {
-    withPeers() { (owner, reader, server, f) =>
-      assert(!PeerTransferClient.warm(server.address, "file:" + f, 0, 500,
-        content.length.toLong, 1L))
-      assert(owner.metrics.peerWarmsAccepted.get == 0)
-    }
-  }
-
   test("transport failure (owner down) sends no warm request") {
     withPeers() { (owner, reader, server, f) =>
       server.close() // endpoint registered but nobody listening
@@ -184,8 +141,6 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
       s.close()
       assert(got.sameElements(content.slice(0, 300)))
       assert(reader.metrics.peerFallbacks.get >= 1)
-      assert(reader.metrics.peerWarmsSent.get == 0,
-        "a dead owner must not receive warm hints")
     }
   }
 
