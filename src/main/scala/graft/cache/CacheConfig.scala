@@ -22,7 +22,8 @@ final case class CacheConfig(
       * BookKeeper.java:656-670 getCacheAvailableSize). Combined with
       * maxSizeMB by taking the minimum; <=0 disables disk-based sizing. */
     diskFullnessPercentage: Int,
-    /** Max bytes a single collated read request may span before chunking. */
+    /** The largest file a miss fetches whole, and the largest span held
+      * in memory for one group of missed blocks. */
     maxReadRequestSize: Int,
     /** Throw instead of falling back to direct reads (test mode). */
     strict: Boolean,

@@ -3,7 +3,7 @@ package graft.cache
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import com.google.common.cache.{CacheBuilder, RemovalListener, RemovalNotification, Weigher, Cache => GCache}
 
 /** Block-location state for one block of one file (reference thrift enum
@@ -144,21 +144,23 @@ final class CacheManager(val conf: CacheConfig,
 
   /** Per-block cache state for [startBlock, endBlock) of `path`
     * (BookKeeper.getCacheStatus:249-353; single-node: every block is
-    * either Cached or Local). */
+    * either Cached or Local). Each block counts as one cached, non-local
+    * or remote request unless `counted` is false. */
   def getCacheStatus(path: String, fileLen: Long, mtime: Long,
-      startBlock: Long, endBlock: Long): CacheStatus = {
+      startBlock: Long, endBlock: Long, counted: Boolean = true): CacheStatus = {
     val m = metadata(path, fileLen, mtime)
     val own = ownership
+    def count(c: metrics.Counter): Unit = if (counted) c.incrementAndGet()
     val states = (startBlock until endBlock).map { b =>
-      if (m.isBlockCached(b)) { metrics.cachedRequests.incrementAndGet(); BlockState.Cached: BlockState }
+      if (m.isBlockCached(b)) { count(metrics.cachedRequests); BlockState.Cached: BlockState }
       else own.flatMap(o =>
         o.resolve(path, BlockMath.blockStart(b, conf.blockSize))
           .filter(_ != o.selfNode)) match {
         case Some(owner) =>
-          metrics.nonlocalRequests.incrementAndGet()
+          count(metrics.nonlocalRequests)
           BlockState.NonLocal(owner): BlockState
         case None =>
-          metrics.remoteRequests.incrementAndGet(); BlockState.Local: BlockState
+          count(metrics.remoteRequests); BlockState.Local: BlockState
       }
     }
     CacheStatus(m.generation, states.toIndexedSeq)
@@ -184,9 +186,11 @@ final class CacheManager(val conf: CacheConfig,
     * generation is retired. An entry retired between the guard and the
     * write (eviction/invalidation) is a lost warm, never an error; any
     * other failure throws only in strict mode, since the caller's bytes
-    * already came from the store, and is otherwise logged. */
+    * already came from the store, and is otherwise logged. Every call is
+    * timed in `cacheFill`. */
   def fill(path: String, fileLen: Long, mtime: Long, generation: Int,
-      start: Long, data: Array[Byte], len: Int): Unit =
+      start: Long, data: Array[Byte], len: Int): Unit = {
+    val t0 = System.nanoTime()
     try {
       val m = registry.getIfPresent(path)
       if (m != null && m.generation == generation && !m.isDeleted) {
@@ -206,7 +210,8 @@ final class CacheManager(val conf: CacheConfig,
           .forall(x => x.isDeleted || x.generation != generation) => // lost warm
       case e: Exception if !conf.strict => // cache miss persists
         FallbackLog.warn("fill", path, generation, e)
-    }
+    } finally metrics.cacheFill.update(System.nanoTime() - t0, TimeUnit.NANOSECONDS)
+  }
 
   /** Drop metadata + delete cache files + bump generation
     * (BookKeeper.invalidateFileMetadata:749-756). Serialized with

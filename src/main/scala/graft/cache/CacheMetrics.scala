@@ -51,6 +51,12 @@ final class CacheMetrics {
   val peerFallbacks = new Counter("peer_fallbacks")
   val vectoredRanges = new Counter("vectored_ranges")
 
+  /** Latency of each store GET of a miss, and of each cache fill. Not
+    * tag-attributed and not cleared by [[reset]]; the hit path has no
+    * timer. */
+  val remoteFetch = new com.codahale.metrics.Timer
+  val cacheFill = new com.codahale.metrics.Timer
+
   private def all: Seq[Counter] = Seq(cachedRequests, remoteRequests,
     nonlocalRequests, bytesFromCache, bytesFromRemote, extraReadBytes,
     evictions, invalidations, warmupBytes, corruptionFallbacks,

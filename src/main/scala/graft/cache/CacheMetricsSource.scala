@@ -55,6 +55,10 @@ final class CacheMetricsSource(val manager: CacheManager) {
   gauge("count.nonlocal_read_mb")(m.bytesFromPeers.get >> 20)
   gauge("count.corruption_fallback")(m.corruptionFallbacks.get)
   gauge("count.peer_fallback")(m.peerFallbacks.get)
+
+  // latency distributions of the miss path (none on the hit path)
+  metricRegistry.register("timer.remote_fetch", m.remoteFetch)
+  metricRegistry.register("timer.cache_fill", m.cacheFill)
 }
 
 object CacheMetricsSource {

@@ -1,9 +1,10 @@
 package graft.cache
 
-import java.io.{EOFException, IOException}
+import java.io.{EOFException, IOException, InterruptedIOException}
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
+import java.util.concurrent.TimeUnit
 import scala.util.control.NonFatal
 import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream}
 
@@ -16,6 +17,9 @@ final case class RemoteChain(ranges: Vector[ReadRange]) extends PlannedChain
 /** Peer-cache read from the split owner's disk (NonLocalReadRequestChain). */
 final case class NonLocalChain(owner: String, ranges: Vector[ReadRange]) extends PlannedChain
 
+/** Pure read planning. [[plan]] routes a read's blocks to chains by cache
+  * state; [[widen]] names the blocks a miss in a small file fetches
+  * beyond the request. */
 object ReadPlanner {
 
   /** Pure chain planner (port of CachingInputStream.setupReadRequestChains,
@@ -66,6 +70,21 @@ object ReadPlanner {
     chains.result()
   }
 
+  /** The blocks a miss fetches beyond the request's blocks
+    * [`reqStart`, `reqEnd`), as block ranges with an empty caller window
+    * (all of a block's bytes count as extra reads): every `Local` block of
+    * a file no longer than `maxReadRequestSize`, none of a larger file.
+    * `whole` is the status of every block of the file. A `Cached` block
+    * is already on disk, and a `NonLocal` block is its owner's to cache. */
+  def widen(fileLen: Long, blockSize: Int, maxReadRequestSize: Int,
+      whole: IndexedSeq[BlockState], reqStart: Long, reqEnd: Long): Vector[ReadRange] =
+    if (fileLen > maxReadRequestSize) Vector.empty
+    else whole.indices.toVector.collect {
+      case b if (b < reqStart || b >= reqEnd) && whole(b) == BlockState.Local =>
+        val bs = BlockMath.blockStart(b, blockSize)
+        ReadRange(bs, BlockMath.blockEnd(b, blockSize, fileLen), bs, bs, 0)
+    }
+
   /** Re-chunk a collated group so no single backend read exceeds max
     * (ReadRequestChain.java:92-116): every store read of a miss is one
     * chunk. */
@@ -91,10 +110,15 @@ object ReadPlanner {
   *  - Cached: positioned FileChannel reads from the local generation file;
   *    any failure invalidates the entry and falls back to a direct read
   *    (CachedReadRequestChain.java:149-223 fallback lattice).
-  *  - Remote (read-through warmup): reads block-aligned spans from the
-  *    source, returns the requested window, writes whole blocks into the
-  *    sparse cache file and marks them cached
-  *    (RemoteReadRequestChain.java:41-214 incl. affix accounting).
+  *  - Remote (read-through fill): reads block-aligned spans from the
+  *    source, one GET per collated group, returns the requested window,
+  *    writes whole blocks into the sparse cache file and marks them cached
+  *    (RemoteReadRequestChain.java:41-214 incl. affix accounting). A miss
+  *    in a file no longer than `maxReadRequestSize` also fetches every
+  *    uncached block of the file this node owns ([[ReadPlanner.widen]]),
+  *    in the same GETs, so a later read elsewhere in it is a hit: a
+  *    parquet footer read and the column-chunk read after it pay one GET,
+  *    not two.
   *  - Direct: pass-through, used for dummy mode and fallbacks
   *    (DirectReadRequestChain.java).
   */
@@ -239,13 +263,33 @@ final class CachingInputStream(
             manager.metadataFor(path).fold(-1)(_.generation), e)
           readFullyRemote(at, buf, off, len); return
       }
-    ReadPlanner.plan(at, len, fileLen, conf.blockSize,
-      conf.maxReadRequestSize, status, sb).foreach {
+    val chains = ReadPlanner.plan(at, len, fileLen, conf.blockSize,
+      conf.maxReadRequestSize, status, sb)
+    chains.foreach {
       case NonLocalChain(owner, rs) =>
         executeNonLocal(owner, rs, buf, off, status.generation)
       case CachedChain(rs) => executeCached(rs, buf, off)
-      case RemoteChain(rs) => executeRemote(rs, buf, off, status.generation)
+      case RemoteChain(_) =>
     }
+    val misses = chains.collect { case RemoteChain(rs) => rs }
+    // a small file's misses take its other uncached blocks along; the
+    // file fits the cap, so each contiguous run of blocks is one GET
+    val groups =
+      if (misses.isEmpty || fileLen > conf.maxReadRequestSize) misses
+      else ReadRange.collate((misses.flatten ++
+        widened(sb, eb, status.generation)).sortBy(_.backendStart))
+    groups.foreach(executeRemote(_, buf, off, status.generation))
+  }
+
+  /** [[ReadPlanner.widen]] over the whole file's status, looked up
+    * without counting requests: `cache.hit_ratio` counts requested blocks
+    * only. Nothing when the file changed generation since `generation`. */
+  private def widened(sb: Long, eb: Long, generation: Int): Vector[ReadRange] = {
+    val whole = manager.getCacheStatus(path, fileLen, mtime, 0,
+      BlockMath.blockCount(fileLen, conf.blockSize), counted = false)
+    if (whole.generation != generation) Vector.empty
+    else ReadPlanner.widen(fileLen, conf.blockSize, conf.maxReadRequestSize,
+      whole.blocks, sb, eb)
   }
 
   /** Serve a COLLATED group's user windows with ONE source read: ranges
@@ -346,13 +390,22 @@ final class CachingInputStream(
     }
   }
 
+  /** One collated group = one contiguous GET, timed in `remoteFetch`.
+    * A failed GET of a group of widened blocks only (empty caller
+    * windows) leaves them misses; strict mode throws. */
   private def executeRemote(rs: Vector[ReadRange], buf: Array[Byte],
       bufOff: Int, generation: Int): Unit = {
-    // one collated group = one contiguous backend span
     val backendStart = rs.head.backendStart
     val span = (rs.last.backendEnd - backendStart).toInt
     val scratch = CachingInputStream.scratchBuffer(span)
-    readFullyRemote(backendStart, scratch, 0, span)
+    val t0 = System.nanoTime()
+    try readFullyRemote(backendStart, scratch, 0, span)
+    catch {
+      case e: InterruptedIOException => throw e
+      case NonFatal(e) if !conf.strict && rs.forall(_.actualLen == 0) =>
+        FallbackLog.warn("fill", path, generation, e); return
+    }
+    manager.metrics.remoteFetch.update(System.nanoTime() - t0, TimeUnit.NANOSECONDS)
     // hand the caller their windows
     rs.foreach { r =>
       System.arraycopy(scratch, (r.actualStart - backendStart).toInt,

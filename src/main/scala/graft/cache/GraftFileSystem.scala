@@ -175,12 +175,19 @@ class GraftFileSystem extends FileSystem {
   }
 
   // ---- reads ----
+  /** A cached file's inner stream opens with the status `open` already
+    * holds (`openFile().withFileStatus`, Hadoop 3.3+): S3A's plain `open`
+    * sends a HEAD. A file that is not admitted opens as plain `open` does,
+    * which asks the store afresh. */
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val ip = toInner(f)
     val st = status(ip)
     if (!admitted(f) || !st.isFile) return inner.open(ip, bufferSize)
-    val stream = new CachingInputStream(
-      () => inner.open(ip, bufferSize),
+    val stream = new CachingInputStream(() =>
+      org.apache.hadoop.util.functional.FutureIO.awaitFuture(
+        inner.openFile(ip).withFileStatus(st)
+          .optLong(Options.OpenFileOptions.FS_OPTION_OPENFILE_BUFFER_SIZE, bufferSize)
+          .build()),
       ip.toString, st.getLen, st.getModificationTime, manager)
     new FSDataInputStream(new BufferedFSInputStream(stream,
       math.max(bufferSize, 4096)))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.SparkSession
+
 /** Overlap independent Spark ACTIONS from driver threads (guide §2.6:
   * actions are only sequential because driver code calls them
   * sequentially — submitting independent output writes concurrently
@@ -20,29 +22,49 @@ package graft.operators
   * ~0.7 s/micro-batch to exactly that sequential composition seam.
   */
 private[graft] object Par {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Par")
 
   /** A scope of overlapped actions. Not thread-safe for concurrent
-    * `launch` calls from multiple threads (the composing thread is one). */
+    * `launch` calls from multiple threads (the composing thread is one).
+    * Every action's Spark jobs carry the scope's job tag (on the
+    * SparkContext of the session active at scope creation), so
+    * [[cancelAll]] can cancel them: interrupting the thread that waits
+    * for a job does not cancel the job. A tag is added next to the job
+    * group and description the pool threads inherit, and leaves them as
+    * they are. */
   final class Scope private[Par] () {
     private val pool = java.util.concurrent.Executors.newCachedThreadPool()
     private val futs =
       scala.collection.mutable.ArrayBuffer[java.util.concurrent.Future[_]]()
+    private val sc = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    private val tag = s"graft-par-${java.util.UUID.randomUUID()}"
 
     /** Submit one action; returns immediately. */
     def launch(w: () => Unit): Unit =
       futs += pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = w()
+        def call(): Unit = {
+          // the pool's threads are this scope's own: the tag stays on them
+          sc.foreach { c => c.addJobTag(tag); c.setInterruptOnCancel(true) }
+          w()
+        }
       })
+
+    private def cancelJobs(): Unit = sc.foreach(_.cancelJobsWithTag(tag))
 
     /** Best-effort teardown after a composition failure: cancel
       * everything in flight so no write outlives the batch that
       * launched it (r18 advice — a detached job after an interrupt let
-      * the caller believe the batch finished). */
+      * the caller believe the batch finished). The tagged jobs are
+      * cancelled before the threads are interrupted, and again once
+      * they stopped, for a job submitted in between. */
     private[Par] def cancelAll(): Unit = {
+      cancelJobs()
       futs.foreach(_.cancel(true))
       pool.shutdownNow()
-      pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS)
-      ()
+      if (!pool.awaitTermination(30, java.util.concurrent.TimeUnit.SECONDS))
+        log.warn("Par scope: launched actions still running 30 s after cancel")
+      cancelJobs()
     }
 
     /** Join all launched actions. First failure rethrown with its

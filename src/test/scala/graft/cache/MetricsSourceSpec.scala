@@ -51,6 +51,20 @@ class MetricsSourceSpec extends AnyFunSuite with CacheFixture {
       manager.totalWeightKB / 1024)
   }
 
+  test("miss-path timers: one remote_fetch per GET, one cache_fill per fill, none on a hit") {
+    val src = new CacheMetricsSource(manager)
+    val timers = src.metricRegistry.getTimers
+    assert(timers.keySet().asScala == Set("timer.remote_fetch", "timer.cache_fill"))
+    def counts = (timers.get("timer.remote_fetch").getCount,
+      timers.get("timer.cache_fill").getCount)
+    val f = TestFiles.write(tmp, "data/timers.bin", TestFiles.alphabetContent(1, 100))
+    // blocks 0-9 and 12-21 of a file above the cap: two GETs, two fills
+    val s1 = openCaching(f); readAll(s1, 0, 1000); readAll(s1, 1200, 1000); s1.close()
+    assert(counts == ((2L, 2L)))
+    val s2 = openCaching(f); readAll(s2, 0, 1000); s2.close()
+    assert(counts == ((2L, 2L)))
+  }
+
   test("source registers into a live Spark MetricsSystem") {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false").getOrCreate()
