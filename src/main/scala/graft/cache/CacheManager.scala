@@ -40,6 +40,11 @@ final class CacheManager(val conf: CacheConfig,
     if (usableDiskBytes >= 0) usableDiskBytes
     else CacheManager.diskUsableBytes(conf.cacheDir))
 
+  /** `conf` with `cacheDir` resolved to the directories this JVM owns
+    * ([[CacheDirOwner]]): every cache file of this manager lives there. */
+  private val layout: CacheConfig =
+    conf.copy(cacheDir = CacheDirOwner.claim(conf.cacheDir))
+
   /** Optional split-ownership resolver (locality ring). When set, uncached
     * blocks of splits owned by another node classify as NonLocal(owner) so
     * reads can try that peer's disk cache before the remote store. */
@@ -86,7 +91,11 @@ final class CacheManager(val conf: CacheConfig,
   }
 
   private[cache] val registry: GCache[String, FileMetadata] = {
-    val b = CacheBuilder.newBuilder().removalListener(removal)
+    // one segment, so the budget is one LRU: Guava enforces
+    // maximumWeight per segment, and evicts a file heavier than its
+    // segment's share on the very put that weighs it
+    val b = CacheBuilder.newBuilder().concurrencyLevel(1)
+      .removalListener(removal)
     (if (budgetKB > 0)
       b.weigher(new Weigher[String, FileMetadata] {
           override def weigh(k: String, v: FileMetadata): Int = v.weightKB
@@ -98,7 +107,7 @@ final class CacheManager(val conf: CacheConfig,
   private def currentGeneration(path: String): Int =
     generations.computeIfAbsent(path,
       p => Integer.valueOf(
-        math.max(1, CacheFileLayout.findLatestGeneration(conf.cacheDir, p)))).intValue
+        math.max(1, CacheFileLayout.findLatestGeneration(layout.cacheDir, p)))).intValue
 
   private def metadata(path: String, fileLen: Long, mtime: Long): FileMetadata = {
     val gen = currentGeneration(path)
@@ -134,7 +143,7 @@ final class CacheManager(val conf: CacheConfig,
         if (again != null && again.generation == gen2 && !again.isDeleted &&
           again.matches(fileLen, mtime)) again
         else {
-          val m = new FileMetadata(path, fileLen, mtime, gen2, conf)
+          val m = new FileMetadata(path, fileLen, mtime, gen2, layout)
           registry.put(path, m)
           m
         }
@@ -224,7 +233,7 @@ final class CacheManager(val conf: CacheConfig,
       m.deleteFiles()
       registry.invalidate(path)
     } else {
-      CacheFileLayout.deleteGenerations(conf.cacheDir, path,
+      CacheFileLayout.deleteGenerations(layout.cacheDir, path,
         currentGeneration(path))
     }
     generations.compute(path, (_, g) =>

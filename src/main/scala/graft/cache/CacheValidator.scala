@@ -66,9 +66,13 @@ object CacheValidator {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(walk))
       else all += f
     }
-    // cacheDir may be a comma-separated multi-disk list
+    // cacheDir may be a comma-separated multi-disk list. Another JVM's
+    // private `.jvm-*` directory is not this layout; the `.lock` file
+    // matches neither name pattern below.
     conf.cacheDir.split(',').map(_.trim).filter(_.nonEmpty)
-      .foreach(d => walk(new File(d)))
+      .flatMap(d => Option(new File(d).listFiles()).toSeq.flatten)
+      .filterNot(_.getName.startsWith(CacheDirOwner.PrivatePrefix))
+      .foreach(walk)
     val md = all.filter(f => CacheFileLayout.MdName.matches(f.getName))
     val data = all.filter(f => CacheFileLayout.DataName.matches(f.getName))
     def genKey(f: File) = f.getName match {

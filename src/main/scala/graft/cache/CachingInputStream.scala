@@ -249,9 +249,14 @@ final class CachingInputStream(
     val sb = BlockMath.startBlock(at, conf.blockSize)
     val eb = BlockMath.endBlock(at, len, conf.blockSize)
     if (conf.dummyMode) {
-      // shadow mode: account cache state, store nothing
+      // shadow mode: account the cache state a real read leaves (a miss
+      // in a small file fills the whole file), store nothing
       val st = manager.getCacheStatus(path, fileLen, mtime, sb, eb)
-      manager.setAllCached(path, fileLen, mtime, st.generation, sb, eb)
+      val whole = fileLen <= conf.maxReadRequestSize &&
+        st.blocks.exists(_ != BlockState.Cached)
+      manager.setAllCached(path, fileLen, mtime, st.generation,
+        if (whole) 0L else sb,
+        if (whole) BlockMath.blockCount(fileLen, conf.blockSize) else eb)
       readFullyRemote(at, buf, off, len)
       return
     }

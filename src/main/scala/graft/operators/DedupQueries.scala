@@ -462,7 +462,7 @@ object DedupQueries {
         |  CAST(inter * 1000 // (a.n + b.n - inter) AS BIGINT) AS jac_permille
         |FROM i JOIN n a ON a.doc_id = doc_a JOIN n b ON b.doc_id = doc_b
         |WHERE 3 * inter >= a.n + b.n""".stripMargin) { (s, dir) =>
-      setSimJoin(s, dir, cap = Some(1000L))
+      setSimJoin(s, dir, cap = 1000L)
     },
 
     // ---- EXACT substring dedup (d45): the exact tier of the substring
@@ -847,14 +847,13 @@ object DedupQueries {
     }
   )
 
-  /** The d42 PPJoin body. `cap` bounds the corpus to doc_id < cap — the
+  /** The d42 PPJoin body over the documents with doc_id < `cap`: the
     * GATE uses 1000 so the oracle's naive all-token self-join stays
-    * tractable in DuckDB; the scale probe (SCALE.md) runs uncapped,
-    * because a capped input measures a constant workload at every SF. */
+    * tractable in DuckDB. SCALE.md's d42 section measured it uncapped,
+    * through a probe main whose source is at commit a601823. */
   def setSimJoin(s: org.apache.spark.sql.SparkSession, dir: String,
-      cap: Option[Long]): org.apache.spark.sql.DataFrame = {
-    val docs0 = Tables.load(s, dir, "documents")
-    val docs = cap.fold(docs0)(c => docs0.filter(col("doc_id") < c))
+      cap: Long): org.apache.spark.sql.DataFrame = {
+    val docs = Tables.load(s, dir, "documents").filter(col("doc_id") < cap)
     val toks = docs
       .select(col("doc_id"), explode(
         array_distinct(graft.functions.TextStats.wsTokensCol(col("text")))).as("t"))

@@ -35,19 +35,14 @@ object GraphQueries {
     * broadcastTimeout at mid-scale SFs the small-SF bench never
     * exercises. Cap in ESTIMATED BYTES instead: rows × an estimated
     * hashed-relation row width (key + payload + table overhead, ~64 B)
-    * against a conf-able budget whose 256 MB default sits comfortably
-    * inside any sane driver/executor memory (guide §3.1: "a few hundred
-    * MB is usually fine; multiple GB is asking for driver OOMs").
+    * against a fixed 256 MB budget, which sits comfortably inside any
+    * sane driver/executor memory (guide §3.1: "a few hundred MB is
+    * usually fine; multiple GB is asking for driver OOMs").
     * Returns the broadcast hint under the budget, identity (shuffle
     * fallback) above it — plan choice only, values identical. */
-  private[operators] def bcUnder(s: org.apache.spark.sql.SparkSession,
-      rows: Long, rowBytes: Long = 64L):
-      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
-    val budget = s.conf.getOption("graft.graph.broadcast.max.bytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(256L << 20)
-    if (rows * rowBytes <= budget) broadcast else identity
-  }
+  private[operators] def bcUnder(rows: Long, rowBytes: Long = 64L):
+      org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+    if (rows * rowBytes <= (256L << 20)) broadcast else identity
 
   private def pagerankOracle(iters: Int): String = {
     val head =
@@ -93,14 +88,14 @@ object GraphQueries {
       // iteration join runs map-side over the persisted edges instead of
       // exchanging them every pass (sum over the same rows; exact
       // integer arithmetic is order-independent, values unchanged).
-      // r19: cap sized in bytes ([[bcUnder]]), default 256 MB ≈ 4M nodes
+      // r19: cap sized in bytes ([[bcUnder]]), 256 MB ≈ 4M nodes
       // (was a raw 32M-node cap — ~2 GB hashed at the boundary). The
       // repeated broadcast(deg) inside the loop builds ONE exchange:
       // every iteration's subtree is identical, so ReuseExchange
       // collapses them in the executed plan (d30's after-plan shows a
       // single BroadcastExchange for deg reused across iterations).
       val nNodes = deg.count()
-      val bc = bcUnder(s, nNodes)
+      val bc = bcUnder(nNodes)
       var ranks = deg.select(col("node"), lit(RankScale).as("r"))
       (0 until Iters).foreach { _ =>
         // share = rank div degree, joined once per iteration; broadcast
@@ -169,8 +164,9 @@ object GraphQueries {
     // either engine) — so the estimator output itself rides the hash
     // oracle, and the relative-error contract vs the exact count rides
     // in-band (err_ok; the exact arm is the same gate-scale cost d41
-    // already pays — ScaleProbe's d56_estimator_only arm probes the
-    // sampling path alone, which is what a production run executes).
+    // already pays — SCALE.md r12 "d56 estimator vs d41 exact" times
+    // the sampling path alone, which is what a production run executes;
+    // the probe harness source is at commit a601823).
     // Scale shape: sampling is a codegen filter on the persisted edge
     // list; the sampled graph re-runs the same degree-ordered
     // orientation with ~p× edges and ~p²× wedge volume — the estimator
@@ -255,7 +251,7 @@ object GraphQueries {
     // b). r19: the raw 16M-edge cap became the byte-sized budget
     // ([[bcUnder]]; deg sized at its 2·|E| row bound).
     val edgeCount = e.count()
-    val degSide = bcUnder(e.sparkSession, 2L * edgeCount)
+    val degSide = bcUnder(2L * edgeCount)
     val oriented = e
       .join(degSide(deg.select(col("node").as("a"), col("d").as("da"))), Seq("a"))
       .join(degSide(deg.select(col("node").as("b"), col("d").as("db"))), Seq("b"))
@@ -279,7 +275,7 @@ object GraphQueries {
       .select(col("o1.src").as("u"),
         least(col("o1.dst"), col("o2.dst")).as("va"),
         greatest(col("o1.dst"), col("o2.dst")).as("vb"))
-    val closeSide = bcUnder(e.sparkSession, edgeCount)(e)
+    val closeSide = bcUnder(edgeCount)(e)
     wedges
       .join(closeSide, col("va") === col("a") && col("vb") === col("b"))
       .select(col("u"), col("va"), col("vb"))

@@ -264,7 +264,7 @@ object PipelineQueries {
       sem: DataFrame, sp: DataFrame, lshOk: DataFrame)
 
   private[graft] def build(s: SparkSession, dir: String): Stages = {
-    // Every eager checkpoint routes through SeamClock.ck (r17): identical
+    // Every seam checkpoint routes through SeamClock.ck (r17): identical
     // semantics, but the bench shared lane records each barrier's name +
     // wall seconds so the chains' driver-sync seam count — the stall-
     // amplification surface the r16 verdict flagged — rides the artifact.
@@ -452,18 +452,15 @@ object PipelineQueries {
     * What is NEVER formed, matching d49's discipline: a store×store
     * doc-pair join — every pairwise stage probes batch-side keys against
     * store-side keys only. */
-  /** Scratch profiling hook (QBench d57prof): eagerly materializes each
-    * persisted frame of the incremental chain with wall-clock prints. */
-  private[graft] var incProbe: (String, () => Long) => Unit = (_, _) => ()
-
-  /** d57's frames end in eager localCheckpoints (base/lshOk here, toks in
+  /** d57's frames end in localCheckpoints (base/lshOk here, toks in
     * the query) rather than persist: the combined final plan stitches the
     * FULL store+batch lineage into every crossJoined contract frame, and
     * driver-side analysis/AQE re-optimization of that tree — not
-    * execution — measured 38 s of the query's 52 s warm time (QBench
-    * d57prof; the componentsOf plan-doubling class from SCALE.md).
+    * execution — measured 38 s of the query's 52 s warm time (the
+    * componentsOf plan-doubling class from SCALE.md; the d57 profiling
+    * harness that took it was deleted after commit a601823).
     * Severing at the three seams cut the warm median 37.3 s → 12.8 s with
-    * the hash gate unchanged — but note 12.8 s was back-to-back QBench
+    * the hash gate unchanged — but note 12.8 s was back-to-back harness
     * reps with cross-rep cache reuse; the honest PinScope-per-rep bench
     * medians are 35.0 s on the single-file layout / 22.6 s on 16-part
     * (BASELINE.md r12). The trade (lost recomputability of a
@@ -589,12 +586,9 @@ object PipelineQueries {
     val (oldAug, _) = incInputs(s, dir)
     val oldQ = repetitionDocs(qualityDocs(oldAug))
     val hotStore = hotLinesOf(linesOf(oldQ)).localCheckpoint(false)
-    incProbe("hotStore", () => hotStore.count())
     val ldOld = lineCleanAgainst(oldQ, hotStore)
       .localCheckpoint(false) // consumers: gram probe, LSH sigs, chunks, base
-    incProbe("ldOld", () => ldOld.count())
     val osh = ghsOf(ldOld).localCheckpoint(false)
-    incProbe("osh", () => osh.count())
     StoreFrames(
       hot = hotStore,
       grams = gtab(osh, "old_id"),
@@ -696,11 +690,9 @@ object PipelineQueries {
     // first consuming job). Recompute trade as storeFramesInMemory.
     val ldBat = lineCleanAgainst(repB, store.hot)
       .localCheckpoint(false) // consumers: gram probes x2, LSH sigs, chunks
-    incProbe("ldBat", () => ldBat.count())
 
     // near-dup vs store + in-batch greedy (d49's rule, d05's mechanism)
     val bsh = ghsOf(ldBat).localCheckpoint(false)
-    incProbe("bsh", () => bsh.count())
     // store grams probe ONLY batch grams — store×store is never formed
     val po = jacFilter(
       gtab(bsh, "new_id").join(
@@ -713,7 +705,6 @@ object PipelineQueries {
         .groupBy("new_id", "old_id").agg(count(lit(1)).as("inter")),
       "new_id", "old_id", gsizes(bsh, "new_id", "na"), store.gramSizes)
       .localCheckpoint(false)
-    incProbe("po", () => po.count())
     val pn = jacFilter(
       gtab(bsh, "earlier_id").join(
         gtab(bsh, "new_id")
@@ -726,7 +717,6 @@ object PipelineQueries {
         .groupBy("earlier_id", "new_id").agg(count(lit(1)).as("inter")),
       "earlier_id", "new_id", gsizes(bsh, "earlier_id", "na"),
       gsizes(bsh, "new_id", "nb")).localCheckpoint(false)
-    incProbe("pn", () => pn.count())
     val keptB = ldBat
       .join(po.select(col("new_id").as("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
@@ -738,7 +728,6 @@ object PipelineQueries {
     // keys); recall vs the exact edges
     val batchBands = Dedup.bandedKeys(Dedup.signatures(
       ldBat.select("doc_id", "text"))).localCheckpoint(false)
-    incProbe("batchBands", () => batchBands.count())
     val allBands = store.bands.unionByName(batchBands)
     val cands = batchBands
       .select(col("band"), col("bh"), col("doc_id").as("probe_id"))
@@ -779,7 +768,6 @@ object PipelineQueries {
         .as("rtext"))
       .withColumn("rtk", graft.functions.TextStats.wsTokensCol(col("rtext")))
       .localCheckpoint(false) // consumers: decontam windows+text, sem, pack
-    incProbe("rw", () => rw.count())
 
     // verbatim decontamination vs the raw benchmark split (d46 / d47 4a)
     val bench = Tables.load(s, dir, "documents")
@@ -803,7 +791,6 @@ object PipelineQueries {
       .filter(col("max_lcs") >= 50).select("doc_id")
     val clean = ck("clean")(rw.join(contam, Seq("doc_id"), "left_anti"))
     // ^ same double-evaluation seam as build()
-    incProbe("clean", () => clean.count())
 
     // semantic decontamination (e22 / d47 4b) over the batch survivors
     val benchV = Tables.load(s, dir, "embeddings")
@@ -837,7 +824,6 @@ object PipelineQueries {
     // d59 (manifest artifact), the same sum computed in-run for d57
     val baseCk = ck("baseOff")(store.baseOff)
     val lshOkCk = ck("lshOk")(lshOk)
-    incProbe("base+lshOk", () => baseCk.count() + lshOkCk.count())
     IncStages(batAug, qB, repB, ldBat,
       po.select(col("new_id").as("doc_id")).distinct(),
       pn.select(col("new_id").as("doc_id")).distinct(),

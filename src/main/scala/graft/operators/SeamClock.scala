@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** Driver-sync barrier instrumentation for the composed pipeline chains
   * (r17, from the r16 verdict's "stall amplification" flag).
   *
-  * Each eager `localCheckpoint(true)` in the d47/d57 chains is a
+  * Each `localCheckpoint` in the d47/d57 chains is a
   * driver-synchronized job boundary: the chain's wall-clock is the SUM of
   * its barriers' latencies, so on a contended cluster the chain inherits
   * the sum of the scheduler/stall TAIL at every seam — the r16 driver
@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * single-plan queries rode at the window tax. To make that amplification
   * MEASURABLE (and its reduction verifiable), every barrier routes
   * through [[ck]]: outside a recording scope it is byte-for-byte
-  * `df.localCheckpoint(true)`; inside one (the bench shared lane) the
+  * `df.localCheckpoint(false)`; inside one (the bench shared lane) the
   * barrier's name and wall seconds land in a thread-local ledger that the
   * artifact carries as `seams` — seam count + per-seam times per chain.
   *
@@ -36,11 +36,11 @@ object SeamClock {
     finally tl.remove()
   }
 
-  /** LAZY-SEAM MODE (r17 experiment, `graft.chain.lazy.seams` system
-    * property): `localCheckpoint(eager = false)` provides the SAME
-    * lineage truncation the seams exist for — the returned frame's plan
-    * is a depth-1 LogicalRDD either way, so the measured r12 win
-    * (driver-side analysis of stitched trees dominating warm cost) is
+  /** A checkpoint barrier, timed when a recording scope is active on
+    * this thread. Always lazy: `localCheckpoint(eager = false)` provides
+    * the SAME lineage truncation the seams exist for — the returned
+    * frame's plan is a depth-1 LogicalRDD either way, so the measured r12
+    * win (driver-side analysis of stitched trees dominating warm cost) is
     * preserved — but the materialization folds into the FIRST consuming
     * job instead of a dedicated count() job. A chain of k eager seams is
     * k sequential driver-sync stall draws on a contended cluster; lazy,
@@ -49,29 +49,13 @@ object SeamClock {
     * first-job end (LocalRDDCheckpointData.doCheckpoint), so truncation
     * safety is unchanged.
     *
-    * Default ON since r19: the pending lane A/B ran (QBench seamlane,
-    * same window, 3 reps/arm) — lazy ≤ eager on every rep, lane med
-    * 17.25 s vs 17.84 s; the residual per-seam ledger cost is plan
-    * COMPILATION (paid either way), so eager's extra count() job buys
-    * nothing at this SF and costs one stall draw per seam on a
-    * contended cluster. Set the property to "false" to force the eager
-    * form. */
-  private def lazySeams: Boolean =
-    !sys.props.get("graft.chain.lazy.seams").contains("false")
-
-  /** A checkpoint barrier (eager by default, see [[lazySeams]]), timed
-    * when a recording scope is active on this thread. */
-  private[graft] def ck(name: String)(df: DataFrame): DataFrame = {
-    val eager = !lazySeams
-    val buf = tl.get()
-    if (buf == null) df.localCheckpoint(eager)
-    else {
-      val t0 = System.nanoTime()
-      val out = df.localCheckpoint(eager)
-      buf += (name -> (System.nanoTime() - t0) / 1e9)
-      out
-    }
-  }
+    * Measured in r19 (OPTIMIZATION_r19.md, same window, 3 reps/arm):
+    * lazy <= eager on every rep, lane med 17.25 s vs 17.84 s; the
+    * residual per-seam ledger cost is plan COMPILATION (paid either
+    * way), so eager's extra count() job buys nothing at this SF. The
+    * A/B harness and its eager arm were deleted after commit a601823. */
+  private[graft] def ck(name: String)(df: DataFrame): DataFrame =
+    barrier(name)(df.localCheckpoint(false))
 
   /** A non-checkpoint driver-sync barrier (e.g. a fixpoint round's
     * convergence aggregate): times `body` into the ledger when

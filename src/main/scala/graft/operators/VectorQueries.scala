@@ -573,8 +573,8 @@ object VectorQueries {
     // >= 0.6 rides in-band (measured 0.94/0.96/0.78 at
     // sf0.001/0.01/0.1 — the synthetic embeddings spread variance
     // uniformly across dims, the worst case for prefix truncation;
-    // QBench's `mrl` grid charts the recall-vs-width curve, and real
-    // MRL-trained embeddings concentrate early and do better). ----
+    // MrlRecallSpec pins the margin, and real MRL-trained embeddings
+    // concentrate early and do better). ----
     QueryDef("e12_matryoshka",
       """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 10),
         |     c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings WHERE vec_id >= 10),
@@ -671,8 +671,8 @@ object VectorQueries {
     // sum-of-cell-squares, never corpus² — sufficient for kNN recall
     // when neighbors concentrate, i.e. top-1 cosine many σ above the
     // random tail; this corpus is diffuse (3.2σ) and SCALE.md r10
-    // measures what that does to cell-blocked recall at 10×, via
-    // QBench knnscale); within a block the join
+    // measures what that does to cell-blocked recall at 10×); within a
+    // block the join
     // shuffles BOTH sides on the block key once, scores with the native
     // cosine kernel, and ranks per vector — the window repartitions on
     // vec_id, the second and last exchange. ----
@@ -1658,7 +1658,7 @@ object VectorQueries {
     hits / exact.count()
   }
 
-  /** e12's measured recall@5 (MrlRecallSpec + QBench's `mrl` grid). */
+  /** e12's measured recall@5 (MrlRecallSpec). */
   def mrlRecall(s: org.apache.spark.sql.SparkSession, dir: String,
       prefixDims: Int = 32, shortlistN: Int = 100): Double = {
     val (exact, mrl) = mrlArms(s, dir, prefixDims, shortlistN)

@@ -16,17 +16,6 @@ import java.util.concurrent.atomic.AtomicInteger
 object EventStreams {
   private val counter = new AtomicInteger
 
-  /** Profiling hook (QBench s15prof, same pattern as
-    * PipelineQueries.incProbe): no-op in production; a scratch harness
-    * can swap it to attribute s13/s15 wall-clock to phases. */
-  @volatile var curationProbe: (String, Double) => Unit = (_, _) => ()
-  private def probeT[A](name: String)(body: => A): A = {
-    val t0 = System.nanoTime()
-    val r = body
-    curationProbe(name, (System.nanoTime() - t0) / 1e9)
-    r
-  }
-
   /** Stateful operators plan one state-store instance per shuffle
     * partition; at this data scale 32 instances are pure checkpoint-IO
     * overhead (~30% of query time measured at sf0.1). Run the stateful
@@ -116,8 +105,8 @@ object EventStreams {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val batchSchema = knownSchema.getOrElse(eventsSchema(spark, dir))
     // events.parquet is a single FILE in the driver corpus but a
-    // DIRECTORY of part files in any Spark-written corpus (ScaleGen's
-    // first cut, real deployments). A glob on the literal file name
+    // DIRECTORY of part files in any Spark-written corpus (the tiled
+    // SCALE.md corpora, real deployments). A glob on the literal file name
     // reads the directory layout as an EMPTY stream — silently. Stream
     // from inside the directory when it is one.
     val isDir = new java.io.File(s"$dir/events.parquet").isDirectory
@@ -935,8 +924,8 @@ object EventStreams {
     * store-sized scan eventually outgrows the batch cadence, the S jobs
     * can be spread across the cadence window, staggered between
     * maintenance windows, or run on disjoint executor groups — each
-    * bounded at 1/S of the scan term (measured: StoreScaleProbe's `seg`
-    * arm, SCALE.md r16). */
+    * bounded at 1/S of the scan term (measured: SCALE.md r16, the
+    * segment ladder). */
   private[graft] def gramStoreProbeSegment(s: SparkSession, path: String,
       batchId: Long, bg: DataFrame, segments: Int, k: Int): Option[DataFrame] = {
     require(segments > 0 && GramBuckets % segments == 0,
@@ -1144,7 +1133,7 @@ object EventStreams {
     * re-published from the same resolution. Idempotent when nothing
     * needs folding.
     *
-    * Trigger policy (r15, from the 24x200-doc StoreScaleProbe ladder in
+    * Trigger policy (r15, from the 24x200-doc batch ladder in
     * SCALE.md): run when the store holds ~12+ delta dirs (~400 files at
     * GramBuckets=32) — the ladder shows probe cost flat through ~800
     * delta files and the fold itself costs ~1-2 s at that size, so a
@@ -1281,7 +1270,7 @@ object EventStreams {
     * published base's upto — lagged deltas kept for the previous
     * generation's readers don't count, or the lag-one GC would re-fire
     * the trigger every batch until the next fold). Default 12, from the
-    * 24-batch StoreScaleProbe ladders — SCALE.md r15: a firing costs
+    * 24-batch ladders — SCALE.md r15: a firing costs
     * ~1-2 s, amortizes over the 11 batches before the next one, and
     * post-compaction batches stay on their ladder. Returns whether
     * compaction ran. Call QUIESCED between micro-batches, the same
@@ -1505,8 +1494,8 @@ object EventStreams {
       // every stage, store, plant and outcome class is identical on the
       // half corpus (twin sources are doc_id % 6 = 2, all even, so the
       // re-crawl dup plant survives whole). The oracle applies the same
-      // predicate. Production cost models ride StoreScaleProbe's
-      // ladders, which drive curationBatch at arbitrary corpus scale.
+      // predicate. Production cost models ride the SCALE.md r14-r16
+      // ladders, which drove curationBatch at arbitrary corpus scale.
       val docs = graft.operators.Tables.load(spark, dir, "documents")
         .filter(pmod(col("doc_id"), lit(2)) === 0)
         .select("doc_id", "lang", "source", "text")
@@ -1529,34 +1518,32 @@ object EventStreams {
         base0.unionByName(twins))
       // provisioning pre-pass (s14's discipline): the budget is sized
       // from raw feed stats, not from anything the pipeline computes
-      val budget = probeT("setup.budget")(input
+      val budget = input
         .select(size(graft.functions.TextStats.wsTokensCol(col("text")))
           .cast("long").as("__ntok"))
         .agg(expr("sum(__ntok) div 16"))
-        .head.getLong(0))
+        .head.getLong(0)
       val base = java.nio.file.Files
         .createTempDirectory("graft-scur-").toString
       try {
-        val maxId = probeT("setup.maxId")(
-          docs.agg(max("doc_id")).head.getLong(0))
+        val maxId = docs.agg(max("doc_id")).head.getLong(0)
         require(2 * maxId / 3 + 1 < 3000000L && maxId < 3000000L,
           s"s15 twin offset 3000000 violated: max(doc_id)=$maxId")
-        probeT("setup.slices")(writeIdSlices(spark, input,
+        writeIdSlices(spark, input,
           base, Seq(0L, maxId / 3 + 1, 2 * maxId / 3 + 1, 3000000L,
-            Long.MaxValue)))
+            Long.MaxValue))
         val q = spark.readStream.schema(input.schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(s"$base/in")
           .writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            probeT(s"batch$batchId")(curationBatch(base, budget, batch, batchId))
+            curationBatch(base, budget, batch, batchId)
           }
           .option("checkpointLocation", s"$base/ckpt")
           .trigger(Trigger.AvailableNow())
           .start()
-        probeT("stream.drain")(StreamWait.await(q, 300000))
-        val out = probeT("final.read")(
-          spark.read.parquet(s"$base/out").localCheckpoint(true))
+        StreamWait.await(q, 300000)
+        val out = spark.read.parquet(s"$base/out").localCheckpoint(true)
         val nBatches = out.agg(countDistinct("batch_id").as("nb"))
           .select((col("nb") === 4).as("batches_ok"))
         out.select(col("doc_id"), col("lang"), col("outcome"))
@@ -1632,8 +1619,8 @@ object EventStreams {
     // prior per-line counts: ONE pre-aggregated fold snapshot (never a
     // re-aggregation over all batches), Bloom-shrunk to ~this batch's
     // lines before the probe join so AQE can build-side it
-    val priorLinesSized = probeT(s"b$batchId.rd.line")(
-      latestFoldSized(s, s"$base/linefold", batchId, lineFoldSchema))
+    val priorLinesSized =
+      latestFoldSized(s, s"$base/linefold", batchId, lineFoldSchema)
     val priorLines = priorLinesSized.map(_._1)
     // From here on, every store write LAUNCHES the moment its input
     // frame is composed (r19, guide §2.6 via Par.scoped): the linefold
@@ -1644,11 +1631,11 @@ object EventStreams {
     // are identical to the r18 all-at-once Par.writes.
     val lateFrames = graft.operators.Par.scoped { sc =>
     val batchLineCnt = lineAgg.select(col("line"), col("cnt"))
-    sc.launch(() => probeT(s"b$batchId.linefold")(writeFold(priorLines
+    sc.launch(() => writeFold(priorLines
         .map(_.unionByName(batchLineCnt)
           .groupBy("line").agg(sum("cnt").as("cnt")))
         .getOrElse(batchLineCnt),
-      s"$base/linefold", batchId)))
+      s"$base/linefold", batchId))
     val rn = priorLinesSized
       .fold(rn0.withColumn("prior", col("rn"))) { case (pf, bytes) =>
         // the Bloom shrink is an I/O reducer for BIG folds; under the
@@ -1697,11 +1684,9 @@ object EventStreams {
     // the probe's listing excludes batch_id >= current — see
     // [[readGramStoreSized]] `below` — so a re-delivered batch's
     // overwrite of its own delta dir can't race the probe's read.
-    sc.launch(() => probeT(s"b$batchId.gram")(
-      writeGramStore(bsh, s"$base/gramstore", batchId)))
-    val fromStore = probeT(s"b$batchId.rd.gram")(
-      gramStoreProbeSegmented(s, s"$base/gramstore", batchId, bg,
-        storeSegments)).map(jacTail)
+    sc.launch(() => writeGramStore(bsh, s"$base/gramstore", batchId))
+    val fromStore = gramStoreProbeSegmented(s, s"$base/gramstore", batchId,
+      bg, storeSegments).map(jacTail)
     val inBatch = jacTail(
       bg.join(
         bg.select(col("doc_id").as("prior_id"),
@@ -1736,8 +1721,8 @@ object EventStreams {
     val kept = dupped.filter(col("n_dups_prior") === 0)
       .select("doc_id", "lang", "n_tok")
     // prior per-lang totals: the fold snapshot IS the aggregate
-    val priorQuota = probeT(s"b$batchId.rd.quota")(
-      latestFold(s, s"$base/quotafold", batchId, quotaFoldSchema))
+    val priorQuota =
+      latestFold(s, s"$base/quotafold", batchId, quotaFoldSchema)
     val prior = priorQuota
       .map(_.select(col("lang"), col("toks").as("base_toks")))
       .getOrElse(s.emptyDataFrame
@@ -1772,18 +1757,16 @@ object EventStreams {
       .unionByName(batch.join(qd, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), lit("quality").as("outcome")))
     val batchQuota = kept.groupBy("lang").agg(sum("n_tok").as("toks"))
-    sc.launch(() => probeT(s"b$batchId.out")(
-      outcomes.write.mode("overwrite")
-        .parquet(s"$base/out/batch_id=$batchId")))
-    sc.launch(() => probeT(s"b$batchId.quota")(writeFold(priorQuota
+    sc.launch(() => outcomes.write.mode("overwrite")
+      .parquet(s"$base/out/batch_id=$batchId"))
+    sc.launch(() => writeFold(priorQuota
         .map(_.unionByName(batchQuota)
           .groupBy("lang").agg(sum("toks").as("toks")))
         .getOrElse(batchQuota),
-      s"$base/quotafold", batchId)))
+      s"$base/quotafold", batchId))
     Seq(ld, bsh, dupped)
     } // Par.scoped: join the four writes (first failure, original type)
-    probeT(s"b$batchId.unpersist")(
-      (Seq(batch, qd, adm, lineAgg) ++ lateFrames).foreach(_.unpersist()))
+    (Seq(batch, qd, adm, lineAgg) ++ lateFrames).foreach(_.unpersist())
     ()
   }
 
