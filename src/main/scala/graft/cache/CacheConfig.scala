@@ -13,7 +13,8 @@ final case class CacheConfig(
     blockSize: Int,
     /** Consistent-hash ownership split in bytes (reference default 256 MiB). */
     splitSize: Long,
-    /** Local disk directory holding cache files. */
+    /** Local disk directory holding cache files; a comma-separated list
+      * spreads files over several disks ([[CacheConfig.dirs]]). */
     cacheDir: String,
     /** Max cache weight in MB of downloaded data; <=0 = unlimited. */
     maxSizeMB: Long,
@@ -49,6 +50,10 @@ object CacheConfig {
   val AllowPatternKey = "graft.cache.allow.pattern"
   val MinColumnsKey = "graft.cache.min.projected.columns"
   val EnabledKey = "graft.cache.enabled"
+
+  /** The directories of a `cacheDir` value: a comma-separated list. */
+  def dirs(cacheDir: String): Seq[String] =
+    cacheDir.split(',').map(_.trim).filter(_.nonEmpty).toSeq
 
   def from(conf: Configuration): CacheConfig = CacheConfig(
     blockSize = conf.getInt(BlockSizeKey, 1 << 20),

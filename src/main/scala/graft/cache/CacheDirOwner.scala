@@ -33,7 +33,7 @@ private[cache] object CacheDirOwner {
   /** `cacheDir`, a comma-separated list, with each directory replaced by
     * the one this JVM caches in. */
   def claim(cacheDir: String): String =
-    cacheDir.split(',').map(_.trim).filter(_.nonEmpty).map(d =>
+    CacheConfig.dirs(cacheDir).map(d =>
       claims.computeIfAbsent(new File(d).getCanonicalPath, claimOne))
       .mkString(",")
 

@@ -26,7 +26,7 @@ object CacheFileLayout {
     * (reference: CacheUtil.java:299-310). Data and mdfile always land on
     * the same disk, and the mapping is stable across restarts. */
   private def diskFor(cacheDir: String, remotePath: String): String = {
-    val dirs = cacheDir.split(',').map(_.trim).filter(_.nonEmpty)
+    val dirs = CacheConfig.dirs(cacheDir)
     if (dirs.length <= 1) return if (dirs.isEmpty) cacheDir else dirs(0)
     val h = com.google.common.hash.Hashing.murmur3_128()
       .hashString(remotePath, java.nio.charset.StandardCharsets.UTF_8).asLong()

@@ -2,9 +2,8 @@ package graft.cache
 
 import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
-import java.nio.file.StandardOpenOption
+import java.nio.file.{Files, StandardOpenOption}
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
-import com.google.common.cache.{CacheBuilder, RemovalListener, RemovalNotification, Weigher, Cache => GCache}
 
 /** Block-location state for one block of one file (reference thrift enum
   * Location, bookkeeper.thrift:6-10). NON_LOCAL is reserved for the
@@ -25,8 +24,13 @@ final case class CacheStatus(generation: Int, blocks: IndexedSeq[BlockState])
   * one instance per executor JVM; no Thrift, callers are the task threads.
   *
   * Responsibilities: getCacheStatus / setAllCached / invalidate, generation
-  * numbers, weighted LRU eviction with on-disk file deletion
-  * (BookKeeper.java:629-746 semantics via Guava's weighted cache).
+  * numbers, and a weighted LRU of whole files whose eviction deletes the
+  * evicted file's cache files (BookKeeper.java:629-746).
+  *
+  * Locking: the LRU, its weight sum and every generation bump are guarded
+  * by this manager's lock. A [[FileMetadata]] lock may be taken inside it,
+  * never the reverse. Disk writes (a fill's data write, the mdfile
+  * persist) run outside it; file deletion runs inside it.
   */
 final class CacheManager(val conf: CacheConfig,
     usableDiskBytes: Long = -1L) {
@@ -34,7 +38,7 @@ final class CacheManager(val conf: CacheConfig,
 
   /** Effective cache budget in KB: min(95% × usable disk × fullness%,
     * explicit maxSizeMB); 0 = unbounded. Computed once at startup against
-    * the cache volume (reference BookKeeper.java:656-670); tests inject
+    * the cache volumes (reference BookKeeper.java:656-670); tests inject
     * `usableDiskBytes` to simulate a small volume. */
   val budgetKB: Long = CacheManager.effectiveBudgetKB(conf,
     if (usableDiskBytes >= 0) usableDiskBytes
@@ -54,102 +58,68 @@ final class CacheManager(val conf: CacheConfig,
     * disk layout on first touch (findGenerationNumber semantics). */
   private val generations = new ConcurrentHashMap[String, Integer]()
 
-  private val removal = new RemovalListener[String, FileMetadata] {
-    override def onRemoval(n: RemovalNotification[String, FileMetadata]): Unit = {
-      // REPLACED fires on the re-put we use to refresh weights — the entry
-      // is still live, never delete its files then.
-      if (n.getCause == com.google.common.cache.RemovalCause.REPLACED) return
-      if (n.wasEvicted()) metrics.evictions.incrementAndGet()
-      val old = n.getValue
-      if (old == null) return
-      // Serialized with metadata() construction (r14 stress-gate find):
-      // Guava runs this listener AFTER the map removal, outside segment
-      // locks — a reload racing into that window used to construct a new
-      // instance at the SAME generation, restore the old mdfile's bitmap,
-      // and then lose its files to this very deletion; a later warm
-      // re-created the sparse data file and cached reads served ZEROS
-      // that passed the covers re-validation (StressGateSpec byte
-      // mismatch). Under the manager lock: bump the generation first so
-      // any later reload starts COLD at gen+1 (the evictor's decision
-      // sticks; cross-JVM warm restore is untouched — a fresh JVM seeds
-      // generations from the disk layout), retire any same-generation
-      // racer that already slipped in, then delete the files.
-      CacheManager.this.synchronized {
-        if (n.wasEvicted())
-          generations.compute(n.getKey, (_, g) =>
-            Integer.valueOf(if (g == null) 2 else g.intValue + 1))
-        val cur = registry.getIfPresent(n.getKey)
-        if (cur != null && !(cur eq old) && cur.generation == old.generation
-          && !cur.isDeleted) {
-          cur.deleteFiles()
-          registry.invalidate(n.getKey)
-        }
-        // Invalidation already deleted files; eviction must delete here.
-        if (!old.isDeleted) old.deleteFiles()
-      }
-    }
-  }
-
-  private[cache] val registry: GCache[String, FileMetadata] = {
-    // one segment, so the budget is one LRU: Guava enforces
-    // maximumWeight per segment, and evicts a file heavier than its
-    // segment's share on the very put that weighs it
-    val b = CacheBuilder.newBuilder().concurrencyLevel(1)
-      .removalListener(removal)
-    (if (budgetKB > 0)
-      b.weigher(new Weigher[String, FileMetadata] {
-          override def weigh(k: String, v: FileMetadata): Int = v.weightKB
-        }).maximumWeight(budgetKB)
-     else b)
-      .build[String, FileMetadata]()
-  }
+  /** Cached files in access order, least recently used first, each with
+    * the weight it was last charged. */
+  private val lru =
+    new java.util.LinkedHashMap[String, CacheManager.Entry](16, 0.75f, true)
+  /** Sum of the charged weights in `lru`, in KB. */
+  private var chargedKB = 0L
 
   private def currentGeneration(path: String): Int =
     generations.computeIfAbsent(path,
       p => Integer.valueOf(
         math.max(1, CacheFileLayout.findLatestGeneration(layout.cacheDir, p)))).intValue
 
-  private def metadata(path: String, fileLen: Long, mtime: Long): FileMetadata = {
-    val gen = currentGeneration(path)
-    val existing = registry.getIfPresent(path)
-    if (existing != null && existing.generation == gen &&
-      existing.matches(fileLen, mtime) && !existing.isDeleted) {
-      existing
-    } else {
-      if (existing != null && !existing.matches(fileLen, mtime)) {
-        // remote file changed underneath us -> invalidate + new generation
-        invalidate(path)
-      }
-      this.synchronized {
-        // Drain pending removal notifications FIRST (r14 stress-gate
-        // find): an eviction's map-removal precedes its listener, so a
-        // miss observed here can mean "evicted, deletion pending". The
-        // drain runs those listeners on THIS thread under the manager
-        // lock (re-entrant), so the generation bump and file deletion
-        // happen-before the construction below — the new instance can
-        // never restore a bitmap whose files a pending eviction is about
-        // to unlink.
-        registry.cleanUp()
-        // re-run the SAME mismatch check under the lock: two racing opens
-        // that both saw a stale entry must not install metadata objects
-        // with different fileLen/mtime for one generation (they would
-        // share a data file and mix bytes of two file versions)
-        val racer = registry.getIfPresent(path)
-        if (racer != null && !racer.isDeleted && !racer.matches(fileLen, mtime)) {
-          invalidate(path)
-        }
-        val gen2 = currentGeneration(path)
-        val again = registry.getIfPresent(path)
-        if (again != null && again.generation == gen2 && !again.isDeleted &&
-          again.matches(fileLen, mtime)) again
-        else {
-          val m = new FileMetadata(path, fileLen, mtime, gen2, layout)
-          registry.put(path, m)
-          m
-        }
+  private def bumpGeneration(path: String): Unit =
+    generations.compute(path, (_, g) =>
+      Integer.valueOf(if (g == null) 2 else g.intValue + 1))
+
+  /** Charge `m`, if it is still `lru`'s entry for its path, its current
+    * weight and make it the most recently used; then evict
+    * least-recently-used files, `m` last, until the budget holds. A file
+    * heavier than the whole budget is evicted alone, so it cannot flush
+    * the rest of the cache. */
+  private def charge(m: FileMetadata): Unit = this.synchronized {
+    val e = lru.get(m.remotePath)
+    if (e != null && (e.meta eq m)) {
+      val kb = m.weightKB.toLong
+      chargedKB += kb - e.kb
+      e.kb = kb
+      if (budgetKB > 0) {
+        if (kb > budgetKB) evict(e)
+        while (chargedKB > budgetKB) evict(lru.values.iterator.next())
       }
     }
   }
+
+  /** Drop `victim` from the LRU, bump its path's generation and delete
+    * its files before the lock is released, so no reload of that path
+    * can adopt the evicted bitmap: it starts cold at the next
+    * generation. */
+  private def evict(victim: CacheManager.Entry): Unit = {
+    lru.remove(victim.meta.remotePath)
+    chargedKB -= victim.kb
+    bumpGeneration(victim.meta.remotePath)
+    metrics.evictions.incrementAndGet()
+    victim.meta.deleteFiles()
+  }
+
+  /** The entry of `path` that describes the remote version (`fileLen`,
+    * `mtime`), created at the current generation when there is none. A
+    * stale entry (the remote file changed underneath us) is invalidated
+    * first, so two versions never share one generation's data file. */
+  private def metadata(path: String, fileLen: Long, mtime: Long): FileMetadata =
+    this.synchronized {
+      val cur = lru.get(path)
+      if (cur != null && cur.meta.matches(fileLen, mtime)) cur.meta
+      else {
+        if (cur != null) invalidate(path)
+        val m = new FileMetadata(path, fileLen, mtime, currentGeneration(path), layout)
+        lru.put(path, new CacheManager.Entry(m))
+        charge(m)
+        m
+      }
+    }
 
   /** Per-block cache state for [startBlock, endBlock) of `path`
     * (BookKeeper.getCacheStatus:249-353; single-node: every block is
@@ -175,18 +145,17 @@ final class CacheManager(val conf: CacheConfig,
     CacheStatus(m.generation, states.toIndexedSeq)
   }
 
-  /** Mark blocks cached after a successful warmup write; generation-guarded
-    * (BookKeeper.setAllCached:414-453). Re-puts to refresh Guava weight. */
+  /** Mark blocks cached after a successful fill write; generation-guarded
+    * (BookKeeper.setAllCached:414-453). The mdfile persist runs outside
+    * the manager lock; the entry is then charged its new weight. */
   def setAllCached(path: String, fileLen: Long, mtime: Long, generation: Int,
       startBlock: Long, endBlock: Long): Boolean = {
-    val m = registry.getIfPresent(path)
+    val m = metadataFor(path).orNull
     if (m == null || m.isDeleted || m.generation != generation ||
       !m.matches(fileLen, mtime)) return false
-    val newly = m.setBlocksCached(startBlock, endBlock)
-    if (newly > 0) registry.put(path, m) // re-weigh
+    if (m.setBlocksCached(startBlock, endBlock) > 0) charge(m)
     true
   }
-
   /** The block-fill protocol of read-through
     * (RemoteReadRequestChain.copyIntoCache + updateCacheStatus), the one
     * way a miss reaches the cache: write the first `len` bytes of `data`,
@@ -201,7 +170,7 @@ final class CacheManager(val conf: CacheConfig,
       start: Long, data: Array[Byte], len: Int): Unit = {
     val t0 = System.nanoTime()
     try {
-      val m = registry.getIfPresent(path)
+      val m = metadataFor(path).orNull
       if (m != null && m.generation == generation && !m.isDeleted) {
         val ch = FileChannel.open(m.ensureDataFile().toPath, StandardOpenOption.WRITE)
         try {
@@ -223,50 +192,41 @@ final class CacheManager(val conf: CacheConfig,
   }
 
   /** Drop metadata + delete cache files + bump generation
-    * (BookKeeper.invalidateFileMetadata:749-756). Serialized with
-    * metadata() construction so a concurrent reload can never restore a
-    * bitmap mid-deletion (same hazard class as the eviction listener). */
+    * (BookKeeper.invalidateFileMetadata:749-756), under the manager lock
+    * so a concurrent reload can never restore a bitmap mid-deletion. */
   def invalidate(path: String): Unit = this.synchronized {
     metrics.invalidations.incrementAndGet()
-    val m = registry.getIfPresent(path)
-    if (m != null) {
-      m.deleteFiles()
-      registry.invalidate(path)
+    val e = lru.remove(path)
+    if (e != null) {
+      chargedKB -= e.kb
+      e.meta.deleteFiles()
     } else {
       CacheFileLayout.deleteGenerations(layout.cacheDir, path,
         currentGeneration(path))
     }
-    generations.compute(path, (_, g) =>
-      Integer.valueOf(if (g == null) 2 else g.intValue + 1))
+    bumpGeneration(path)
   }
 
   /** [[invalidate]] every cached path under directory prefix `dir`
     * (ends in `/`): a directory deleted or renamed away takes its
     * children's cached blocks with it. */
-  def invalidateUnder(dir: String): Unit = {
+  def invalidateUnder(dir: String): Unit = this.synchronized {
     val under = new java.util.ArrayList[String]()
-    registry.asMap.keySet.forEach(k => if (k.startsWith(dir)) under.add(k))
+    lru.keySet.forEach(k => if (k.startsWith(dir)) under.add(k))
     under.forEach(k => invalidate(k))
   }
 
+  /** The cached entry of `path`, if any; a lookup counts as a use. */
   def metadataFor(path: String): Option[FileMetadata] =
-    Option(registry.getIfPresent(path))
+    this.synchronized(Option(lru.get(path)).map(_.meta))
 
-  /** Total cached weight in KB (eviction accounting check). */
-  def totalWeightKB: Long = {
-    var w = 0L
-    registry.asMap().values().forEach(m => w += m.weightKB)
-    w
-  }
+  /** Total cached weight in KB, as last charged. */
+  def totalWeightKB: Long = this.synchronized(chargedKB)
 
-  /** Run pending cache maintenance (size enforcement): the weigher
-    * evicts on write paths, and guava may defer the sweep — budget
-    * assertions (DiskBudgetSpec, the c14 gate) call this first. */
-  def maintain(): Unit = registry.cleanUp()
-
-  def clear(): Unit = {
-    registry.invalidateAll()
-    registry.cleanUp()
+  def clear(): Unit = this.synchronized {
+    lru.values.forEach(_.meta.deleteFiles())
+    lru.clear()
+    chargedKB = 0L
     generations.clear()
   }
 }
@@ -275,17 +235,24 @@ final class CacheManager(val conf: CacheConfig,
 object CacheManager {
   @volatile private var instance: CacheManager = _
 
-  /** Usable bytes on the volume holding `dir` (created if absent). */
-  def diskUsableBytes(dir: String): Long = {
-    val f = new java.io.File(dir)
-    f.mkdirs()
-    f.getUsableSpace
-  }
+  /** An LRU entry: a file's metadata and the weight it was last charged. */
+  private final class Entry(val meta: FileMetadata) { var kb = 0L }
+
+  /** Usable bytes of the volumes holding the configured cache
+    * directories (each created if absent), each volume counted once. */
+  def diskUsableBytes(cacheDir: String): Long =
+    CacheConfig.dirs(cacheDir).map { d =>
+      val p = java.nio.file.Paths.get(d)
+      Files.createDirectories(p)
+      Files.getFileStore(p)
+    }.distinct.map(_.getUsableSpace).sum
 
   /** Reference cache sizing (BookKeeper.java:656-670): the budget is
-    * min(95% of the volume's usable space × fullness%, explicit maxMB),
-    * in KB (the Guava weigher unit); 0 = unbounded (neither knob set). */
-  def effectiveBudgetKB(conf: CacheConfig, usableBytes: Long): Long = {
+    * min(95% of the cache volumes' usable space × fullness%, explicit
+    * maxMB), in KB (the unit of [[FileMetadata.weightKB]]); 0 = unbounded
+    * (neither knob set). `usableBytes` is read only when fullness sizing
+    * is on. */
+  def effectiveBudgetKB(conf: CacheConfig, usableBytes: => Long): Long = {
     val explicitKB =
       if (conf.maxSizeMB > 0) conf.maxSizeMB * 1024 else Long.MaxValue
     val diskKB =

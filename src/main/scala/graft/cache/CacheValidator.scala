@@ -69,7 +69,7 @@ object CacheValidator {
     // cacheDir may be a comma-separated multi-disk list. Another JVM's
     // private `.jvm-*` directory is not this layout; the `.lock` file
     // matches neither name pattern below.
-    conf.cacheDir.split(',').map(_.trim).filter(_.nonEmpty)
+    CacheConfig.dirs(conf.cacheDir)
       .flatMap(d => Option(new File(d).listFiles()).toSeq.flatten)
       .filterNot(_.getName.startsWith(CacheDirOwner.PrivatePrefix))
       .foreach(walk)

@@ -6,7 +6,7 @@ import java.nio.channels.FileChannel
 import java.nio.file.StandardOpenOption
 import java.util.concurrent.TimeUnit
 import scala.util.control.NonFatal
-import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream}
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, FileSystem}
 
 /** Read plan node: a group of collated ranges served by one strategy
   * (the reference's ReadRequestChain family, rubix-core *RequestChain.java).
@@ -121,13 +121,19 @@ object ReadPlanner {
   *    not two.
   *  - Direct: pass-through, used for dummy mode and fallbacks
   *    (DirectReadRequestChain.java).
+  *
+  * Bytes served from the local cache or a peer count as bytes read in
+  * `stats`, the caching file system's statistics, which Spark sums into
+  * task input metrics. Store reads are counted by the inner client under
+  * its own scheme, so no byte counts twice.
   */
 final class CachingInputStream(
     openRemote: () => FSDataInputStream,
     val path: String,
     fileLen: Long,
     mtime: Long,
-    manager: CacheManager) extends FSInputStream
+    manager: CacheManager,
+    stats: FileSystem.Statistics = null) extends FSInputStream
     with org.apache.hadoop.fs.StreamCapabilities {
 
   /** Advertise vectored-read support so capability probes (parquet's
@@ -354,8 +360,9 @@ final class CachingInputStream(
       } finally ch.close()
       if (!covers)
         throw new IOException(s"cache entry deleted during read of $path")
-      rs.foreach(r =>
-        manager.metrics.bytesFromCache.addAndGet(r.actualLen.toLong))
+      val n = rs.map(_.actualLen.toLong).sum
+      manager.metrics.bytesFromCache.addAndGet(n)
+      if (stats != null) stats.incrementBytesRead(n)
     } catch {
       case e: Exception =>
         // corruption fallback: invalidate and serve direct
@@ -386,6 +393,7 @@ final class CachingInputStream(
         throw new IOException(s"no peer endpoint registered for $owner"))
       PeerTransferClient.read(addr, path, start, span, fileLen, mtime, buf, dest)
       manager.metrics.bytesFromPeers.addAndGet(span.toLong)
+      if (stats != null) stats.incrementBytesRead(span.toLong)
     } catch {
       case e: Exception =>
         manager.metrics.peerFallbacks.incrementAndGet()

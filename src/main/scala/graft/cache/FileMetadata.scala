@@ -34,7 +34,7 @@ final class FileMetadata(
     * remote file overwritten with equal length but different content
     * between JVMs was served from the stale data file: the in-memory
     * mtime-mismatch invalidation in CacheManager.metadata only fires for
-    * entries already in the registry, which a restart empties. (Found by
+    * entries already in the manager's LRU, which a restart empties. (Found by
     * c13: a repeated scratch path made the previous JVM's cache poison
     * the next run's peer-read contract.) Headerless/mismatched md files
     * restore empty — the cache re-warms, which is always safe. */
@@ -63,7 +63,7 @@ final class FileMetadata(
   /** Mark [startBlock, endBlock) cached; persist mdfile; returns the
     * count of NEWLY cached blocks (eviction weight itself always comes
     * from [[weightKB]] — callers only need the did-anything-change flag
-    * to decide whether to re-weigh the registry entry). */
+    * to decide whether to re-charge the LRU entry). */
   def setBlocksCached(startBlock: Long, endBlock: Long): Long = synchronized {
     if (deleted) return 0L
     val newly = bitmap.set(startBlock, endBlock)
@@ -73,8 +73,8 @@ final class FileMetadata(
 
   def cachedBlockCount: Int = synchronized(bitmap.cardinality)
 
-  /** Weight in KB of cached data (Guava weigher unit, reference
-    * FileMetadata.getWeight:375-378). */
+  /** Weight in KB of cached data, in whole blocks (the LRU budget's unit,
+    * reference FileMetadata.getWeight:375-378). */
   def weightKB: Int = synchronized {
     math.max(1, (cachedBlockCount.toLong * conf.blockSize / 1024).toInt)
   }
@@ -114,7 +114,7 @@ final class FileMetadata(
     f
   }
 
-  /** Delete data + md files (eviction/invalidation removal listener). */
+  /** Delete data + md files (eviction, invalidation or clear). */
   def deleteFiles(): Unit = synchronized {
     deleted = true
     CacheFileLayout.deleteGenerations(conf.cacheDir, remotePath, generation)

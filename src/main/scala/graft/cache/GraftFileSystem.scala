@@ -188,7 +188,7 @@ class GraftFileSystem extends FileSystem {
         inner.openFile(ip).withFileStatus(st)
           .optLong(Options.OpenFileOptions.FS_OPTION_OPENFILE_BUFFER_SIZE, bufferSize)
           .build()),
-      ip.toString, st.getLen, st.getModificationTime, manager)
+      ip.toString, st.getLen, st.getModificationTime, manager, statistics)
     new FSDataInputStream(new BufferedFSInputStream(stream,
       math.max(bufferSize, 4096)))
   }

@@ -546,8 +546,8 @@ object CacheQueries {
         nonLocalOwners.remove(key)
         graft.cache.PeerRegistry.unregister(owner)
         server.close()
-        // release the private peer manager's state too — its removal
-        // listener deletes the cached block files, so repeated soak
+        // release the private peer manager's state too — clear()
+        // deletes the cached block files, so repeated soak
         // executions don't accumulate $base/peer-cache dirs
         peer.clear()
       }
@@ -555,7 +555,7 @@ object CacheQueries {
 
     // ---- c14: eviction correctness UNDER BUDGET, under the full oracle
     // (reference CacheRemoval.robot — BASELINE.md names eviction
-    // correctness as a target; DiskBudgetSpec proves the weigher in
+    // correctness as a target; DiskBudgetSpec proves the budget in
     // isolation, this gate proves evicted-and-refetched bytes still
     // produce oracle-exact query results). A private CacheManager gets
     // a budget of ~1.4× one working-set file (the DiskBudgetSpec
@@ -564,7 +564,7 @@ object CacheQueries {
     // against it in two round-robin passes — the working set is ~4.2×
     // the budget, so every file's blocks are evicted and re-admitted
     // between touches. In-band contract (evict_ok): evictions > 0, the
-    // post-maintenance cache weight NEVER exceeded the budget at any
+    // cache weight NEVER exceeded the budget at any
     // sample point, and every streamed copy's md5 equals the source
     // file's. The oracle-checked aggregation then runs over the
     // RECONSTRUCTED bytes (copy 0's second-pass stream written back out
@@ -626,7 +626,6 @@ object CacheQueries {
           bytesOk &&= java.security.MessageDigest.getInstance("MD5")
             .digest(got).toSeq == srcMd5
           if (pass == 1 && i == 0) recon = got
-          mgr.maintain()
           maxW = math.max(maxW, mgr.totalWeightKB)
         }
         java.nio.file.Files.write(
@@ -649,7 +648,7 @@ object CacheQueries {
     // injection) and the SAME access pattern: four copies of
     // orders.parquet streamed in two passes — a working set ~2.8× the
     // budget, so the metadata-weighted LRU evicts in BOTH managers (the
-    // shadow weigher runs on marked-block counts alone, so the dry-run
+    // shadow's weights count marked blocks alone, so the dry-run
     // genuinely simulates eviction without writing a data byte). In-band
     // (shadow_ok): the shadow cache dir holds ZERO data bytes (mdfiles
     // only), both managers evicted, and the shadow's pass-2 predicted
@@ -712,7 +711,6 @@ object CacheQueries {
               pos += r
             }
           } finally cis.close()
-          mgr.maintain()
           val got = out.toByteArray
           bytesOk &&= java.security.MessageDigest.getInstance("MD5")
             .digest(got).toSeq == srcMd5

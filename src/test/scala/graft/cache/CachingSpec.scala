@@ -55,6 +55,11 @@ trait CacheFixture extends BeforeAndAfterEach { self: AnyFunSuite =>
     manager = new CacheManager(conf)
   }
 
+  override def afterEach(): Unit = {
+    manager.clear()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+  }
+
   def openCaching(file: String, mgr: CacheManager = null): CachingInputStream = {
     val m = if (mgr == null) manager else mgr
     val st = localFs.getFileStatus(new Path(file))
@@ -255,7 +260,6 @@ class CacheManagerSpec extends AnyFunSuite with CacheFixture {
       small.setAllCached(p, 2600, 1L, st.generation, 0, 26)
       p
     }
-    small.registry.cleanUp()
     assert(small.metrics.evictions.get > 0, "budget overflow must evict")
     assert(small.totalWeightKB <= 1024, "cache weight must respect budget")
     // evicted entries' files are gone

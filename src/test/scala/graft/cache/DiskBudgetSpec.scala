@@ -48,7 +48,6 @@ class DiskBudgetSpec extends AnyFunSuite with CacheFixture {
       readAll(s, 0, content.length)
       s.close()
     }
-    mgr.registry.cleanUp()
     assert(mgr.metrics.evictions.get > 0, "budget overflow must evict")
     assert(mgr.totalWeightKB <= mgr.budgetKB,
       s"weigher overshoot: ${mgr.totalWeightKB} KB > ${mgr.budgetKB} KB budget")

@@ -40,7 +40,6 @@ class EvictionReloadSpec extends AnyFunSuite with CacheFixture {
 
       val sB = openCaching(fB, mgr) // exceeds the 3 KB budget -> evicts
       readAll(sB, 0, content.length); sB.close()
-      mgr.maintain()
       assert(mgr.metrics.evictions.get > 0, "second file must evict under budget")
 
       // whichever file was evicted: reload it and assert the invariant

@@ -45,7 +45,6 @@ class EvictionStressSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(scanAll() == expected, "results must be exact under eviction")
     }
     val mgr = CacheManager.current.get
-    mgr.registry.cleanUp()
     assert(mgr.metrics.evictions.get > 0,
       "scanning >2MB through a 2MB cache must evict")
     assert(mgr.totalWeightKB <= 2 * 1024,

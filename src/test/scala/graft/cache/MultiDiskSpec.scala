@@ -1,5 +1,7 @@
 package graft.cache
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -55,5 +57,28 @@ class MultiDiskSpec extends AnyFunSuite with CacheFixture {
       s.close()
     }
     mgr2.clear()
+  }
+
+  test("a directory list is sized per volume and makes no comma-named path") {
+    val list = s"$tmp/diskA,$tmp/diskB"
+    val c = new Configuration()
+    c.set(CacheConfig.CacheDirKey, list)
+    val mgr = new CacheManager(CacheConfig.from(c))
+    try {
+      // unbounded: the gauge reports the directories' free space
+      val free = new CacheMetricsSource(mgr).metricRegistry.getGauges
+        .get("gauge.available_cache_size_mb").getValue.asInstanceOf[Long]
+      assert(free > 0)
+      val root = Paths.get(tmp)
+      val walk = Files.walk(root)
+      val commas =
+        try walk.iterator.asScala.map(root.relativize(_).toString)
+          .filter(_.contains(",")).toList
+        finally walk.close()
+      assert(commas.isEmpty, s"paths named after the list: $commas")
+      // both directories sit on one volume, which counts once
+      assert(CacheManager.diskUsableBytes(list) <
+        CacheManager.diskUsableBytes(s"$tmp/diskA") * 3 / 2)
+    } finally mgr.clear()
   }
 }

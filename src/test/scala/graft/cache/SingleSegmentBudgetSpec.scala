@@ -27,7 +27,6 @@ class SingleSegmentBudgetSpec extends AnyFunSuite with CacheFixture {
       val s1 = openCaching(f, mgr)
       assert(readAll(s1, 0, content.length).sameElements(content))
       s1.close()
-      mgr.maintain()
       assert(mgr.metrics.evictions.get == 0,
         s"a ${content.length >> 10} KB file under a ${mgr.budgetKB} KB budget was evicted")
       assert(mgr.metadataFor("file:" + f).exists(_.cachedBlockCount == 128))

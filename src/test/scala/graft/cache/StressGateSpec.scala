@@ -102,7 +102,6 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     stop.set(true); churn.join(2000)
 
     assert(errs.isEmpty, s"stress failures: ${errs.toArray.mkString("; ")}")
-    mgr.registry.cleanUp()
     assert(mgr.totalWeightKB <= mgr.budgetKB,
       s"budget overshoot: ${mgr.totalWeightKB} KB > ${mgr.budgetKB} KB")
     val m = mgr.metrics
@@ -191,7 +190,6 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(errs.isEmpty, s"vectored stress failures: ${errs.toArray.mkString("; ")}")
     assert(mgr.metrics.vectoredRanges.get > vect0,
       "the stressor must actually drive the vectored path")
-    mgr.registry.cleanUp()
     assert(mgr.metrics.evictions.get > evict0,
       "four sf0.01 files over a 2 MB budget must evict during the run")
     assert(mgr.totalWeightKB <= mgr.budgetKB,
