@@ -14,8 +14,8 @@ import java.util.concurrent.ConcurrentHashMap
   * case by running one BookKeeper daemon per node.
   *
   * So each configured directory is claimed once per JVM, through an
-  * exclusive lock on `<dir>/.lock` held for the JVM's life. Every
-  * [[CacheManager]] of the JVM shares the claim, and a restarted owner
+  * exclusive lock on `<dir>/.lock` held for the JVM's life. The JVM's one
+  * [[CacheManager]] caches under the claim, and a restarted owner
   * re-adopts the files its predecessor left. A JVM that finds the lock
   * taken caches under `<dir>/.jvm-<pid>` instead, locked the same way; a
   * leading dot never names a store authority, so that directory cannot
@@ -30,11 +30,14 @@ private[cache] object CacheDirOwner {
   /** every lock this JVM holds; referenced so none is ever released */
   private val held = ConcurrentHashMap.newKeySet[FileLock]()
 
+  /** `cacheDir`, a comma-separated list, with each directory canonical. */
+  def canonical(cacheDir: String): String =
+    CacheConfig.dirs(cacheDir).map(new File(_).getCanonicalPath).mkString(",")
+
   /** `cacheDir`, a comma-separated list, with each directory replaced by
     * the one this JVM caches in. */
   def claim(cacheDir: String): String =
-    CacheConfig.dirs(cacheDir).map(d =>
-      claims.computeIfAbsent(new File(d).getCanonicalPath, claimOne))
+    CacheConfig.dirs(canonical(cacheDir)).map(claims.computeIfAbsent(_, claimOne))
       .mkString(",")
 
   private def claimOne(dir: String): String = {

@@ -21,20 +21,29 @@ final case class CacheStatus(generation: Int, blocks: IndexedSeq[BlockState])
   * daemon (rubix-bookkeeper BookKeeper.java) collapsed into an in-process
   * object, which the reference itself supports as "embedded mode"
   * (CachingFileSystem.setLocalBookKeeper:192-201). Spark-native design:
-  * one instance per executor JVM; no Thrift, callers are the task threads.
+  * one instance per cache directory list per executor JVM
+  * ([[CacheManager.getOrInit]]); no Thrift, callers are the task threads.
   *
   * Responsibilities: getCacheStatus / setAllCached / invalidate, generation
   * numbers, and a weighted LRU of whole files whose eviction deletes the
-  * evicted file's cache files (BookKeeper.java:629-746).
+  * evicted file's cache files (BookKeeper.java:629-746). It keeps `conf`'s
+  * layout only (directories, block size, budget); read policy is the
+  * caller's ([[CachingInputStream]]).
   *
   * Locking: the LRU, its weight sum and every generation bump are guarded
   * by this manager's lock. A [[FileMetadata]] lock may be taken inside it,
   * never the reverse. Disk writes (a fill's data write, the mdfile
   * persist) run outside it; file deletion runs inside it.
   */
-final class CacheManager(val conf: CacheConfig,
-    usableDiskBytes: Long = -1L) {
+final class CacheManager(conf: CacheConfig, usableDiskBytes: Long = -1L) {
   val metrics = new CacheMetrics
+
+  /** Bytes per block of every cache file and bitmap of this manager. */
+  val blockSize: Int = conf.blockSize
+
+  /** The configured directories resolved to the ones this JVM owns
+    * ([[CacheDirOwner]]): every cache file of this manager lives there. */
+  val cacheDir: String = CacheDirOwner.claim(conf.cacheDir)
 
   /** Effective cache budget in KB: min(95% × usable disk × fullness%,
     * explicit maxSizeMB); 0 = unbounded. Computed once at startup against
@@ -42,12 +51,16 @@ final class CacheManager(val conf: CacheConfig,
     * `usableDiskBytes` to simulate a small volume. */
   val budgetKB: Long = CacheManager.effectiveBudgetKB(conf,
     if (usableDiskBytes >= 0) usableDiskBytes
-    else CacheManager.diskUsableBytes(conf.cacheDir))
+    else CacheManager.diskUsableBytes(cacheDir))
 
-  /** `conf` with `cacheDir` resolved to the directories this JVM owns
-    * ([[CacheDirOwner]]): every cache file of this manager lives there. */
-  private val layout: CacheConfig =
-    conf.copy(cacheDir = CacheDirOwner.claim(conf.cacheDir))
+  /** The layout keys this manager was built with. */
+  private val layout = CacheManager.layoutOf(conf)
+
+  /** This manager's metrics, registered with the JVM's Spark
+    * MetricsSystem on first use when one is running (once per manager). */
+  private[cache] lazy val metricsSource: Option[CacheMetricsSource] =
+    Some(new CacheMetricsSource(this)).filter(s =>
+      org.apache.spark.graft.MetricsBridge.register(s.sourceName, s.metricRegistry))
 
   /** Optional split-ownership resolver (locality ring). When set, uncached
     * blocks of splits owned by another node classify as NonLocal(owner) so
@@ -68,7 +81,7 @@ final class CacheManager(val conf: CacheConfig,
   private def currentGeneration(path: String): Int =
     generations.computeIfAbsent(path,
       p => Integer.valueOf(
-        math.max(1, CacheFileLayout.findLatestGeneration(layout.cacheDir, p)))).intValue
+        math.max(1, CacheFileLayout.findLatestGeneration(cacheDir, p)))).intValue
 
   private def bumpGeneration(path: String): Unit =
     generations.compute(path, (_, g) =>
@@ -114,7 +127,8 @@ final class CacheManager(val conf: CacheConfig,
       if (cur != null && cur.meta.matches(fileLen, mtime)) cur.meta
       else {
         if (cur != null) invalidate(path)
-        val m = new FileMetadata(path, fileLen, mtime, currentGeneration(path), layout)
+        val m = new FileMetadata(path, fileLen, mtime, currentGeneration(path),
+          blockSize, cacheDir)
         lru.put(path, new CacheManager.Entry(m))
         charge(m)
         m
@@ -133,7 +147,7 @@ final class CacheManager(val conf: CacheConfig,
     val states = (startBlock until endBlock).map { b =>
       if (m.isBlockCached(b)) { count(metrics.cachedRequests); BlockState.Cached: BlockState }
       else own.flatMap(o =>
-        o.resolve(path, BlockMath.blockStart(b, conf.blockSize))
+        o.resolve(path, BlockMath.blockStart(b, blockSize))
           .filter(_ != o.selfNode)) match {
         case Some(owner) =>
           count(metrics.nonlocalRequests)
@@ -163,9 +177,9 @@ final class CacheManager(val conf: CacheConfig,
     * `generation`, then mark those blocks cached. Does nothing once that
     * generation is retired. An entry retired between the guard and the
     * write (eviction/invalidation) is a lost warm, never an error; any
-    * other failure throws only in strict mode, since the caller's bytes
-    * already came from the store, and is otherwise logged. Every call is
-    * timed in `cacheFill`. */
+    * other failure is thrown, and the caller, whose bytes already came
+    * from the store, decides whether it matters. Every call is timed in
+    * `cacheFill`. */
   def fill(path: String, fileLen: Long, mtime: Long, generation: Int,
       start: Long, data: Array[Byte], len: Int): Unit = {
     val t0 = System.nanoTime()
@@ -179,15 +193,13 @@ final class CacheManager(val conf: CacheConfig,
           while (bb.hasRemaining) ch.write(bb, start + bb.position())
         } finally ch.close()
         setAllCached(path, fileLen, mtime, generation,
-          BlockMath.startBlock(start, conf.blockSize),
-          BlockMath.endBlock(start, len.toLong, conf.blockSize))
+          BlockMath.startBlock(start, blockSize),
+          BlockMath.endBlock(start, len.toLong, blockSize))
         metrics.warmupBytes.addAndGet(len.toLong)
       }
     } catch {
       case _: Exception if metadataFor(path)
           .forall(x => x.isDeleted || x.generation != generation) => // lost warm
-      case e: Exception if !conf.strict => // cache miss persists
-        FallbackLog.warn("fill", path, generation, e)
     } finally metrics.cacheFill.update(System.nanoTime() - t0, TimeUnit.NANOSECONDS)
   }
 
@@ -201,10 +213,18 @@ final class CacheManager(val conf: CacheConfig,
       chargedKB -= e.kb
       e.meta.deleteFiles()
     } else {
-      CacheFileLayout.deleteGenerations(layout.cacheDir, path,
+      CacheFileLayout.deleteGenerations(cacheDir, path,
         currentGeneration(path))
     }
     bumpGeneration(path)
+  }
+
+  /** [[invalidate]] `path` while `generation` is still its current one; a
+    * path that has moved on (evicted, invalidated or reloaded since) is
+    * left alone, so a reader that found one generation's files unreadable
+    * never deletes the entry another reader re-created after it. */
+  def invalidate(path: String, generation: Int): Unit = this.synchronized {
+    if (currentGeneration(path) == generation) invalidate(path)
   }
 
   /** [[invalidate]] every cached path under directory prefix `dir`
@@ -231,12 +251,22 @@ final class CacheManager(val conf: CacheConfig,
   }
 }
 
-/** JVM-wide singleton access (one per executor). */
+/** JVM-wide access: one manager per cache directory list. */
 object CacheManager {
-  @volatile private var instance: CacheManager = _
+  /** canonical configured directory list -> its manager */
+  private val managers = new ConcurrentHashMap[String, CacheManager]()
+  @volatile private var last: CacheManager = _
+  /** layout mismatches already logged */
+  private val warned = ConcurrentHashMap.newKeySet[String]()
 
   /** An LRU entry: a file's metadata and the weight it was last charged. */
   private final class Entry(val meta: FileMetadata) { var kb = 0L }
+
+  /** `key=value` of each layout key but the directories (the map key). */
+  private def layoutOf(conf: CacheConfig): Set[String] = Set(
+    s"${CacheConfig.BlockSizeKey}=${conf.blockSize}",
+    s"${CacheConfig.MaxSizeKey}=${conf.maxSizeMB}",
+    s"${CacheConfig.DiskFullnessKey}=${conf.diskFullnessPercentage}")
 
   /** Usable bytes of the volumes holding the configured cache
     * directories (each created if absent), each volume counted once. */
@@ -263,20 +293,30 @@ object CacheManager {
     if (m == Long.MaxValue) 0L else m
   }
 
+  /** The manager of `conf`'s cache directories, built by the first conf
+    * that names them; a later conf's other layout values are ignored,
+    * with one WARN. */
   def getOrInit(conf: CacheConfig): CacheManager = {
-    val cur = instance
-    if (cur != null && cur.conf == conf) cur
-    else this.synchronized {
-      if (instance == null || instance.conf != conf)
-        instance = new CacheManager(conf)
-      instance
-    }
+    val m = managers.computeIfAbsent(CacheDirOwner.canonical(conf.cacheDir), _ => {
+      val built = new CacheManager(conf)
+      built.metricsSource
+      last = built
+      built
+    })
+    val ignored = layoutOf(conf) -- m.layout
+    if (ignored.nonEmpty && warned.add(conf.cacheDir + ignored))
+      org.slf4j.LoggerFactory.getLogger(classOf[CacheManager]).warn(
+        s"cache directories ${conf.cacheDir} keep ${m.layout.mkString(", ")}" +
+          s"; ignoring ${ignored.mkString(", ")}")
+    m
   }
 
-  def current: Option[CacheManager] = Option(instance)
+  /** The manager [[getOrInit]] last built, if any. */
+  def current: Option[CacheManager] = Option(last)
 
   private[graft] def resetForTest(): Unit = this.synchronized {
-    if (instance != null) instance.clear()
-    instance = null
+    managers.values.forEach(_.clear())
+    managers.clear()
+    last = null
   }
 }

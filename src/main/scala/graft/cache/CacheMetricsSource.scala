@@ -1,7 +1,6 @@
 package graft.cache
 
 import com.codahale.metrics.{Gauge, MetricRegistry}
-import org.apache.spark.graft.MetricsBridge
 
 /** Dropwizard metrics surface for the cache, pluggable into Spark's
   * MetricsSystem (so every configured sink — JMX, Graphite, Prometheus
@@ -33,7 +32,7 @@ final class CacheMetricsSource(val manager: CacheManager) {
   gauge("gauge.available_cache_size_mb")(
     if (manager.budgetKB > 0)
       math.max(0L, manager.budgetKB - manager.totalWeightKB) / 1024
-    else CacheManager.diskUsableBytes(manager.conf.cacheDir) >> 20)
+    else CacheManager.diskUsableBytes(manager.cacheDir) >> 20)
   gauge("gauge.cache_hit_rate")(m.hitRate)
   gauge("gauge.cache_miss_rate")(1.0 - m.hitRate)
   gauge("count.cache_eviction")(m.evictions.get)
@@ -59,24 +58,4 @@ final class CacheMetricsSource(val manager: CacheManager) {
   // latency distributions of the miss path (none on the hit path)
   metricRegistry.register("timer.remote_fetch", m.remoteFetch)
   metricRegistry.register("timer.cache_fill", m.cacheFill)
-}
-
-object CacheMetricsSource {
-  @volatile private var registered: CacheMetricsSource = _
-
-  /** Register the active CacheManager's metrics with this JVM's Spark
-    * MetricsSystem, when one is running (idempotent per manager; no-op
-    * outside a Spark runtime — plain Hadoop FS usage). */
-  def register(manager: CacheManager): Option[CacheMetricsSource] =
-    this.synchronized {
-      if (registered == null || (registered.manager ne manager)) {
-        val src = new CacheMetricsSource(manager)
-        if (!MetricsBridge.register(src.sourceName, src.metricRegistry))
-          return None
-        registered = src
-      }
-      Some(registered)
-    }
-
-  private[cache] def resetForTest(): Unit = this.synchronized { registered = null }
 }

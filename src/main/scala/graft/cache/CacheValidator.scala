@@ -30,7 +30,7 @@ object CacheValidator {
         new org.apache.hadoop.conf.Configuration())
       def open() = new CachingInputStream(
         () => fs.open(new org.apache.hadoop.fs.Path(f.getPath)),
-        "file:" + f.getPath, data.length.toLong, 1L, mgr)
+        "file:" + f.getPath, data.length.toLong, 1L, mgr, conf)
       // cold read-through
       val s1 = open()
       val buf = new Array[Byte](500)

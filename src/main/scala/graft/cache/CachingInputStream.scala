@@ -107,9 +107,11 @@ object ReadPlanner {
   * the reference (rubix-core CachingInputStream.java) re-expressed for
   * in-process use on Spark executors. Strategies:
   *
-  *  - Cached: positioned FileChannel reads from the local generation file;
-  *    any failure invalidates the entry and falls back to a direct read
-  *    (CachedReadRequestChain.java:149-223 fallback lattice).
+  *  - Cached: positioned FileChannel reads from the local generation file.
+  *    An entry evicted or re-generated since planning is a plain miss,
+  *    served from the store; a failed read of the live entry is
+  *    corruption, which invalidates that generation and falls back to a
+  *    direct read (CachedReadRequestChain.java:149-223 fallback lattice).
   *  - Remote (read-through fill): reads block-aligned spans from the
   *    source, one GET per collated group, returns the requested window,
   *    writes whole blocks into the sparse cache file and marks them cached
@@ -122,6 +124,9 @@ object ReadPlanner {
   *  - Direct: pass-through, used for dummy mode and fallbacks
   *    (DirectReadRequestChain.java).
   *
+  * Read policy comes from `conf`, the caching file system's own; the
+  * block size is the manager's, which fixes the layout.
+  *
   * Bytes served from the local cache or a peer count as bytes read in
   * `stats`, the caching file system's statistics, which Spark sums into
   * task input metrics. Store reads are counted by the inner client under
@@ -133,6 +138,7 @@ final class CachingInputStream(
     fileLen: Long,
     mtime: Long,
     manager: CacheManager,
+    conf: CacheConfig,
     stats: FileSystem.Statistics = null) extends FSInputStream
     with org.apache.hadoop.fs.StreamCapabilities {
 
@@ -144,7 +150,7 @@ final class CachingInputStream(
     org.apache.hadoop.fs.StreamCapabilities.VECTOREDIO
       .equalsIgnoreCase(capability)
 
-  private val conf = manager.conf
+  private val blockSize = manager.blockSize
   private var pos: Long = 0L
   private var closed = false
   @volatile private var remoteStream: FSDataInputStream = _
@@ -252,8 +258,8 @@ final class CachingInputStream(
 
   // ---- core ----
   private def readInternal(at: Long, buf: Array[Byte], off: Int, len: Int): Unit = {
-    val sb = BlockMath.startBlock(at, conf.blockSize)
-    val eb = BlockMath.endBlock(at, len, conf.blockSize)
+    val sb = BlockMath.startBlock(at, blockSize)
+    val eb = BlockMath.endBlock(at, len, blockSize)
     if (conf.dummyMode) {
       // shadow mode: account the cache state a real read leaves (a miss
       // in a small file fills the whole file), store nothing
@@ -262,7 +268,7 @@ final class CachingInputStream(
         st.blocks.exists(_ != BlockState.Cached)
       manager.setAllCached(path, fileLen, mtime, st.generation,
         if (whole) 0L else sb,
-        if (whole) BlockMath.blockCount(fileLen, conf.blockSize) else eb)
+        if (whole) BlockMath.blockCount(fileLen, blockSize) else eb)
       readFullyRemote(at, buf, off, len)
       return
     }
@@ -274,12 +280,12 @@ final class CachingInputStream(
             manager.metadataFor(path).fold(-1)(_.generation), e)
           readFullyRemote(at, buf, off, len); return
       }
-    val chains = ReadPlanner.plan(at, len, fileLen, conf.blockSize,
+    val chains = ReadPlanner.plan(at, len, fileLen, blockSize,
       conf.maxReadRequestSize, status, sb)
     chains.foreach {
       case NonLocalChain(owner, rs) =>
         executeNonLocal(owner, rs, buf, off, status.generation)
-      case CachedChain(rs) => executeCached(rs, buf, off)
+      case CachedChain(rs) => executeCached(rs, buf, off, status.generation)
       case RemoteChain(_) =>
     }
     val misses = chains.collect { case RemoteChain(rs) => rs }
@@ -297,9 +303,9 @@ final class CachingInputStream(
     * only. Nothing when the file changed generation since `generation`. */
   private def widened(sb: Long, eb: Long, generation: Int): Vector[ReadRange] = {
     val whole = manager.getCacheStatus(path, fileLen, mtime, 0,
-      BlockMath.blockCount(fileLen, conf.blockSize), counted = false)
+      BlockMath.blockCount(fileLen, blockSize), counted = false)
     if (whole.generation != generation) Vector.empty
-    else ReadPlanner.widen(fileLen, conf.blockSize, conf.maxReadRequestSize,
+    else ReadPlanner.widen(fileLen, blockSize, conf.maxReadRequestSize,
       whole.blocks, sb, eb)
   }
 
@@ -321,31 +327,28 @@ final class CachingInputStream(
     manager.metrics.bytesFromRemote.addAndGet(len.toLong)
   }
 
+  /** Serve a cached group from the data file of `generation`, the entry
+    * the plan saw. Between the plan and this read, eviction or
+    * invalidation can retire that entry, and a concurrent miss re-create
+    * the path as a fresh sparse file, whose holes read as zeros. So the
+    * read is optimistic: the entry must still be `generation` and its
+    * bitmap cover every block before the read (no wasted IO) and after
+    * it (no deletion began meanwhile; [[FileMetadata.deleteFiles]] marks
+    * the entry deleted under its lock before unlinking). An entry that
+    * fails either check is gone, a plain miss served from the store. A
+    * read that fails on the live entry is corruption: that generation is
+    * invalidated and the group re-served from the store. */
   private def executeCached(rs: Vector[ReadRange], buf: Array[Byte],
-      bufOff: Int): Unit = {
+      bufOff: Int, generation: Int): Unit = {
     val m = manager.metadataFor(path).orNull
-    val file = if (m != null) m.dataFile else null
-    // TOCTOU guard (r10 triple-stressor finding): between the planner's
-    // getCacheStatus and this read, eviction can delete the entry and a
-    // concurrent miss re-create it as a fresh SPARSE file at the same
-    // generation path — and reading a hole "succeeds" with zeros, the
-    // one failure mode the truncation/missing-file checks can't see.
-    // deleteFiles() sets the deleted flag under the instance lock BEFORE
-    // unlinking, so the optimistic read-validate below is race-free:
-    // validate the CURRENT instance's bitmap covers every block (pre —
-    // avoids wasted IO; a re-created sparse instance fails here), read,
-    // then re-validate (post — if no deletion started during the reads,
-    // the bytes came from a consistent file; otherwise re-serve direct).
-    def covers: Boolean = rs.forall { r =>
-      m.allCached(BlockMath.startBlock(r.actualStart, conf.blockSize),
-        BlockMath.endBlock(r.actualStart, r.actualLen, conf.blockSize))
-    }
+    def live: Boolean = m != null && m.generation == generation &&
+      rs.forall { r =>
+        m.allCached(BlockMath.startBlock(r.actualStart, blockSize),
+          BlockMath.endBlock(r.actualStart, r.actualLen, blockSize))
+      }
+    if (!live) return readGroupRemote(rs, buf, bufOff)
     try {
-      if (m == null || m.isDeleted || !file.exists())
-        throw new IOException(s"cache entry missing for $path")
-      if (!covers)
-        throw new IOException(s"cache entry no longer covers read for $path")
-      val ch = FileChannel.open(file.toPath, StandardOpenOption.READ)
+      val ch = FileChannel.open(m.dataFile.toPath, StandardOpenOption.READ)
       try {
         rs.foreach { r =>
           val bb = ByteBuffer.wrap(buf, bufOff + r.destOffset, r.actualLen)
@@ -353,26 +356,24 @@ final class CachingInputStream(
           while (bb.hasRemaining) {
             val n = ch.read(bb, p)
             if (n < 0) throw new EOFException(
-              s"cached file truncated at $p (${file.getPath})")
+              s"cached file truncated at $p (${m.dataFile.getPath})")
             p += n
           }
         }
       } finally ch.close()
-      if (!covers)
-        throw new IOException(s"cache entry deleted during read of $path")
-      val n = rs.map(_.actualLen.toLong).sum
-      manager.metrics.bytesFromCache.addAndGet(n)
-      if (stats != null) stats.incrementBytesRead(n)
     } catch {
-      case e: Exception =>
-        // corruption fallback: invalidate and serve direct
+      case e: Exception if live =>
         manager.metrics.corruptionFallbacks.incrementAndGet()
-        manager.invalidate(path)
+        manager.invalidate(path, generation)
         if (conf.strict) throw e
-        FallbackLog.warn("cache-read", path,
-          if (m != null) m.generation else -1, e)
-        readGroupRemote(rs, buf, bufOff)
+        FallbackLog.warn("cache-read", path, generation, e)
+        return readGroupRemote(rs, buf, bufOff)
+      case _: Exception => return readGroupRemote(rs, buf, bufOff)
     }
+    if (!live) return readGroupRemote(rs, buf, bufOff)
+    val n = rs.map(_.actualLen.toLong).sum
+    manager.metrics.bytesFromCache.addAndGet(n)
+    if (stats != null) stats.incrementBytesRead(n)
   }
 
   /** Peer-cache read (NonLocalReadRequestChain.java:107-146): one socket
@@ -425,7 +426,11 @@ final class CachingInputStream(
         buf, bufOff + r.destOffset, r.actualLen)
       manager.metrics.extraReadBytes.addAndGet(r.extraBytes)
     }
-    manager.fill(path, fileLen, mtime, generation, backendStart, scratch, span)
+    try manager.fill(path, fileLen, mtime, generation, backendStart, scratch, span)
+    catch {
+      case NonFatal(e) if !conf.strict => // the miss persists
+        FallbackLog.warn("fill", path, generation, e)
+    }
   }
 }
 

@@ -16,10 +16,11 @@ final class FileMetadata(
     val fileLen: Long,
     val lastModified: Long,
     val generation: Int,
-    conf: CacheConfig) {
+    blockSize: Int,
+    cacheDir: String) {
 
-  val blockCount: Long = BlockMath.blockCount(fileLen, conf.blockSize)
-  private val md = CacheFileLayout.mdFile(conf.cacheDir, remotePath, generation)
+  val blockCount: Long = BlockMath.blockCount(fileLen, blockSize)
+  private val md = CacheFileLayout.mdFile(cacheDir, remotePath, generation)
   private var deleted = false
 
   /** True when this entry describes the remote file version
@@ -28,24 +29,26 @@ final class FileMetadata(
   def matches(fileLen: Long, mtime: Long): Boolean =
     this.fileLen == fileLen && lastModified == mtime
 
-  /** Restore the persisted bitmap ONLY when its 16-byte header proves it
-    * describes THIS file version. Without the header (r10 format), a
-    * fresh JVM adopted any same-generation bitmap by length alone — so a
-    * remote file overwritten with equal length but different content
-    * between JVMs was served from the stale data file: the in-memory
-    * mtime-mismatch invalidation in CacheManager.metadata only fires for
-    * entries already in the manager's LRU, which a restart empties. (Found by
-    * c13: a repeated scratch path made the previous JVM's cache poison
-    * the next run's peer-read contract.) Headerless/mismatched md files
-    * restore empty — the cache re-warms, which is always safe. */
+  /** Restore the persisted bitmap ONLY when its header proves it
+    * describes THIS file version under THIS block size. Without the
+    * version pin (r10 format), a fresh JVM adopted any same-generation
+    * bitmap by length alone — so a remote file overwritten with equal
+    * length but different content between JVMs was served from the stale
+    * data file: the in-memory mtime-mismatch invalidation in
+    * CacheManager.metadata only fires for entries already in the
+    * manager's LRU, which a restart empties. (Found by c13: a repeated
+    * scratch path made the previous JVM's cache poison the next run's
+    * peer-read contract.) Without the block-size pin, a restart under
+    * another `graft.cache.block.size` adopted a bitmap of the same byte
+    * length whose bits name other byte ranges. Headerless, older-format
+    * or mismatched mdfiles restore empty — the cache re-warms, which is
+    * always safe. */
   private val bitmap: BlockBitmap = {
     val expected = FileMetadata.HeaderLen + BlockBitmap.byteLength(blockCount)
     if (md.exists() && md.length() == expected) {
       val bytes = Files.readAllBytes(md.toPath)
       val bb = java.nio.ByteBuffer.wrap(bytes, 0, FileMetadata.HeaderLen)
-      val hLen = bb.getLong
-      val hMtime = bb.getLong
-      if (matches(hLen, hMtime))
+      if (bb.getInt == blockSize && matches(bb.getLong, bb.getLong))
         BlockBitmap.fromBytes(blockCount, java.util.Arrays.copyOfRange(
           bytes, FileMetadata.HeaderLen, bytes.length))
       else BlockBitmap.empty(blockCount)
@@ -76,7 +79,7 @@ final class FileMetadata(
   /** Weight in KB of cached data, in whole blocks (the LRU budget's unit,
     * reference FileMetadata.getWeight:375-378). */
   def weightKB: Int = synchronized {
-    math.max(1, (cachedBlockCount.toLong * conf.blockSize / 1024).toInt)
+    math.max(1, (cachedBlockCount.toLong * blockSize / 1024).toInt)
   }
 
   private def persist(): Unit = {
@@ -84,13 +87,13 @@ final class FileMetadata(
     val tmp = new File(md.getPath + ".tmp")
     val body = bitmap.toBytes
     val out = java.nio.ByteBuffer.allocate(FileMetadata.HeaderLen + body.length)
-    out.putLong(fileLen).putLong(lastModified).put(body)
+    out.putInt(blockSize).putLong(fileLen).putLong(lastModified).put(body)
     Files.write(tmp.toPath, out.array())
     Files.move(tmp.toPath, md.toPath, StandardCopyOption.REPLACE_EXISTING,
       StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def dataFile: File = CacheFileLayout.dataFile(conf.cacheDir, remotePath, generation)
+  def dataFile: File = CacheFileLayout.dataFile(cacheDir, remotePath, generation)
 
   /** Ensure the sparse data file exists with full logical length. A
     * retired instance must never re-create files its deletion already
@@ -117,14 +120,17 @@ final class FileMetadata(
   /** Delete data + md files (eviction, invalidation or clear). */
   def deleteFiles(): Unit = synchronized {
     deleted = true
-    CacheFileLayout.deleteGenerations(conf.cacheDir, remotePath, generation)
+    CacheFileLayout.deleteGenerations(cacheDir, remotePath, generation)
   }
 
   def isDeleted: Boolean = synchronized(deleted)
 }
 
 object FileMetadata {
-  /** mdfile header: [fileLen: Long][lastModified: Long] before the
-    * bitmap bytes — the file-version pin the restore path validates. */
-  val HeaderLen: Int = 16
+  /** mdfile header: [blockSize: Int][fileLen: Long][lastModified: Long]
+    * before the bitmap bytes — the layout and file-version pins the
+    * restore path validates. The block size leads, so the high word of an
+    * older-format file's leading length (0 below 4 GiB) never passes for
+    * one. */
+  val HeaderLen: Int = 20
 }

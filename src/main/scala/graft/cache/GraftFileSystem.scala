@@ -64,7 +64,6 @@ class GraftFileSystem extends FileSystem {
     enabled = conf.getBoolean(CacheConfig.EnabledKey, true) &&
       projectionAdmitted(conf)
     manager = CacheManager.getOrInit(cacheConf)
-    CacheMetricsSource.register(manager)
     workingDir = new Path("/")
   }
 
@@ -188,7 +187,8 @@ class GraftFileSystem extends FileSystem {
         inner.openFile(ip).withFileStatus(st)
           .optLong(Options.OpenFileOptions.FS_OPTION_OPENFILE_BUFFER_SIZE, bufferSize)
           .build()),
-      ip.toString, st.getLen, st.getModificationTime, manager, statistics)
+      ip.toString, st.getLen, st.getModificationTime, manager, cacheConf,
+      statistics)
     new FSDataInputStream(new BufferedFSInputStream(stream,
       math.max(bufferSize, 4096)))
   }

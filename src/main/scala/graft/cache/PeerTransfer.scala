@@ -87,8 +87,8 @@ final class PeerTransferServer(manager: CacheManager,
       val m = manager.metadataFor(r.path).orNull
       if (m == null || m.isDeleted) { reply(ch, PeerTransfer.StatusNotCached); return }
       if (!m.matches(r.fileLen, r.mtime)) { reply(ch, PeerTransfer.StatusStale); return }
-      val sb = BlockMath.startBlock(r.offset, manager.conf.blockSize)
-      val eb = BlockMath.endBlock(r.offset, r.length.toLong, manager.conf.blockSize)
+      val sb = BlockMath.startBlock(r.offset, manager.blockSize)
+      val eb = BlockMath.endBlock(r.offset, r.length.toLong, manager.blockSize)
       if (!m.allCached(sb, eb)) { reply(ch, PeerTransfer.StatusNotCached); return }
       val file = m.dataFile
       if (!file.exists()) { reply(ch, PeerTransfer.StatusNotCached); return }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.cache.CacheManager
+import graft.cache.{CacheConfig, CacheManager}
 
 /** Queries that exercise the caching I/O layer itself: same SQL semantics
   * as a direct scan (so the DuckDB oracle is the plain query), but the scan
@@ -361,10 +361,7 @@ object CacheQueries {
     // states `true` for each, so an admission regression in either
     // direction (narrow scans polluting the cache, or wide scans
     // bypassing it) hash-fails the gate. The data payload is the wide
-    // aggregate itself. Metrics come from the manager bound to the
-    // session-keyed FS — per-scan confs (the refused narrow path) swap
-    // CacheManager.current to a throwaway instance, so the session
-    // manager is the one whose counters must stay flat. Both checks read
+    // aggregate itself. Both checks read the session manager's
     // per-execution TAGGED counters (MetricsTag), so any neighbor —
     // including another execution of this query — may run concurrently;
     // the round-9 serial lane existed only for the global-delta reads.
@@ -377,9 +374,7 @@ object CacheQueries {
         | true AS narrow_bypassed, true AS wide_admitted
         |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, dir) =>
       enableCacheFs(s)
-      val m = org.apache.hadoop.fs.FileSystem.get(
-        java.net.URI.create("graft:///"), s.sessionState.newHadoopConf())
-        .asInstanceOf[graft.cache.GraftFileSystem].cacheManager.metrics
+      val m = sessionManager(s).metrics
       val path = s"$dir/lineitem.parquet"
       val floorOpt = graft.cache.CacheConfig.MinColumnsKey -> "5"
       def wide(withFloor: Boolean) = {
@@ -500,14 +495,15 @@ object CacheQueries {
       val pc = new org.apache.hadoop.conf.Configuration(false)
       pc.set(graft.cache.CacheConfig.CacheDirKey, s"$base/peer-cache")
       new java.io.File(s"$base/peer-cache").mkdirs()
-      val peer = new graft.cache.CacheManager(graft.cache.CacheConfig.from(pc))
+      val peerConf = CacheConfig.from(pc)
+      val peer = new CacheManager(peerConf)
       val localFs = org.apache.hadoop.fs.FileSystem
         .getLocal(s.sparkContext.hadoopConfiguration)
       val ip = new org.apache.hadoop.fs.Path(key)
       val st = localFs.getFileStatus(ip)
       val cis = new graft.cache.CachingInputStream(
         () => localFs.open(ip), key, st.getLen, st.getModificationTime,
-        peer)
+        peer, peerConf)
       try {
         val buf = new Array[Byte](1 << 20)
         var pos = 0L
@@ -593,9 +589,8 @@ object CacheQueries {
       pc.set(graft.cache.CacheConfig.CacheDirKey, s"$base/cache")
       pc.setInt(graft.cache.CacheConfig.BlockSizeKey, 32 * 1024)
       pc.setInt(graft.cache.CacheConfig.DiskFullnessKey, 50)
-      val mgr = new graft.cache.CacheManager(
-        graft.cache.CacheConfig.from(pc),
-        usableDiskBytes = 3L * srcBytes.length)
+      val cc = CacheConfig.from(pc)
+      val mgr = new CacheManager(cc, usableDiskBytes = 3L * srcBytes.length)
       val localFs = org.apache.hadoop.fs.FileSystem
         .getLocal(s.sparkContext.hadoopConfiguration)
       try {
@@ -610,7 +605,7 @@ object CacheQueries {
           val out = new java.io.ByteArrayOutputStream(srcBytes.length)
           val cis = new graft.cache.CachingInputStream(
             () => localFs.open(ip), key, st.getLen, st.getModificationTime,
-            mgr)
+            mgr, cc)
           try {
             val buf = new Array[Byte](64 * 1024)
             var pos = 0L
@@ -682,16 +677,16 @@ object CacheQueries {
         pc.setInt(graft.cache.CacheConfig.BlockSizeKey, 32 * 1024)
         pc.setInt(graft.cache.CacheConfig.DiskFullnessKey, 50)
         pc.setBoolean(graft.cache.CacheConfig.DummyKey, dummy)
-        new graft.cache.CacheManager(graft.cache.CacheConfig.from(pc),
-          usableDiskBytes = 3L * srcBytes.length)
+        val cc = CacheConfig.from(pc)
+        (new CacheManager(cc, usableDiskBytes = 3L * srcBytes.length), cc)
       }
-      val shadow = mkMgr(s"$base/shadow-cache", dummy = true)
-      val real = mkMgr(s"$base/real-cache", dummy = false)
+      val (shadow, shadowConf) = mkMgr(s"$base/shadow-cache", dummy = true)
+      val (real, realConf) = mkMgr(s"$base/real-cache", dummy = false)
       val localFs = org.apache.hadoop.fs.FileSystem
         .getLocal(s.sparkContext.hadoopConfiguration)
       try {
         var bytesOk = true
-        def stream(mgr: graft.cache.CacheManager, i: Int): Array[Byte] = {
+        def stream(mgr: CacheManager, cc: CacheConfig, i: Int): Array[Byte] = {
           val p = s"$base/ws/orders_$i.parquet"
           val key = new org.apache.hadoop.fs.Path("file", null, p).toString
           val ip = new org.apache.hadoop.fs.Path(key)
@@ -699,7 +694,7 @@ object CacheQueries {
           val out = new java.io.ByteArrayOutputStream(srcBytes.length)
           val cis = new graft.cache.CachingInputStream(
             () => localFs.open(ip), key, st.getLen, st.getModificationTime,
-            mgr)
+            mgr, cc)
           try {
             val buf = new Array[Byte](64 * 1024)
             var pos = 0L
@@ -720,9 +715,9 @@ object CacheQueries {
           (m.metrics.cachedRequests.get, m.metrics.remoteRequests.get)
         def permille(h: Long, m: Long): Long = h * 1000L / math.max(1L, h + m)
 
-        (0 until nCopies).foreach(stream(shadow, _)) // shadow warm-mark
+        (0 until nCopies).foreach(stream(shadow, shadowConf, _)) // shadow warm-mark
         val (sh0, sm0) = hitsMisses(shadow)
-        (0 until nCopies).foreach(stream(shadow, _)) // shadow re-read
+        (0 until nCopies).foreach(stream(shadow, shadowConf, _)) // shadow re-read
         val (sh1, sm1) = hitsMisses(shadow)
         val predicted = permille(sh1 - sh0, sm1 - sm0)
         val shadowDataBytes = {
@@ -734,11 +729,11 @@ object CacheQueries {
           finally st.close()
         }
 
-        (0 until nCopies).foreach(stream(real, _)) // real warm
+        (0 until nCopies).foreach(stream(real, realConf, _)) // real warm
         val (rh0, rm0) = hitsMisses(real)
         var recon: Array[Byte] = null
         (0 until nCopies).foreach { i =>
-          val got = stream(real, i) // real re-read
+          val got = stream(real, realConf, i) // real re-read
           if (i == 0) recon = got
         }
         val (rh1, rm1) = hitsMisses(real)
@@ -779,40 +774,21 @@ object CacheQueries {
       }
     })
 
-  /** The session-keyed FS's live CacheManager (same resolution as
-    * [[metricsSnapshot]]). */
-  private def sessionManager(s: SparkSession): graft.cache.CacheManager =
-    org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create("graft:///"), s.sessionState.newHadoopConf())
-      .asInstanceOf[graft.cache.GraftFileSystem].cacheManager
+  /** The session's cache manager: the JVM's one manager of the cache
+    * directories the session conf names, which every `graft://` file
+    * system of the session reads through. */
+  private def sessionManager(s: SparkSession): CacheManager =
+    CacheManager.getOrInit(CacheConfig.from(s.sessionState.newHadoopConf()))
 
-  /** Cache metrics snapshot, resolved through the JVM-cached session FS
-    * (fallback: CacheManager.current when graft:// was never wired).
-    * Resolution through FileSystem.get matters: refused-admission narrow
-    * scans (c11, GraftScanBuilder) run on per-scan confs whose throwaway
-    * FS instances swap CacheManager.current — a reader that trusted
-    * `current` after one of those would see frozen counters (c08 went
-    * red in round 8 exactly this way when queries(…) map order put c11
-    * before c08). */
+  /** Cache metrics snapshot of the session manager. */
   def metricsSnapshot(s: SparkSession): Map[String, Long] =
-    scala.util.Try(sessionMetrics(s).snapshot.toMap)
-      .getOrElse(
-        CacheManager.current.map(_.metrics.snapshot.toMap).getOrElse(Map.empty))
-
-  /** The session-keyed FS's live metrics instance (same resolution as
-    * [[metricsSnapshot]]). */
-  private def sessionMetrics(s: SparkSession): graft.cache.CacheMetrics =
-    org.apache.hadoop.fs.FileSystem.get(
-      java.net.URI.create("graft:///"), s.sessionState.newHadoopConf())
-      .asInstanceOf[graft.cache.GraftFileSystem]
-      .cacheManager.metrics
+    sessionManager(s).metrics.snapshot.toMap
 
   /** Per-execution tagged counters off the session FS metrics (c08/c12's
     * contract source; zeros when the tag never recorded). */
   def taggedMetrics(s: SparkSession, tag: String): Map[String, Long] =
-    scala.util.Try(sessionMetrics(s).taggedSnapshot(tag))
-      .getOrElse(Map.empty[String, Long].withDefaultValue(0L))
+    sessionManager(s).metrics.taggedSnapshot(tag)
 
   private def dropTag(s: SparkSession, tag: String): Unit =
-    scala.util.Try(sessionMetrics(s).dropTag(tag))
+    sessionManager(s).metrics.dropTag(tag)
 }

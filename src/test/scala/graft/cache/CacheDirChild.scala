@@ -40,7 +40,7 @@ object CacheDirChild {
           line.trim.split(' ') match {
             case Array("read", pos, len) =>
               val s = new CachingInputStream(() => fs.open(p), path,
-                st.getLen, st.getModificationTime, mgr)
+                st.getLen, st.getModificationTime, mgr, conf)
               try s.readFully(pos.toLong, new Array[Byte](len.toInt))
               finally s.close()
             case Array("invalidate") => mgr.invalidate(path)

@@ -43,14 +43,16 @@ class CacheDirOwnerSpec extends AnyFunSuite with CacheFixture {
     }
   }
 
-  private def mgrOn(dir: String): CacheManager = {
+  private def confOn(dir: String): CacheConfig = {
     val c = new Configuration()
     c.setInt(CacheConfig.BlockSizeKey, 100)
     c.set(CacheConfig.CacheDirKey, dir)
     c.setBoolean(CacheConfig.StrictKey, false)
     c.setInt(CacheConfig.MaxReadRequestKey, 1000)
-    new CacheManager(CacheConfig.from(c))
+    CacheConfig.from(c)
   }
+
+  private def mgrOn(dir: String): CacheManager = new CacheManager(confOn(dir))
 
   private def status(mgr: CacheManager, f: String): CacheStatus = {
     val st = localFs.getFileStatus(new org.apache.hadoop.fs.Path(f))
@@ -69,7 +71,7 @@ class CacheDirOwnerSpec extends AnyFunSuite with CacheFixture {
       a("invalidate") // A unlinks generation 1
       a("restart") // a restarted A seeds generation 1 from the empty disk
       a("read 500 100") // and its miss re-creates generation 1, sparse
-      val s = openCaching(f, b)
+      val s = openCaching(f, b, mkConf(strict = false))
       val got = readAll(s, 0, 100)
       s.close()
       assert(got.sameElements(content.slice(0, 100)),
@@ -85,7 +87,7 @@ class CacheDirOwnerSpec extends AnyFunSuite with CacheFixture {
     try a(s"read 0 ${content.length}")
     finally a.close()
     val b = mgrOn(dir)
-    val s = openCaching(f, b)
+    val s = openCaching(f, b, mkConf(strict = false))
     assert(readAll(s, 0, content.length).sameElements(content))
     s.close()
     assert(b.metrics.bytesFromRemote.get == 0,
@@ -106,7 +108,7 @@ class CacheDirOwnerSpec extends AnyFunSuite with CacheFixture {
         new File(taken, s".jvm-$pid").getCanonicalPath)
       val f = TestFiles.write(tmp, "data/private.bin", content)
       val b = mgrOn(taken.getPath)
-      val s = openCaching(f, b)
+      val s = openCaching(f, b, mkConf(strict = false))
       readAll(s, 0, 300); s.close()
       assert(status(b, f).blocks.take(3).forall(_ == BlockState.Cached))
       assert(!new File(taken, "local").exists(),
@@ -134,15 +136,15 @@ class CacheDirOwnerSpec extends AnyFunSuite with CacheFixture {
     val f = TestFiles.write(tmp, "data/valid.bin", content)
     val dir = s"$tmp/validated"
     val mgr = mgrOn(dir)
-    val s = openCaching(f, mgr)
+    val s = openCaching(f, mgr, mkConf(strict = false))
     readAll(s, 0, content.length); s.close()
     // an orphan mdfile in another JVM's private directory
     val other = new File(dir, ".jvm-3/local/x"); other.mkdirs()
     new File(other, "a_mdfile_g1").createNewFile()
-    val r = CacheValidator.validateFiles(mgr.conf)
+    val r = CacheValidator.validateFiles(confOn(dir))
     assert(r.dataFiles == 1 && r.mdFiles == 1, r.toString)
     assert(r.orphanMd.isEmpty && r.orphanData.isEmpty, r.toString)
-    assert(CacheValidator.filesConsistent(mgr.conf))
+    assert(CacheValidator.filesConsistent(confOn(dir)))
     mgr.clear()
   }
 }

@@ -60,11 +60,15 @@ trait CacheFixture extends BeforeAndAfterEach { self: AnyFunSuite =>
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
   }
 
-  def openCaching(file: String, mgr: CacheManager = null): CachingInputStream = {
+  /** A stream over `file` through `mgr` (default: the fixture's manager)
+    * under the read policy of `policy` (default: the fixture's conf). */
+  def openCaching(file: String, mgr: CacheManager = null,
+      policy: CacheConfig = null): CachingInputStream = {
     val m = if (mgr == null) manager else mgr
     val st = localFs.getFileStatus(new Path(file))
     new CachingInputStream(() => localFs.open(new Path(file)),
-      "file:" + file, st.getLen, st.getModificationTime, m)
+      "file:" + file, st.getLen, st.getModificationTime, m,
+      if (policy == null) conf else policy)
   }
 
   def readAll(s: CachingInputStream, pos: Long, len: Int): Array[Byte] = {
@@ -143,9 +147,10 @@ class CachingInputStreamSpec extends AnyFunSuite with CacheFixture {
   }
 
   test("corrupted cache file falls back to direct and invalidates") {
-    val relaxed = new CacheManager(mkConf(strict = false))
+    val relaxedConf = mkConf(strict = false)
+    val relaxed = new CacheManager(relaxedConf)
     val f = TestFiles.write(tmp, "data/corrupt.bin", content)
-    val s1 = openCaching(f, relaxed)
+    val s1 = openCaching(f, relaxed, relaxedConf)
     readAll(s1, 0, 1000)
     s1.close()
     val m = relaxed.metadataFor("file:" + f).get
@@ -153,7 +158,7 @@ class CachingInputStreamSpec extends AnyFunSuite with CacheFixture {
     val raf = new java.io.RandomAccessFile(m.dataFile, "rw")
     raf.setLength(10)
     raf.close()
-    val s2 = openCaching(f, relaxed)
+    val s2 = openCaching(f, relaxed, relaxedConf)
     val got = readAll(s2, 0, 1000)
     s2.close()
     assert(got.sameElements(content.slice(0, 1000)),
@@ -197,9 +202,10 @@ class CachingInputStreamSpec extends AnyFunSuite with CacheFixture {
   }
 
   test("dummy mode: stats move, no data stored") {
-    val dummyMgr = new CacheManager(mkConf(dummy = true))
+    val dummyConf = mkConf(dummy = true)
+    val dummyMgr = new CacheManager(dummyConf)
     val f = TestFiles.write(tmp, "data/dummy.bin", content)
-    val s = openCaching(f, dummyMgr)
+    val s = openCaching(f, dummyMgr, dummyConf)
     val got = readAll(s, 0, 500)
     s.close()
     assert(got.sameElements(content.slice(0, 500)))
@@ -285,5 +291,20 @@ class CacheManagerSpec extends AnyFunSuite with CacheFixture {
     assert(st3.generation == 2, "generation must be rediscovered from disk")
     assert(st3.blocks.forall(_ == BlockState.Cached),
       "mdfile must be re-adopted after restart")
+  }
+
+  test("a restart under another block size restores no bitmap") {
+    val bytes = content.take(250)
+    val f = TestFiles.write(tmp, "m/bs.bin", bytes)
+    val capped = mkConf().copy(maxReadRequestSize = 100) // no whole-file fill
+    val s1 = openCaching(f, new CacheManager(capped), capped)
+    assert(readAll(s1, 200, 50).sameElements(bytes.drop(200))) // block 2 of 3
+    s1.close()
+    // "restart" at 50-byte blocks: a bitmap of the same byte length, in
+    // which bit 2 would name bytes 100-150
+    val halved = capped.copy(blockSize = 50)
+    val s2 = openCaching(f, new CacheManager(halved), halved)
+    assert(readAll(s2, 0, 250).sameElements(bytes))
+    s2.close()
   }
 }

@@ -44,7 +44,7 @@ class DiskBudgetSpec extends AnyFunSuite with CacheFixture {
     val content = new Array[Byte](100 * 1024)
     (0 until 30).foreach { i =>
       val f = TestFiles.write(tmp, s"data/budget$i.bin", content)
-      val s = openCaching(f, mgr)
+      val s = openCaching(f, mgr, mkConf(strict = false))
       readAll(s, 0, content.length)
       s.close()
     }

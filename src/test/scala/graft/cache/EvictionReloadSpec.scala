@@ -4,16 +4,18 @@ import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the eviction/reload generation invariant behind the r14
-  * stress-gate corruption fix: once the weigher evicts a file's
-  * metadata, ANY subsequent reload of that path must start COLD at a
-  * BUMPED generation — never re-adopt the evicted generation's persisted
-  * bitmap (whose files the deferred removal listener deletes). Before
-  * the fix, a reload racing into the removal-to-listener window restored
-  * the old bitmap, lost its files to the listener, and a later warm
-  * re-created a sparse data file that served zeros under covers=true
-  * (StressGateSpec byte mismatch, ~1-in-3 at 8 threads). Cross-JVM warm
-  * restore (the r11 restart feature) is unaffected: a fresh JVM seeds
-  * generations from the disk layout and no eviction has retired them. */
+  * stress-gate corruption fix: once the owned LRU evicts a file, ANY
+  * subsequent reload of that path must start COLD at a BUMPED generation
+  * — never re-adopt the evicted generation's persisted bitmap. The LRU
+  * evicts inside the call that charges the budget, and under the
+  * manager lock it drops the entry, bumps the path's generation and
+  * deletes the entry's files before the lock is released; so no reload
+  * can restore the old bitmap and then lose its files, and no later warm
+  * can re-create a sparse data file that serves zeros under covers=true
+  * (StressGateSpec byte mismatch, ~1-in-3 at 8 threads, before the fix).
+  * Cross-JVM warm restore (the r11 restart feature) is unaffected: a
+  * fresh JVM seeds generations from the disk layout and no eviction has
+  * retired them. */
 class EvictionReloadSpec extends AnyFunSuite with CacheFixture {
   private val content = TestFiles.alphabetContent(1, 100) // 2600 B, 26 blocks
 
@@ -33,12 +35,12 @@ class EvictionReloadSpec extends AnyFunSuite with CacheFixture {
     try {
       val fA = TestFiles.write(tmp, "data/evA.bin", content)
       val fB = TestFiles.write(tmp, "data/evB.bin", content)
-      val sA = openCaching(fA, mgr)
+      val sA = openCaching(fA, mgr, mkConf(strict = false))
       readAll(sA, 0, content.length); sA.close()
       val genA = mgr.metadataFor("file:" + fA).get.generation
       assert(mgr.metadataFor("file:" + fA).get.cachedBlockCount == 26)
 
-      val sB = openCaching(fB, mgr) // exceeds the 3 KB budget -> evicts
+      val sB = openCaching(fB, mgr, mkConf(strict = false)) // exceeds the 3 KB budget -> evicts
       readAll(sB, 0, content.length); sB.close()
       assert(mgr.metrics.evictions.get > 0, "second file must evict under budget")
 
@@ -54,7 +56,7 @@ class EvictionReloadSpec extends AnyFunSuite with CacheFixture {
       assert(reborn.generation > (if (evicted == fA) genA else 1),
         s"reload after eviction must bump the generation, got ${reborn.generation}")
       // and the reloaded instance re-warms normally, byte-exact
-      val s2 = openCaching(evicted, mgr)
+      val s2 = openCaching(evicted, mgr, mkConf(strict = false))
       assert(readAll(s2, 0, content.length).sameElements(content))
       s2.close()
     } finally mgr.clear()
@@ -69,7 +71,7 @@ class EvictionReloadSpec extends AnyFunSuite with CacheFixture {
     c.setInt(CacheConfig.MaxReadRequestKey, 1000)
     val m1 = new CacheManager(CacheConfig.from(c))
     val f = TestFiles.write(tmp, "data/evC.bin", content)
-    val s1 = openCaching(f, m1)
+    val s1 = openCaching(f, m1, mkConf(strict = false))
     readAll(s1, 0, content.length); s1.close()
     assert(m1.metadataFor("file:" + f).get.cachedBlockCount == 26)
     // fresh manager over the same disk layout (files NOT deleted)

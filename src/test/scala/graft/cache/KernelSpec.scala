@@ -160,18 +160,18 @@ class MetadataRestoreSpec extends org.scalatest.funsuite.AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-mdr-").toString
     val cc = conf(dir)
     val path = "file:/data/t.bin"
-    val m1 = new FileMetadata(path, 4L * cc.blockSize, 1111L, 1, cc)
+    val m1 = new FileMetadata(path, 4L * cc.blockSize, 1111L, 1, cc.blockSize, cc.cacheDir)
     m1.setBlocksCached(0, 3)
     // same version "after a restart": bitmap restored
-    val m2 = new FileMetadata(path, 4L * cc.blockSize, 1111L, 1, cc)
+    val m2 = new FileMetadata(path, 4L * cc.blockSize, 1111L, 1, cc.blockSize, cc.cacheDir)
     assert(m2.allCached(0, 3) && !m2.isBlockCached(3),
       "same-version restore must recover the persisted bitmap")
     // changed mtime (same length!): bitmap must NOT restore
-    val m3 = new FileMetadata(path, 4L * cc.blockSize, 2222L, 1, cc)
+    val m3 = new FileMetadata(path, 4L * cc.blockSize, 2222L, 1, cc.blockSize, cc.cacheDir)
     assert(!m3.isBlockCached(0),
       "a changed file version must restore an EMPTY bitmap")
     // changed length: also empty (and a different bitmap size anyway)
-    val m4 = new FileMetadata(path, 5L * cc.blockSize, 1111L, 1, cc)
+    val m4 = new FileMetadata(path, 5L * cc.blockSize, 1111L, 1, cc.blockSize, cc.cacheDir)
     assert(!m4.isBlockCached(0))
   }
 
@@ -185,7 +185,7 @@ class MetadataRestoreSpec extends org.scalatest.funsuite.AnyFunSuite {
     val blocks = BlockMath.blockCount(4L * cc.blockSize, cc.blockSize)
     java.nio.file.Files.write(md.toPath,
       Array.fill(BlockBitmap.byteLength(blocks))(0xFF.toByte))
-    val m = new FileMetadata(path, 4L * cc.blockSize, 1111L, 1, cc)
+    val m = new FileMetadata(path, 4L * cc.blockSize, 1111L, 1, cc.blockSize, cc.cacheDir)
     assert(!m.isBlockCached(0), "legacy headerless mdfile must not restore")
   }
 }

@@ -105,26 +105,27 @@ class ParallelChainSpec extends org.scalatest.funsuite.AnyFunSuite with CacheFix
     c.set(CacheConfig.CacheDirKey, cacheDir)
     c.setBoolean(CacheConfig.StrictKey, true)
     c.setInt(CacheConfig.MaxReadRequestKey, 300) // force many chains
-    val mgr = new CacheManager(CacheConfig.from(c))
+    val cc = CacheConfig.from(c)
+    val mgr = new CacheManager(cc)
     val f = TestFiles.write(tmp, "p/par.bin", content)
     // pre-warm a scattered set of blocks so plans interleave cached+remote
-    val s0 = openCaching(f, mgr)
+    val s0 = openCaching(f, mgr, cc)
     Seq(400, 1200, 2600, 4400).foreach(p => readAll(s0, p, 100))
     s0.close()
     val rnd = new scala.util.Random(11)
     (1 to 20).foreach { _ =>
       val pos = rnd.nextInt(content.length - 1500)
       val len = 300 + rnd.nextInt(1200)
-      val s = openCaching(f, mgr)
+      val s = openCaching(f, mgr, cc)
       val got = readAll(s, pos, len)
       s.close()
       assert(got.sameElements(content.slice(pos, pos + len)), s"at $pos+$len")
     }
     // everything read is now cached; a full warm read touches no source
-    val s1 = openCaching(f, mgr)
+    val s1 = openCaching(f, mgr, cc)
     readAll(s1, 0, content.length); s1.close()
     val before = mgr.metrics.bytesFromRemote.get
-    val s2 = openCaching(f, mgr)
+    val s2 = openCaching(f, mgr, cc)
     assert(readAll(s2, 0, content.length).sameElements(content))
     s2.close()
     assert(mgr.metrics.bytesFromRemote.get == before)

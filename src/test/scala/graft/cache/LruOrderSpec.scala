@@ -19,13 +19,14 @@ class LruOrderSpec extends AnyFunSuite with CacheFixture {
     c.setInt(CacheConfig.DiskFullnessKey, 50)
     c.setInt(CacheConfig.MaxReadRequestKey, 1000)
     // 11 KB usable at 50% fullness: a 5 KB budget
-    val mgr = new CacheManager(CacheConfig.from(c), usableDiskBytes = 11L << 10)
+    val cc = CacheConfig.from(c)
+    val mgr = new CacheManager(cc, usableDiskBytes = 11L << 10)
     try {
       val Seq(a, b, cf) = Seq("A", "B", "C").map(n =>
         TestFiles.write(tmp, s"lru/$n.bin", content))
       def key(f: String) = "file:" + f
       def read(f: String): Unit = {
-        val s = openCaching(f, mgr)
+        val s = openCaching(f, mgr, cc)
         try assert(readAll(s, 0, content.length).sameElements(content))
         finally s.close()
         assert(mgr.totalWeightKB <= mgr.budgetKB,
@@ -63,14 +64,15 @@ class LruOrderSpec extends AnyFunSuite with CacheFixture {
     c.setInt(CacheConfig.DiskFullnessKey, 50)
     c.setInt(CacheConfig.MaxReadRequestKey, 64 << 10)
     // 17.5 KB usable at 50% fullness: an 8 KB budget
-    val mgr = new CacheManager(CacheConfig.from(c), usableDiskBytes = 17920L)
+    val cc = CacheConfig.from(c)
+    val mgr = new CacheManager(cc, usableDiskBytes = 17920L)
     try {
       assert(mgr.budgetKB == 8)
       def file(n: String, kb: Int) = TestFiles.write(tmp, s"heavy/$n.bin",
         Array.tabulate[Byte](kb << 10)(i => (i * 7 + kb).toByte))
       def read(f: String): Unit = {
         val len = new java.io.File(f).length.toInt
-        val s = openCaching(f, mgr)
+        val s = openCaching(f, mgr, cc)
         try readAll(s, 0, len) finally s.close()
       }
       val small = Seq(file("A", 3), file("B", 3))

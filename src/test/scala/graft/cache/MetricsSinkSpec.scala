@@ -17,7 +17,6 @@ class MetricsSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     cacheDir = java.nio.file.Files.createTempDirectory("graft-jmx").toString
     org.apache.hadoop.fs.FileSystem.closeAll()
     CacheManager.resetForTest()
-    CacheMetricsSource.resetForTest()
     spark = GraftSession.withJmxMetrics(
       GraftSession.builder(master = "local[2]", shufflePartitions = 2,
         cacheDir = Some(cacheDir))).getOrCreate()
@@ -26,7 +25,6 @@ class MetricsSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
     CacheManager.resetForTest()
-    CacheMetricsSource.resetForTest()
   }
 
   test("withJmxMetrics exposes cache gauges as JMX MBeans") {

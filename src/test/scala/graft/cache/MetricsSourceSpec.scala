@@ -69,14 +69,12 @@ class MetricsSourceSpec extends AnyFunSuite with CacheFixture {
     val spark = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false").getOrCreate()
     try {
-      CacheMetricsSource.resetForTest()
-      val src = CacheMetricsSource.register(manager)
+      val src = manager.metricsSource
       assert(src.isDefined, "SparkEnv is live, registration must succeed")
       // idempotent: same manager returns the same source
-      assert(CacheMetricsSource.register(manager).get eq src.get)
+      assert(manager.metricsSource.get eq src.get)
     } finally {
       spark.stop()
-      CacheMetricsSource.resetForTest()
     }
   }
 }

@@ -26,13 +26,14 @@ object PeerOwnerChild {
     c.set(CacheConfig.CacheDirKey, cacheDir)
     c.setBoolean(CacheConfig.StrictKey, true)
     c.setInt(CacheConfig.MaxReadRequestKey, 1000)
-    val mgr = new CacheManager(CacheConfig.from(c))
+    val conf = CacheConfig.from(c)
+    val mgr = new CacheManager(conf)
 
     val fs = FileSystem.getLocal(new Configuration())
     val p = new Path(file)
     val st = fs.getFileStatus(p)
     val cis = new CachingInputStream(() => fs.open(p), "file:" + file,
-      st.getLen, st.getModificationTime, mgr)
+      st.getLen, st.getModificationTime, mgr, conf)
     try {
       val buf = new Array[Byte](64 * 1024)
       var pos = 0L

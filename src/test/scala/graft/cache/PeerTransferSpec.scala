@@ -23,10 +23,14 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
     CacheConfig.from(c)
   }
 
+  /** The read policy of the reader of the running [[withPeers]]. */
+  private var readerConf: CacheConfig = _
+
   private def withPeers[A](readerStrict: Boolean = false)(
       body: (CacheManager, CacheManager, PeerTransferServer, String) => A): A = {
     val owner = new CacheManager(mkConfAt(s"$tmp/cacheOwner", strict = true))
-    val reader = new CacheManager(mkConfAt(s"$tmp/cacheReader", readerStrict))
+    readerConf = mkConfAt(s"$tmp/cacheReader", readerStrict)
+    val reader = new CacheManager(readerConf)
     reader.ownership = Some(SplitOwnership("nodeB", (_, _) => Some("nodeA")))
     val server = new PeerTransferServer(owner)
     PeerRegistry.register("nodeA", server.address)
@@ -50,7 +54,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
       warm(owner, f, 0, content.length)
       assert(owner.metadataFor("file:" + f).get.allCached(0, 26))
 
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       val got = readAll(s, 150, 500)
       s.close()
       assert(got.sameElements(content.slice(150, 650)))
@@ -66,7 +70,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
   test("multiple disjoint spans and full-file peer reads stay byte-exact") {
     withPeers() { (owner, reader, _, f) =>
       warm(owner, f, 0, content.length)
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       assert(readAll(s, 0, 100).sameElements(content.slice(0, 100)))
       assert(readAll(s, 2500, 100).sameElements(content.slice(2500, 2600)))
       assert(readAll(s, 0, content.length).sameElements(content))
@@ -79,7 +83,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
   test("peer refusal (blocks not cached) falls back to direct read") {
     withPeers() { (owner, reader, _, f) =>
       warm(owner, f, 0, 100) // only block 0 cached on the owner
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       val got = readAll(s, 500, 500) // blocks 5..9: owner refuses NotCached
       s.close()
       assert(got.sameElements(content.slice(500, 1000)))
@@ -96,7 +100,8 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
       val st = localFs.getFileStatus(new Path(f))
       // reader believes a different mtime -> owner's staleness check refuses
       val s = new CachingInputStream(() => localFs.open(new Path(f)),
-        "file:" + f, st.getLen, st.getModificationTime + 1000, reader)
+        "file:" + f, st.getLen, st.getModificationTime + 1000, reader,
+        readerConf)
       val got = readAll(s, 150, 500)
       s.close()
       assert(got.sameElements(content.slice(150, 650)))
@@ -109,7 +114,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
     withPeers() { (owner, reader, _, f) =>
       warm(owner, f, 0, content.length)
       PeerRegistry.clear() // owner exists but endpoint unknown
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       val got = readAll(s, 0, 300)
       s.close()
       assert(got.sameElements(content.slice(0, 300)))
@@ -118,7 +123,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
     withPeers(readerStrict = true) { (owner, reader, _, f) =>
       warm(owner, f, 0, content.length)
       PeerRegistry.clear()
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       intercept[IOException] { readAll(s, 0, 300) }
       s.close()
     }
@@ -127,7 +132,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
   test("strict reader surfaces peer refusal instead of silent fallback") {
     withPeers(readerStrict = true) { (owner, reader, _, f) =>
       // owner has nothing cached -> refusal must propagate in strict mode
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       intercept[IOException] { readAll(s, 500, 500) }
       s.close()
     }
@@ -136,7 +141,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
   test("transport failure (owner down) sends no warm request") {
     withPeers() { (owner, reader, server, f) =>
       server.close() // endpoint registered but nobody listening
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, readerConf)
       val got = readAll(s, 0, 300)
       s.close()
       assert(got.sameElements(content.slice(0, 300)))
@@ -152,7 +157,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
       val ts = (0 until threads).map { i =>
         new Thread(() => {
           try {
-            val s = openCaching(f, reader)
+            val s = openCaching(f, reader, readerConf)
             val pos = (i * 37) % 2000
             val got = readAll(s, pos, 600)
             s.close()

@@ -16,20 +16,22 @@ class RobustnessSpec extends AnyFunSuite with CacheFixture {
     cA.setInt(CacheConfig.BlockSizeKey, 1 << 20)
     cA.set(CacheConfig.CacheDirKey, s"$tmp/peerBigOwner")
     cA.setInt(CacheConfig.MaxReadRequestKey, 8 << 20)
-    val owner = new CacheManager(CacheConfig.from(cA))
+    val ccA = CacheConfig.from(cA)
+    val owner = new CacheManager(ccA)
     val cB = new Configuration()
     cB.setInt(CacheConfig.BlockSizeKey, 1 << 20)
     cB.set(CacheConfig.CacheDirKey, s"$tmp/peerBigReader")
     cB.setInt(CacheConfig.MaxReadRequestKey, 8 << 20)
-    val reader = new CacheManager(CacheConfig.from(cB))
+    val ccB = CacheConfig.from(cB)
+    val reader = new CacheManager(ccB)
     reader.ownership = Some(SplitOwnership("rB", (_, _) => Some("rA")))
     val server = new PeerTransferServer(owner)
     PeerRegistry.register("rA", server.address)
     try {
       val f = TestFiles.write(tmp, "data/big.bin", big)
-      val w = openCaching(f, owner)
+      val w = openCaching(f, owner, ccA)
       readAll(w, 0, big.length); w.close()
-      val s = openCaching(f, reader)
+      val s = openCaching(f, reader, ccB)
       val got = readAll(s, 0, big.length)
       s.close()
       assert(java.util.Arrays.equals(got, big),

@@ -10,11 +10,11 @@ class ShadowModeSpec extends AnyFunSuite with CacheFixture {
       "real read caches it") {
     val content = TestFiles.alphabetContent(3, 100).take(800) // 8 blocks
     val f = TestFiles.write(tmp, "data/small.bin", content)
-    val shadow = new CacheManager(
-      mkConf(dummy = true).copy(cacheDir = s"$tmp/shadow"))
+    val shadowConf = mkConf(dummy = true).copy(cacheDir = s"$tmp/shadow")
+    val shadow = new CacheManager(shadowConf)
     try {
-      Seq(manager, shadow).foreach { m =>
-        val s = openCaching(f, m)
+      Seq(manager -> conf, shadow -> shadowConf).foreach { case (m, cc) =>
+        val s = openCaching(f, m, cc)
         assert(readAll(s, 0, 100).sameElements(content.take(100)))
         s.close()
       }

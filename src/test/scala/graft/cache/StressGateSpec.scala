@@ -101,6 +101,21 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     threads.foreach(_.start()); threads.foreach(_.join(120000))
     stop.set(true); churn.join(2000)
 
+    // a churn-phase miss lands in a phantom window only by timing; so hold
+    // the phantom in the ring, drop one table whose first split it owns,
+    // and read that table once: its miss classifies NonLocal and, with no
+    // endpoint, falls back to the store
+    ClusterState.addHost("phantom-peer")
+    val (table, query) = Seq("lineitem" -> "lineitem_agg",
+        "orders" -> "orders_join", "documents" -> "documents_lang")
+      .find { case (t, _) => mgr.ownership.get
+        .resolve(s"file:$sf/$t.parquet", 0L).contains("phantom-peer") }
+      .getOrElse(fail("the phantom owns no table's first split"))
+    mgr.invalidate(s"file:$sf/$table.parquet")
+    val held = queries(s"graft://$sf").toMap.apply(query)()
+    ClusterState.removeHost("phantom-peer")
+    assert(held.sameElements(baseline(query)), s"phantom-held run differs: $query")
+
     assert(errs.isEmpty, s"stress failures: ${errs.toArray.mkString("; ")}")
     assert(mgr.totalWeightKB <= mgr.budgetKB,
       s"budget overshoot: ${mgr.totalWeightKB} KB > ${mgr.budgetKB} KB")

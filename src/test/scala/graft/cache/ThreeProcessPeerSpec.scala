@@ -86,7 +86,7 @@ class ThreeProcessPeerSpec extends AnyFunSuite with CacheFixture {
       // phase 1: both owners live — the full file arrives over the two
       // sockets, byte-exact, zero source bytes, split by ring ownership
       val r1 = mkReader(s"$tmp/readerCache1", ringAB); readers += r1
-      val s1 = openCaching(f, r1)
+      val s1 = openCaching(f, r1, mkConf(strict = false))
       assert(readAll(s1, 0, content.length).sameElements(content))
       s1.close()
       assert(r1.metrics.bytesFromPeers.get == content.length.toLong,
@@ -99,7 +99,7 @@ class ThreeProcessPeerSpec extends AnyFunSuite with CacheFixture {
       // the file: still a pure peer read, no fallback, no source bytes
       procA.destroyForcibly(); procA.waitFor()
       val r2 = mkReader(s"$tmp/readerCache2", ringB); readers += r2
-      val s2 = openCaching(f, r2)
+      val s2 = openCaching(f, r2, mkConf(strict = false))
       assert(readAll(s2, 0, content.length).sameElements(content))
       s2.close()
       assert(r2.metrics.bytesFromPeers.get == content.length.toLong,
@@ -111,7 +111,7 @@ class ThreeProcessPeerSpec extends AnyFunSuite with CacheFixture {
       // its splits fall back to direct reads (counted), owner-b's splits
       // stay on the socket, and the assembled bytes are exact
       val r3 = mkReader(s"$tmp/readerCache3", ringAB); readers += r3
-      val s3 = openCaching(f, r3)
+      val s3 = openCaching(f, r3, mkConf(strict = false))
       assert(readAll(s3, 0, content.length).sameElements(content))
       s3.close()
       assert(r3.metrics.peerFallbacks.get >= 1,

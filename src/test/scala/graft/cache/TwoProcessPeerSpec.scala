@@ -82,7 +82,7 @@ class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
 
       // phase 1: every block NON_LOCAL -> served over the socket from the
       // child process's disk cache, byte-exact, zero source reads
-      val s1 = openCaching(f, reader)
+      val s1 = openCaching(f, reader, mkConf(strict = false))
       assert(readAll(s1, 150, 500).sameElements(content.slice(150, 650)))
       assert(readAll(s1, 0, content.length).sameElements(content))
       s1.close()
@@ -99,7 +99,7 @@ class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
       proc.waitFor()
       val reader2 = mkReader(s"$tmp/readerCache2")
       try {
-        val s2 = openCaching(f, reader2)
+        val s2 = openCaching(f, reader2, mkConf(strict = false))
         assert(readAll(s2, 150, 500).sameElements(content.slice(150, 650)))
         s2.close()
         assert(reader2.metrics.peerFallbacks.get >= 1,

@@ -73,11 +73,11 @@ object HeldGetLocalFs {
   * file, each contiguous run of blocks with one GET. */
 class WholeFileFillSpec extends AnyFunSuite with CacheFixture {
 
-  private def stream(f: String, mgr: CacheManager)(
+  private def stream(f: String, mgr: CacheManager, policy: CacheConfig)(
       open: () => FSDataInputStream): CachingInputStream = {
     val st = localFs.getFileStatus(new Path(f))
     new CachingInputStream(open, "file:" + f, st.getLen,
-      st.getModificationTime, mgr)
+      st.getModificationTime, mgr, policy)
   }
 
   private def hooked(f: String)(beforeGet: Long => Unit): () => FSDataInputStream =
@@ -88,7 +88,7 @@ class WholeFileFillSpec extends AnyFunSuite with CacheFixture {
     val f = TestFiles.write(tmp, "c/small.bin", content)
     val opens = new AtomicInteger
     val gets = new AtomicInteger
-    def counted() = stream(f, manager) { () =>
+    def counted() = stream(f, manager, conf) { () =>
       opens.incrementAndGet()
       hooked(f)(_ => gets.incrementAndGet())()
     }
@@ -113,7 +113,7 @@ class WholeFileFillSpec extends AnyFunSuite with CacheFixture {
     val f = TestFiles.write(tmp, "c/large.bin", content)
     val opens = new AtomicInteger
     val gets = new AtomicInteger
-    val s = stream(f, manager) { () =>
+    val s = stream(f, manager, conf) { () =>
       opens.incrementAndGet()
       hooked(f)(_ => gets.incrementAndGet())()
     }
@@ -165,22 +165,23 @@ class WholeFileFillSpec extends AnyFunSuite with CacheFixture {
       if (at == 300) throw new IOException("GET of block 3 failed")
     }
     val f = TestFiles.write(tmp, "c/flaky.bin", content)
-    val relaxed = new CacheManager(mkConf(strict = false))
+    val relaxedConf = mkConf(strict = false)
+    val relaxed = new CacheManager(relaxedConf)
     withBlock2Cached(relaxed, f)
-    val s = stream(f, relaxed)(failBlock3(f))
+    val s = stream(f, relaxed, relaxedConf)(failBlock3(f))
     try assert(readAll(s, 0, 1).sameElements(content.take(1)))
     finally s.close()
     val m = relaxed.metadataFor("file:" + f).get
     assert(m.allCached(0, 3), "block 1 was fetched with the miss on block 0")
     assert(!m.isBlockCached(3), "the failed block stays a miss")
-    val again = stream(f, relaxed)(() => localFs.open(new Path(f)))
+    val again = stream(f, relaxed, relaxedConf)(() => localFs.open(new Path(f)))
     try assert(readAll(again, 0, 400).sameElements(content))
     finally again.close()
 
     // strict mode fails the read instead
     val g = TestFiles.write(tmp, "c/flaky-strict.bin", content)
     withBlock2Cached(manager, g)
-    val strict = stream(g, manager)(failBlock3(g))
+    val strict = stream(g, manager, conf)(failBlock3(g))
     try intercept[IOException](readAll(strict, 0, 1))
     finally strict.close()
   }
