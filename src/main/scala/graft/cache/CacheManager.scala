@@ -62,9 +62,10 @@ final class CacheManager(conf: CacheConfig, usableDiskBytes: Long = -1L) {
     Some(new CacheMetricsSource(this)).filter(s =>
       org.apache.spark.graft.MetricsBridge.register(s.sourceName, s.metricRegistry))
 
-  /** Optional split-ownership resolver (locality ring). When set, uncached
-    * blocks of splits owned by another node classify as NonLocal(owner) so
-    * reads can try that peer's disk cache before the remote store. */
+  /** Optional split-ownership resolver (locality ring), set by
+    * [[GraftPlugin]] on a cluster. When set, uncached blocks of splits
+    * owned by another node classify as NonLocal(owner) so reads can try
+    * that peer's disk cache before the remote store. */
   @volatile var ownership: Option[SplitOwnership] = None
 
   /** Current generation per path; survives metadata eviction. Seeded from
@@ -136,9 +137,10 @@ final class CacheManager(conf: CacheConfig, usableDiskBytes: Long = -1L) {
     }
 
   /** Per-block cache state for [startBlock, endBlock) of `path`
-    * (BookKeeper.getCacheStatus:249-353; single-node: every block is
-    * either Cached or Local). Each block counts as one cached, non-local
-    * or remote request unless `counted` is false. */
+    * (BookKeeper.getCacheStatus:249-353): Cached when on disk here, else
+    * NonLocal(owner) when [[ownership]] names another node as the owner of
+    * the block's split, else Local. Each block counts as one cached,
+    * non-local or remote request unless `counted` is false. */
   def getCacheStatus(path: String, fileLen: Long, mtime: Long,
       startBlock: Long, endBlock: Long, counted: Boolean = true): CacheStatus = {
     val m = metadata(path, fileLen, mtime)

@@ -25,7 +25,7 @@ final class CacheMetricsSource(val manager: CacheManager) {
     metricRegistry.register(name, new Gauge[T] { override def getValue: T = f })
 
   // health (docs/metrics.rst "Health Metrics")
-  gauge("gauge.live_workers")(ClusterState.currentHosts.size)
+  gauge("gauge.live_workers")(Membership.members.size)
 
   // cache (docs/metrics.rst "Cache Metrics")
   gauge("gauge.cache_size_mb")(manager.totalWeightKB / 1024)

@@ -377,10 +377,11 @@ final class CachingInputStream(
   }
 
   /** Peer-cache read (NonLocalReadRequestChain.java:107-146): one socket
-    * round-trip for the collated contiguous span, straight into the user
-    * buffer. Never warms the local cache — the owner's disk is the cache
-    * for this split. Any failure (no registered peer, refused status,
-    * socket error) falls back to a direct remote read; strict mode throws
+    * round-trip to the owner's address (its node id) for the collated
+    * contiguous span, straight into the user buffer. Never warms the local
+    * cache — the owner's disk is the cache for this split. Any failure
+    * (nothing listening at the owner's address, refused status, socket
+    * error) falls back to a direct remote read; strict mode throws
     * (NonLocalReadRequestChain.java:147-157 fallback lattice). A refusal
     * asks nothing of the owner: the owner's cache fills from its own
     * read-through misses. */
@@ -390,9 +391,8 @@ final class CachingInputStream(
     val span = (rs.last.actualEnd - start).toInt
     val dest = bufOff + rs.head.destOffset
     try {
-      val addr = PeerRegistry.lookup(owner).getOrElse(
-        throw new IOException(s"no peer endpoint registered for $owner"))
-      PeerTransferClient.read(addr, path, start, span, fileLen, mtime, buf, dest)
+      PeerTransferClient.read(PeerTransfer.address(owner), path, start, span,
+        fileLen, mtime, buf, dest)
       manager.metrics.bytesFromPeers.addAndGet(span.toLong)
       if (stats != null) stats.incrementBytesRead(span.toLong)
     } catch {

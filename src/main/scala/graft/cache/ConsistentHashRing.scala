@@ -24,7 +24,6 @@ final class ConsistentHashRing(nodes: Seq[String], vnodes: Int = 64) {
   }
 
   def isEmpty: Boolean = ring.isEmpty
-  def nodeCount: Int = nodes.distinct.size
 
   def locateKey(key: String): Option[String] = {
     if (ring.isEmpty) return None
@@ -40,37 +39,46 @@ final class ConsistentHashRing(nodes: Seq[String], vnodes: Int = 64) {
   }
 }
 
-/** Executor membership for the ring. On a real cluster this is fed by a
-  * SparkListener on the driver (executorAdded/Removed — the analog of the
-  * reference's YARN/Presto membership polling, Hadoop2ClusterManager /
-  * PrestoClusterManager); in local mode it is a single localhost entry.
+/** This JVM's view of the cluster: the peer address (`host:port`) of
+  * every executor's [[PeerTransferServer]], which is also that node's id
+  * on the ring. [[GraftPlugin]] is its one writer: the driver side sets
+  * the member set it keeps, each executor the list the driver last sent
+  * it. Without the plugin the view stays empty: no split has an owner,
+  * every block is `Local` and locality is `localhost`.
   */
-object ClusterState {
-  @volatile private var hosts: Vector[String] = Vector.empty
-  @volatile private var ringCache: ConsistentHashRing = _
+object Membership {
+  @volatile private var view = (Vector.empty[String], new ConsistentHashRing(Nil))
 
-  def setHosts(h: Seq[String]): Unit = synchronized {
-    hosts = h.toVector.distinct.sorted
-    ringCache = new ConsistentHashRing(hosts)
+  def members: Seq[String] = view._1
+
+  private[cache] def set(nodes: Seq[String]): Unit = {
+    val sorted = nodes.toVector.distinct.sorted
+    view = (sorted, new ConsistentHashRing(sorted))
   }
 
-  def addHost(h: String): Unit = synchronized { setHosts(hosts :+ h) }
-  def removeHost(h: String): Unit = synchronized { setHosts(hosts.filterNot(_ == h)) }
+  /** The owner of the split holding byte `offset` of the file whose
+    * cache key (the inner path string) is `path`: the one function both
+    * the driver's locality hint ([[CacheAffinity]]) and the executors'
+    * block routing ([[SplitOwnership.ring]]) ask, so a task placed on a
+    * split's owner also reads that split as its own. */
+  def owner(path: String, offset: Long, splitSize: Long): Option[String] =
+    view._2.locateSplit(path, offset, splitSize)
 
-  def currentHosts: Seq[String] = hosts
-  def ring: Option[ConsistentHashRing] =
-    Option(ringCache).filter(!_.isEmpty)
-
-  /** Spark listener keeping membership fresh; register on the driver via
-    * sparkContext.addSparkListener(new ClusterState.Listener). */
-  final class Listener extends org.apache.spark.scheduler.SparkListener {
-    override def onExecutorAdded(
-        e: org.apache.spark.scheduler.SparkListenerExecutorAdded): Unit =
-      addHost(e.executorInfo.executorHost)
-    override def onExecutorRemoved(
-        e: org.apache.spark.scheduler.SparkListenerExecutorRemoved): Unit = ()
-    // removal is deliberately lazy: ownership is a locality HINT; stale
-    // hosts only cost a scheduling preference miss, never correctness
-    // (SURVEY risk #3: dynamic allocation churn).
+  /** The host part of a `host:port` node id. */
+  def host(node: String): String = {
+    val i = node.lastIndexOf(':')
+    if (i < 0) node else node.substring(0, i)
   }
+}
+
+/** Split-ownership resolver feeding getCacheStatus: which node owns the
+  * split containing a byte offset, and who am I (reference
+  * BookKeeper.java:321-341 ring consultation). */
+final case class SplitOwnership(selfNode: String,
+    resolve: (String, Long) => Option[String])
+
+object SplitOwnership {
+  /** `self`'s resolver over this JVM's [[Membership]]. */
+  def ring(self: String, splitSize: Long): SplitOwnership =
+    SplitOwnership(self, Membership.owner(_, _, splitSize))
 }

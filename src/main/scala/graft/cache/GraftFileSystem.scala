@@ -209,12 +209,15 @@ class GraftFileSystem extends FileSystem {
     listed.map(translate)
   }
 
+  /** Locality hook: one location per split, at its owner's host
+    * (CachingFileSystem.getFileBlockLocations:393-437 analog). The split
+    * is keyed by the inner path string, the cache key `open` reads under,
+    * so the executor a split is placed on reads it as its own. */
   override def getFileBlockLocations(file: FileStatus, start: Long,
       len: Long): Array[BlockLocation] =
-    // Locality hook: per-split cache-affinity owners are fabricated here
-    // (CachingFileSystem.getFileBlockLocations:393-437 analog). Single-JVM
-    // local mode: delegate; the ring feeds this on a real cluster.
-    CacheAffinity.blockLocations(file, start, len, cacheConf)
+    if (file == null) Array.empty
+    else CacheAffinity.blockLocations(toInner(file.getPath).toString,
+      file.getLen, start, len, cacheConf.splitSize)
 
   // ---- mutations: pure delegation (reference parity) ----
   /** Eager invalidation on OUR mutation path — deliberately beyond the
@@ -296,28 +299,25 @@ class GraftFileSystem extends FileSystem {
 }
 
 /** Cache-affinity locality: one BlockLocation per ownership split, host =
-  * consistent-hash owner of `path:start:end` (reference:
+  * the host part of the split's [[Membership.owner]] (reference:
   * CachingFileSystem.getFileBlockLocations:393-437). The scheduler then
   * lands scan tasks where the cached blocks (will) live. Ownership is a
   * HINT — correctness never depends on it (dynamic-allocation churn just
-  * degrades locality). Falls back to localhost when no ring is known
-  * (local mode). */
+  * degrades locality). Falls back to localhost when no member is known
+  * (local mode, or no [[GraftPlugin]]). */
 object CacheAffinity {
-  def blockLocations(file: FileStatus, start: Long, len: Long,
-      conf: CacheConfig): Array[BlockLocation] = {
-    if (file == null || len <= 0) return Array.empty
-    val split = if (conf != null) conf.splitSize else 256L << 20
-    val path = file.getPath.toUri.getPath
-    val end = math.min(file.getLen, start + len)
+  def blockLocations(key: String, fileLen: Long, start: Long, len: Long,
+      splitSize: Long): Array[BlockLocation] = {
+    if (len <= 0) return Array.empty
+    val end = math.min(fileLen, start + len)
     val out = scala.collection.mutable.ArrayBuffer.empty[BlockLocation]
-    var s = (start / split) * split
+    var s = (start / splitSize) * splitSize
     while (s < end) {
-      val e = math.min(s + split, file.getLen)
-      val host = ClusterState.ring
-        .flatMap(_.locateKey(s"$path:$s:${s + split}"))
+      val e = math.min(s + splitSize, fileLen)
+      val host = Membership.owner(key, s, splitSize).map(Membership.host)
         .getOrElse("localhost")
       out += new BlockLocation(Array(s"$host:9867"), Array(host), s, e - s)
-      s += split
+      s += splitSize
     }
     out.toArray
   }

@@ -6,7 +6,7 @@ import java.nio.ByteBuffer
 import java.nio.channels.{FileChannel, ServerSocketChannel, SocketChannel}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.StandardOpenOption
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.Executors
 
 /** Peer-to-peer cache transfer — the reference's LocalDataTransferServer
   * (rubix-bookkeeper LocalDataTransferServer.java:159-374) plus the client
@@ -34,18 +34,30 @@ object PeerTransfer {
   /** One request header, as read off the wire. */
   final case class Request(path: String, offset: Long, length: Int,
       fileLen: Long, mtime: Long)
+
+  /** The socket address of node id `host:port`. */
+  def address(node: String): InetSocketAddress = {
+    val i = node.lastIndexOf(':')
+    if (i <= 0) throw new IOException(s"peer id $node is not host:port")
+    new InetSocketAddress(node.substring(0, i), node.substring(i + 1).toInt)
+  }
 }
 
 /** Executor-local socket server streaming cached byte ranges to peers.
   * Serves only ranges whose blocks are fully cached here — it never
   * triggers remote reads on behalf of a peer: a refused requester reads
   * the store itself, and this node's cache fills only from its own
-  * read-through misses. */
+  * read-through misses. It listens on an ephemeral port of `bindHost`,
+  * or of every interface when `bindHost` is empty (under [[GraftPlugin]]),
+  * and, like the reference's LocalDataTransferServer, authenticates no
+  * one: any client that reaches the port can read this node's cached
+  * ranges. */
 final class PeerTransferServer(manager: CacheManager,
     bindHost: String = "127.0.0.1", handlerThreads: Int = 4) {
 
   private val server = ServerSocketChannel.open()
-  server.bind(new InetSocketAddress(bindHost, 0))
+  server.bind(
+    if (bindHost.isEmpty) new InetSocketAddress(0) else new InetSocketAddress(bindHost, 0))
   @volatile private var running = true
 
   private val handlers = Executors.newFixedThreadPool(handlerThreads, r => {
@@ -71,7 +83,8 @@ final class PeerTransferServer(manager: CacheManager,
   acceptor.start()
 
   def port: Int = server.socket().getLocalPort
-  def address: InetSocketAddress = new InetSocketAddress(bindHost, port)
+  /** This server's node id, `bindHost:port`, when it listens on one host. */
+  def node: String = s"$bindHost:$port"
 
   private def handle(ch: SocketChannel): Unit = {
     // once StatusOk is on the wire, NEVER write again: a late error
@@ -193,31 +206,4 @@ object PeerTransferClient {
       done += n
     }
   }
-}
-
-/** Node-id -> peer-server address map. On a real cluster each executor
-  * registers its server's port with the driver CacheCoordinator heartbeat
-  * and the map is broadcast back (the analog of the reference's
-  * ClusterManager node list + fixed LDTS port 8898); in local/test mode
-  * entries are registered directly. Missing entries simply disable the
-  * peer path for that owner — locality stays a hint, never correctness. */
-object PeerRegistry {
-  private val peers = new ConcurrentHashMap[String, InetSocketAddress]()
-  def register(node: String, addr: InetSocketAddress): Unit = peers.put(node, addr)
-  def lookup(node: String): Option[InetSocketAddress] = Option(peers.get(node))
-  def unregister(node: String): Unit = peers.remove(node)
-  def clear(): Unit = peers.clear()
-}
-
-/** Split-ownership resolver feeding getCacheStatus: which node owns the
-  * split containing a byte offset, and who am I (reference
-  * BookKeeper.java:321-341 ring consultation). */
-final case class SplitOwnership(selfNode: String,
-    resolve: (String, Long) => Option[String])
-
-object SplitOwnership {
-  /** Ring-backed resolver over the live ClusterState membership. */
-  def fromClusterState(selfNode: String, splitSize: Long): SplitOwnership =
-    SplitOwnership(selfNode,
-      (path, off) => ClusterState.ring.flatMap(_.locateSplit(path, off, splitSize)))
 }

@@ -515,11 +515,9 @@ object CacheQueries {
         }
       } finally cis.close()
 
-      val execTag = base.substring(base.lastIndexOf("-e") + 1)
-      val owner = s"c13-peer-$execTag"
+      // the owner is named by its server's address, as on a cluster
       val server = new graft.cache.PeerTransferServer(peer)
-      graft.cache.PeerRegistry.register(owner, server.address)
-      nonLocalOwners.put(key, owner)
+      nonLocalOwners.put(key, server.node)
       sessionManager(s).ownership = Some(nonLocalResolver)
       try {
         def agg = s.read.parquet(s"graft://$base/orders.parquet")
@@ -540,7 +538,6 @@ object CacheQueries {
         // mapping removed its blocks classify Local again and the scan
         // serves directly — the contract was measured inside the window
         nonLocalOwners.remove(key)
-        graft.cache.PeerRegistry.unregister(owner)
         server.close()
         // release the private peer manager's state too — clear()
         // deletes the cached block files, so repeated soak

@@ -2,7 +2,8 @@ package graft.cache
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +15,7 @@ import graft.GraftSession
 class InputMetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
   private var tmp: String = _
+  private val WarmTag = "graft.test.warm-scan"
 
   override def beforeAll(): Unit = {
     tmp = java.nio.file.Files.createTempDirectory("graft-input").toString
@@ -42,16 +44,29 @@ class InputMetricsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cached0 = mgr.metrics.bytesFromCache.get
     val remote0 = mgr.metrics.bytesFromRemote.get
 
+    // the listener bus is asynchronous: events of the cold scan may still
+    // be queued when the listener is added, so only the warm scan's job,
+    // tagged by a local property, is counted and awaited
     val input = new AtomicLong
     val ended = new CountDownLatch(1)
+    val warmJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val warmStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(WarmTag) != null) {
+          e.stageIds.foreach(warmStages.add)
+          warmJobs.add(e.jobId)
+        }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) input.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.countDown()
+        if (e.taskMetrics != null && warmStages.contains(e.stageId))
+          input.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (warmJobs.contains(e.jobId)) ended.countDown()
     }
     sc.addSparkListener(listener)
     try {
-      scan.foreach(_ => ())
+      sc.setLocalProperty(WarmTag, "1")
+      try scan.foreach(_ => ()) finally sc.setLocalProperty(WarmTag, null)
       assert(ended.await(30, TimeUnit.SECONDS), "the warm scan's job never ended")
     } finally sc.removeSparkListener(listener)
 

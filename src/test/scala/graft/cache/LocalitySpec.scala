@@ -1,7 +1,6 @@
 package graft.cache
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.hadoop.fs.{FileStatus, Path}
 
 class ConsistentHashRingSpec extends AnyFunSuite {
   private val nodes = (1 to 10).map(i => s"exec-$i")
@@ -43,25 +42,19 @@ class ConsistentHashRingSpec extends AnyFunSuite {
 
 class CacheAffinitySpec extends AnyFunSuite {
   test("blockLocations carve the file into owned splits") {
-    ClusterState.setHosts(Seq("host-a", "host-b", "host-c"))
+    Membership.set(Seq("10.0.0.1:7001", "10.0.0.2:7001", "10.0.0.3:7001"))
     try {
-      val conf = {
-        val c = new org.apache.hadoop.conf.Configuration()
-        c.setLong(CacheConfig.SplitSizeKey, 1000L)
-        CacheConfig.from(c)
-      }
-      val st = new FileStatus(3500, false, 1, 1000, 0L,
-        new Path("graft:///d/f.parquet"))
-      val locs = CacheAffinity.blockLocations(st, 0, 3500, conf)
+      val key = "file:/d/f.parquet"
+      val locs = CacheAffinity.blockLocations(key, 3500, 0, 3500, 1000L)
       assert(locs.length == 4)
       assert(locs.map(_.getOffset).toSeq == Seq(0L, 1000L, 2000L, 3000L))
       assert(locs.last.getLength == 500)
-      assert(locs.forall(l => Set("host-a", "host-b", "host-c")
+      assert(locs.forall(l => Set("10.0.0.1", "10.0.0.2", "10.0.0.3")
         .contains(l.getHosts.head)))
       // deterministic across calls
-      val locs2 = CacheAffinity.blockLocations(st, 0, 3500, conf)
+      val locs2 = CacheAffinity.blockLocations(key, 3500, 0, 3500, 1000L)
       assert(locs.map(_.getHosts.head).sameElements(locs2.map(_.getHosts.head)))
-    } finally ClusterState.setHosts(Nil)
+    } finally Membership.set(Nil)
   }
 }
 

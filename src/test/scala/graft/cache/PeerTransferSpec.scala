@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end coverage for the peer-cache read path: two CacheManagers in
   * one JVM (standing in for two executors), a real PeerTransferServer
-  * socket between them, and a ring that maps every split to the owner.
+  * socket between them, and a resolver that names the owner's address
+  * (its node id) for every split.
   * Mirrors the reference's TestNonLocalReadRequestChain.java:1-369
   * coverage: byte-exact transfer, refusal statuses falling back to direct
   * reads, staleness refusal, and strict-mode propagation. */
@@ -31,16 +32,27 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
     val owner = new CacheManager(mkConfAt(s"$tmp/cacheOwner", strict = true))
     readerConf = mkConfAt(s"$tmp/cacheReader", readerStrict)
     val reader = new CacheManager(readerConf)
-    reader.ownership = Some(SplitOwnership("nodeB", (_, _) => Some("nodeA")))
     val server = new PeerTransferServer(owner)
-    PeerRegistry.register("nodeA", server.address)
+    reader.ownership = Some(SplitOwnership("nodeB", (_, _) => Some(server.node)))
     try body(owner, reader, server, TestFiles.write(tmp, "data/peer.bin", content))
     finally {
       server.close()
-      PeerRegistry.clear()
       owner.clear()
       reader.clear()
     }
+  }
+
+  /** A `host:port` owner id at which nothing listens. */
+  private def deadNode: String = {
+    val s = new java.net.ServerSocket(0, 1,
+      java.net.InetAddress.getByName("127.0.0.1"))
+    try s"127.0.0.1:${s.getLocalPort}" finally s.close()
+  }
+
+  /** Route every split of `reader` to an owner that is not listening. */
+  private def ownedByDeadNode(reader: CacheManager): Unit = {
+    val dead = deadNode
+    reader.ownership = Some(SplitOwnership("nodeB", (_, _) => Some(dead)))
   }
 
   private def warm(owner: CacheManager, f: String, pos: Long, len: Int): Unit = {
@@ -113,7 +125,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
   test("unregistered peer endpoint falls back; strict mode throws") {
     withPeers() { (owner, reader, _, f) =>
       warm(owner, f, 0, content.length)
-      PeerRegistry.clear() // owner exists but endpoint unknown
+      ownedByDeadNode(reader) // nothing listens at the owner's address
       val s = openCaching(f, reader, readerConf)
       val got = readAll(s, 0, 300)
       s.close()
@@ -122,7 +134,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
     }
     withPeers(readerStrict = true) { (owner, reader, _, f) =>
       warm(owner, f, 0, content.length)
-      PeerRegistry.clear()
+      ownedByDeadNode(reader)
       val s = openCaching(f, reader, readerConf)
       intercept[IOException] { readAll(s, 0, 300) }
       s.close()
@@ -140,7 +152,7 @@ class PeerTransferSpec extends AnyFunSuite with CacheFixture {
 
   test("transport failure (owner down) sends no warm request") {
     withPeers() { (owner, reader, server, f) =>
-      server.close() // endpoint registered but nobody listening
+      server.close() // the owner's address stops listening
       val s = openCaching(f, reader, readerConf)
       val got = readAll(s, 0, 300)
       s.close()

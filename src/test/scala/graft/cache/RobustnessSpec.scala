@@ -24,9 +24,8 @@ class RobustnessSpec extends AnyFunSuite with CacheFixture {
     cB.setInt(CacheConfig.MaxReadRequestKey, 8 << 20)
     val ccB = CacheConfig.from(cB)
     val reader = new CacheManager(ccB)
-    reader.ownership = Some(SplitOwnership("rB", (_, _) => Some("rA")))
     val server = new PeerTransferServer(owner)
-    PeerRegistry.register("rA", server.address)
+    reader.ownership = Some(SplitOwnership("rB", (_, _) => Some(server.node)))
     try {
       val f = TestFiles.write(tmp, "data/big.bin", big)
       val w = openCaching(f, owner, ccA)
@@ -39,7 +38,7 @@ class RobustnessSpec extends AnyFunSuite with CacheFixture {
       assert(reader.metrics.bytesFromPeers.get == big.length.toLong)
       assert(reader.metrics.bytesFromRemote.get == 0)
     } finally {
-      server.close(); PeerRegistry.clear(); owner.clear(); reader.clear()
+      server.close(); owner.clear(); reader.clear()
     }
   }
 

@@ -13,14 +13,17 @@ import graft.GraftSession
   * replaying queries while the cluster downscales): 8 threads replay the
   * relational corpus through graft:// while (a) the locality ring churns
   * (a phantom peer node joins/leaves, flipping blocks between Local and
-  * NonLocal with no live peer endpoint — every NonLocal read must fall
-  * back correctly) and (b) eviction runs under a deliberately tight
+  * NonLocal at an address where nothing listens — every NonLocal read
+  * must fall back correctly) and (b) eviction runs under a deliberately tight
   * 2 MB budget. Every result must equal the uncached baseline, and the
   * weigher must never overshoot the budget. */
 class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var spark: SparkSession = _
   private var cacheDir: String = _
   private val sf = "/root/testdata/sf0.001"
+  /** The phantom peer's node id: an address where nothing listens. */
+  private val phantom = "127.0.0.1:1"
+  private def ring(nodes: String*): Unit = Membership.set(nodes)
 
   override def beforeAll(): Unit = {
     cacheDir = java.nio.file.Files.createTempDirectory("graft-stress").toString
@@ -33,7 +36,7 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
   }
   override def afterAll(): Unit = {
-    ClusterState.setHosts(Nil)
+    Membership.set(Nil)
     if (spark != null) spark.stop()
     CacheManager.resetForTest()
   }
@@ -68,17 +71,16 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mgr = CacheManager.current.get
     assert(mgr.budgetKB == 2 * 1024)
     // locality ring: self + a phantom peer that owns ~half the splits but
-    // has no endpoint -> NonLocal reads must fall back to direct
-    ClusterState.setHosts(Seq("self"))
-    mgr.ownership = Some(SplitOwnership.fromClusterState("self",
-      splitSize = 64 * 1024))
+    // does not listen -> NonLocal reads must fall back to direct
+    ring("self")
+    mgr.ownership = Some(SplitOwnership.ring("self", splitSize = 64 * 1024))
 
     val stop = new AtomicBoolean(false)
     val churn = new Thread(() => {
       while (!stop.get()) {
-        ClusterState.addHost("phantom-peer")
+        ring("self", phantom)
         Thread.sleep(3)
-        ClusterState.removeHost("phantom-peer")
+        ring("self")
         Thread.sleep(3)
       }
     }, "ring-churn")
@@ -104,16 +106,16 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a churn-phase miss lands in a phantom window only by timing; so hold
     // the phantom in the ring, drop one table whose first split it owns,
     // and read that table once: its miss classifies NonLocal and, with no
-    // endpoint, falls back to the store
-    ClusterState.addHost("phantom-peer")
+    // listener, falls back to the store
+    ring("self", phantom)
     val (table, query) = Seq("lineitem" -> "lineitem_agg",
         "orders" -> "orders_join", "documents" -> "documents_lang")
       .find { case (t, _) => mgr.ownership.get
-        .resolve(s"file:$sf/$t.parquet", 0L).contains("phantom-peer") }
+        .resolve(s"file:$sf/$t.parquet", 0L).contains(phantom) }
       .getOrElse(fail("the phantom owns no table's first split"))
     mgr.invalidate(s"file:$sf/$table.parquet")
     val held = queries(s"graft://$sf").toMap.apply(query)()
-    ClusterState.removeHost("phantom-peer")
+    ring("self")
     assert(held.sameElements(baseline(query)), s"phantom-held run differs: $query")
 
     assert(errs.isEmpty, s"stress failures: ${errs.toArray.mkString("; ")}")
@@ -128,7 +130,7 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(m.nonlocalRequests.get > 0,
       "ring churn must classify some blocks NonLocal")
     assert(m.peerFallbacks.get > 0,
-      "phantom peer has no endpoint: NonLocal reads must fall back")
+      "nothing listens at the phantom's address: NonLocal reads must fall back")
     mgr.ownership = None
   }
 
@@ -157,14 +159,13 @@ class StressGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fs = org.apache.hadoop.fs.FileSystem.get(
       java.net.URI.create("graft:///"), spark.sessionState.newHadoopConf())
     val mgr = CacheManager.current.get
-    ClusterState.setHosts(Seq("self"))
-    mgr.ownership = Some(SplitOwnership.fromClusterState("self",
-      splitSize = 64 * 1024))
+    ring("self")
+    mgr.ownership = Some(SplitOwnership.ring("self", splitSize = 64 * 1024))
     val stop = new AtomicBoolean(false)
     val churn = new Thread(() => {
       while (!stop.get()) {
-        ClusterState.addHost("phantom-peer"); Thread.sleep(2)
-        ClusterState.removeHost("phantom-peer"); Thread.sleep(2)
+        ring("self", phantom); Thread.sleep(2)
+        ring("self"); Thread.sleep(2)
       }
     }, "vread-churn")
     churn.setDaemon(true); churn.start()

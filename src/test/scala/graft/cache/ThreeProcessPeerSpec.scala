@@ -1,6 +1,5 @@
 package graft.cache
 
-import java.net.InetSocketAddress
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,26 +61,23 @@ class ThreeProcessPeerSpec extends AnyFunSuite with CacheFixture {
       "remap on ring leave, direct-read fallback on stale membership") {
     val f = TestFiles.write(tmp, "data/xproc3.bin", content)
     val key = "file:" + f
-    val ringAB = new ConsistentHashRing(Seq("owner-a", "owner-b"))
-    val ringB = new ConsistentHashRing(Seq("owner-b"))
-    // per-block ownership under the two-node ring; with 26 blocks x 64
-    // vnodes both owners hold some splits — asserted, not assumed
-    val blockOwner = (0 until content.length by BlockSz)
-      .map(off => off -> ringAB.locateSplit(key, off.toLong, SplitSz).get)
-      .toMap
-    val aBytes = blockOwner.count(_._2 == "owner-a").toLong * BlockSz
-    val bBytes = blockOwner.count(_._2 == "owner-b").toLong * BlockSz
-    assert(aBytes > 0 && bBytes > 0,
-      s"ring must distribute splits across both owners: a=$aBytes b=$bBytes")
-
     val (procA, portA, logA) = startOwner(f, s"$tmp/ownerCacheA")
     val (procB, portB, logB) = startOwner(f, s"$tmp/ownerCacheB")
     val readers = scala.collection.mutable.ListBuffer[CacheManager]()
     try {
-      PeerRegistry.register("owner-a",
-        new InetSocketAddress("127.0.0.1", portA))
-      PeerRegistry.register("owner-b",
-        new InetSocketAddress("127.0.0.1", portB))
+      // each owner's node id is its server's address
+      val (ownerA, ownerB) = (s"127.0.0.1:$portA", s"127.0.0.1:$portB")
+      val ringAB = new ConsistentHashRing(Seq(ownerA, ownerB))
+      val ringB = new ConsistentHashRing(Seq(ownerB))
+      // per-block ownership under the two-node ring; with 13 splits x 64
+      // vnodes both owners hold some splits — asserted, not assumed
+      val blockOwner = (0 until content.length by BlockSz)
+        .map(off => off -> ringAB.locateSplit(key, off.toLong, SplitSz).get)
+        .toMap
+      val aBytes = blockOwner.count(_._2 == ownerA).toLong * BlockSz
+      val bBytes = blockOwner.count(_._2 == ownerB).toLong * BlockSz
+      assert(aBytes > 0 && bBytes > 0,
+        s"ring must distribute splits across both owners: a=$aBytes b=$bBytes")
 
       // phase 1: both owners live — the full file arrives over the two
       // sockets, byte-exact, zero source bytes, split by ring ownership
@@ -126,7 +122,6 @@ class ThreeProcessPeerSpec extends AnyFunSuite with CacheFixture {
       Seq(procA, procB).foreach { p =>
         if (p.isAlive) { p.destroyForcibly(); p.waitFor() }
       }
-      PeerRegistry.clear()
       readers.foreach(_.clear())
     }
   }

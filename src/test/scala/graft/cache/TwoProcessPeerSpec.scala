@@ -1,6 +1,5 @@
 package graft.cache
 
-import java.net.InetSocketAddress
 import org.apache.hadoop.conf.Configuration
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,19 +18,24 @@ object TwoProcessPeerSpec {
   /** Child-JVM classpath for the owner processes: the compiled classes
     * plus the Hadoop/Spark jars, located from the PARENT's own loaded
     * spark-core jar (sbt's layered classloaders make java.class.path
-    * useless here, and hardcoding /opt/spark/jars broke any other
-    * machine layout — r14 advice). GRAFT_SPARK_JARS overrides. */
+    * useless here, and a hard-coded jar directory breaks on any other
+    * layout). GRAFT_SPARK_JARS overrides. */
   def childClasspath: String = {
     val root = new java.io.File("target/scala-2.13").getAbsolutePath
-    val sparkJars = sys.env.get("GRAFT_SPARK_JARS").orElse {
-      Option(classOf[org.apache.spark.SparkContext]
-          .getProtectionDomain.getCodeSource)
-        .map(_.getLocation.toURI)
-        .filter(_.getScheme == "file")
-        .map(u => new java.io.File(u).getParent + "/*")
-    }.getOrElse("/opt/spark/jars/*")
+    val sparkJars = sys.env.get("GRAFT_SPARK_JARS")
+      .orElse(loadedSparkJars.map(_.getPath + "/*"))
+      .getOrElse(throw new IllegalStateException(
+        "spark-core was not loaded from a jar; set GRAFT_SPARK_JARS"))
     s"$root/classes:$root/test-classes:$sparkJars"
   }
+
+  /** The directory of the loaded spark-core jar: `$SPARK_HOME/jars`. */
+  def loadedSparkJars: Option[java.io.File] =
+    Option(classOf[org.apache.spark.SparkContext]
+        .getProtectionDomain.getCodeSource)
+      .map(_.getLocation.toURI)
+      .filter(_.getScheme == "file")
+      .map(u => new java.io.File(u).getParentFile)
 }
 
 class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
@@ -60,14 +64,14 @@ class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
     (proc, port, log)
   }
 
-  private def mkReader(dir: String): CacheManager = {
+  private def mkReader(dir: String, owner: String): CacheManager = {
     val c = new Configuration()
     c.setInt(CacheConfig.BlockSizeKey, 100)
     c.set(CacheConfig.CacheDirKey, dir)
     c.setBoolean(CacheConfig.StrictKey, false)
     c.setInt(CacheConfig.MaxReadRequestKey, 1000)
     val m = new CacheManager(CacheConfig.from(c))
-    m.ownership = Some(SplitOwnership("local-reader", (_, _) => Some("xproc-owner")))
+    m.ownership = Some(SplitOwnership("local-reader", (_, _) => Some(owner)))
     m
   }
 
@@ -75,11 +79,9 @@ class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
       "and owner death falls back to direct reads") {
     val f = TestFiles.write(tmp, "data/xproc.bin", content)
     val (proc, port, log) = startOwner(f, s"$tmp/ownerCache")
-    val reader = mkReader(s"$tmp/readerCache")
+    val owner = s"127.0.0.1:$port"
+    val reader = mkReader(s"$tmp/readerCache", owner)
     try {
-      PeerRegistry.register("xproc-owner",
-        new InetSocketAddress("127.0.0.1", port))
-
       // phase 1: every block NON_LOCAL -> served over the socket from the
       // child process's disk cache, byte-exact, zero source reads
       val s1 = openCaching(f, reader, mkConf(strict = false))
@@ -97,7 +99,7 @@ class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
       // to direct reads — same bytes, no exception, fallback counted
       proc.destroyForcibly()
       proc.waitFor()
-      val reader2 = mkReader(s"$tmp/readerCache2")
+      val reader2 = mkReader(s"$tmp/readerCache2", owner)
       try {
         val s2 = openCaching(f, reader2, mkConf(strict = false))
         assert(readAll(s2, 150, 500).sameElements(content.slice(150, 650)))
@@ -110,7 +112,6 @@ class TwoProcessPeerSpec extends AnyFunSuite with CacheFixture {
       } finally reader2.clear()
     } finally {
       if (proc.isAlive) { proc.destroyForcibly(); proc.waitFor() }
-      PeerRegistry.clear()
       reader.clear()
     }
   }

@@ -3,33 +3,7 @@ package graft.cache
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-class CacheCoordinatorSpec extends AnyFunSuite {
-  test("liveness expiry and metric aggregation") {
-    var now = 1000L
-    val coord = new CacheCoordinator(livenessExpiryMs = 100L, clock = () => now)
-    coord.heartbeat("e1", metrics = Map("bytes_from_cache" -> 10L))
-    coord.heartbeat("e2", metrics = Map("bytes_from_cache" -> 5L))
-    assert(coord.liveWorkers.map(_.host) == Seq("e1", "e2"))
-    assert(coord.clusterMetrics("bytes_from_cache") == 15L)
-    now += 150
-    coord.heartbeat("e2", metrics = Map("bytes_from_cache" -> 7L))
-    assert(coord.liveWorkers.map(_.host) == Seq("e2"), "e1 must expire")
-    assert(coord.clusterMetrics("bytes_from_cache") == 7L)
-  }
-
-  test("validation failures surface") {
-    val coord = new CacheCoordinator(livenessExpiryMs = 10000L)
-    coord.heartbeat("good")
-    coord.heartbeat("bad", cachingValidated = false)
-    assert(coord.invalidWorkers == Seq("bad"))
-  }
-}
-
 class CacheValidatorSpec extends AnyFunSuite with CacheFixture {
-  test("caching validator passes on a healthy config") {
-    assert(CacheValidator.validateCaching(mkConf()))
-  }
-
   test("file validator flags orphan mdfiles and bad sizes") {
     val content = TestFiles.alphabetContent(1, 100)
     val f = TestFiles.write(tmp, "v/a.bin", content)
